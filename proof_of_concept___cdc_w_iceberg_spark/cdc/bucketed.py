@@ -42,6 +42,7 @@ import shutil
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 from .apply import compact_latest, upsert_compacted
 
@@ -77,12 +78,26 @@ class BucketedMirror:
     def _schema_path(self) -> str:
         return os.path.join(self.path, "_schema.json")
 
-    def _empty(self) -> DataFrame:
-        from pyspark.sql import types as T
-
+    def _schema(self) -> T.StructType | None:
+        """The row schema from the ``init`` sidecar; None for a mirror
+        laid out without one (hand-built layouts)."""
+        if not os.path.exists(self._schema_path()):
+            return None
         with open(self._schema_path()) as f:
-            schema = T.StructType.fromJson(json.load(f))
-        return self.spark.createDataFrame([], schema)
+            return T.StructType.fromJson(json.load(f))
+
+    def _empty(self) -> DataFrame:
+        return self.spark.createDataFrame([], self._schema())
+
+    def _scan(self) -> DataFrame:
+        """Every data file, partition columns included. The schema comes
+        from the sidecar, so building the scan runs no footer-reading
+        job; only a mirror without a sidecar falls back to inference."""
+        schema = self._schema()
+        reader = self.spark.read
+        if schema is not None:
+            reader = reader.schema(schema.add(BUCKET_COL, T.IntegerType()))
+        return reader.parquet(self.path)
 
     def _has_buckets(self) -> bool:
         return os.path.isdir(self.path) and any(
@@ -121,7 +136,7 @@ class BucketedMirror:
 
     def read(self) -> DataFrame:
         if self._has_buckets():
-            return self.spark.read.parquet(self.path).drop(BUCKET_COL)
+            return self._scan().drop(BUCKET_COL)
         return self._empty()
 
     def touched_buckets(self, changes: DataFrame) -> list[int]:
@@ -155,7 +170,8 @@ class BucketedMirror:
         Plan shape: compact (1 shuffle on keys) → partition-pruned scan
         of touched buckets only (filter on the partition column — no
         data files outside them are read) → anti-join + union →
-        dynamic partition overwrite of those buckets.
+        rebalance on the bucket column → staged write of those buckets,
+        swapped in by directory rename.
 
         ``prepared``: a handle from ``prepare`` whose compaction job
         already ran (r21, guide §2.6); ``changes`` is then ignored.
@@ -174,34 +190,29 @@ class BucketedMirror:
             if not touched:
                 return []
             if self._has_buckets():
-                mirror = self.spark.read.parquet(self.path)
-                # BUCKET_COL kept: the scan's rows are already
-                # bucket-aligned (partition dirs), so the staged write
-                # below needs no full-table re-clustering.
-                subset = mirror.filter(F.col(BUCKET_COL).isin(touched))
+                # BUCKET_COL kept: the merged relation is written
+                # partitioned by it.
+                subset = self._scan().filter(F.col(BUCKET_COL).isin(touched))
             else:
                 subset = self._with_bucket(self._empty())
-            # r20 (guide §2.4/§8): survivors never shuffle — the
-            # anti-join's batch side broadcasts, and each survivor row
-            # is written from the scan task that read it. Only the
-            # BATCH leg is routed by bucket (a batch-sized exchange).
-            # The old shape re-shuffled the ENTIRE merged relation by
-            # the 16-value bucket column — at 100 TB that moves every
-            # surviving byte once more and funnels each ~25 GB bucket
-            # through a single writer task; skipping it leaves
-            # scan-sized (~128 MB) files per bucket instead. The batch
-            # also arrives already compacted, so the second compaction
-            # window apply_changes used to re-plan is gone
-            # (upsert_compacted).
-            routed = self._with_bucket(latest).repartition(BUCKET_COL)
+            # The merged relation (survivors + upserts) goes through one
+            # AQE rebalance on the bucket column: at small sizes AQE
+            # coalesces it to a few tasks holding whole buckets, so each
+            # touched bucket is rewritten as ONE file (no small-file
+            # growth per commit); an oversized bucket is split across
+            # several writers instead of funnelling through one task.
+            # Writing survivors from their scan tasks instead leaves
+            # several files per bucket, and the scan packs the big ones
+            # into one split, so one task writes nearly the whole
+            # mirror. The planner picks the anti-join strategy from the
+            # cached batch's size.
             merged = upsert_compacted(subset, self._with_bucket(latest),
-                                      self.keys, op_col=op_col,
-                                      routed=routed)
+                                      self.keys, op_col=op_col)
             # Stage before overwriting partitions we are also reading
             # from — the parquet-table analogue of Iceberg's snapshot
             # commit.
             staged = f"{self.path}_{tag}_staged"
-            (merged.write.mode("overwrite")
+            (merged.hint("rebalance", BUCKET_COL).write.mode("overwrite")
              .partitionBy(BUCKET_COL).parquet(staged))
         finally:
             latest.unpersist()
@@ -419,9 +430,9 @@ class TwoLevelMirror(BucketedMirror):
             dates = sorted({d for d, _ in touched})
             buckets = sorted({b for _, b in touched})
             if self._has_buckets():
-                mirror = self.spark.read.parquet(self.path)
-                subset = (mirror.filter(F.col(self.date_col).isin(dates)
-                                        & F.col(BUCKET_COL).isin(buckets))
+                subset = (self._scan()
+                          .filter(F.col(self.date_col).isin(dates)
+                                  & F.col(BUCKET_COL).isin(buckets))
                           .drop(BUCKET_COL))
             else:
                 subset = self._empty()

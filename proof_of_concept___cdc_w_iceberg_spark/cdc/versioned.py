@@ -32,6 +32,7 @@ import re
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 from .apply import compact_latest, upsert_compacted
 from .bucketed import BUCKET_COL, bucket_expr
@@ -272,15 +273,18 @@ class SnapshotMirror:
         return out
 
     def _empty(self, schema_json: str) -> DataFrame:
-        from pyspark.sql import types as T
-
         return self.spark.createDataFrame(
             [], T.StructType.fromJson(json.loads(schema_json)))
 
     def _read_dirs(self, dirs: list[str], schema_json: str) -> DataFrame:
+        """Bucket data dirs as one relation. The manifest's schema is
+        passed to the reader, so building the scan runs no
+        footer-reading job."""
         if not dirs:
             return self._empty(schema_json)
-        return self.spark.read.parquet(*dirs)
+        return (self.spark.read
+                .schema(T.StructType.fromJson(json.loads(schema_json)))
+                .parquet(*dirs))
 
     # --- public API ---
 

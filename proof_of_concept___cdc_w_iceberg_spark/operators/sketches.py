@@ -958,9 +958,12 @@ def _kq_exact_ranks(spark, li, targets, n=None):
     pass when the caller doesn't already have it (``n=None`` — one
     corpus aggregate instead of two), and the per-target phase-2
     probes are INDEPENDENT bounded jobs, so they overlap from a small
-    thread pool instead of paying |targets| serial job latencies."""
+    thread pool instead of paying |targets| serial job latencies.
+    No targets: no probes (an empty pool would be invalid)."""
     import math as _math
 
+    if not targets:
+        return {}, (li.count() if n is None else n)
     buckets = 64
     if n is None:
         lo, hi, n = li.agg(F.min("v"), F.max("v"), F.count("*")).first()

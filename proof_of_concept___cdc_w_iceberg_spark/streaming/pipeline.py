@@ -23,9 +23,42 @@ import tempfile
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 from ..cdc.bucketed import BucketedMirror
-from ..cdc.envelope import ENVELOPE_SCHEMA, decode_envelope
+from ..cdc.envelope import ROW_SCHEMA, envelope_schema
+
+# The parsed envelope struct column ``parse_envelopes`` adds.
+ENV_COL = "__env"
+
+
+def parse_envelopes(batch_df: DataFrame,
+                    row: T.StructType = ROW_SCHEMA) -> DataFrame:
+    """Raw ``(key, value)`` stream rows plus the envelope parsed ONCE
+    into ``ENV_COL`` (PERMISSIVE ``from_json``: a malformed record
+    parses to a NULL ``op``)."""
+    return batch_df.withColumn(
+        ENV_COL, F.from_json(F.col("value"), envelope_schema(row)))
+
+
+def envelope_changes(parsed: DataFrame, keys: list[str],
+                     row: T.StructType = ROW_SCHEMA) -> DataFrame:
+    """Flat change rows from ``parse_envelopes`` output: the keys from
+    the after-image (the before-image for deletes), the other row
+    columns from the after-image, then ``op``, ``ts_ms`` and the source
+    LSN as ``off`` — the sink's DebeziumTransform flatten
+    (`connect-iceberg-sink.json:10-12`)."""
+    env = F.col(ENV_COL)
+    return parsed.select(
+        *[F.coalesce(env.getField("after").getField(k),
+                     env.getField("before").getField(k)).alias(k)
+          for k in keys],
+        *[env.getField("after").getField(f.name).alias(f.name)
+          for f in row.fields if f.name not in keys],
+        env.getField("op").alias("op"),
+        env.getField("ts_ms").alias("ts_ms"),
+        env.getField("source").getField("lsn").alias("off"),
+    )
 
 
 class StreamingCdcPipeline:
@@ -67,8 +100,8 @@ class StreamingCdcPipeline:
         self._mirror.init(snapshot)
 
     def _apply_batch(self, batch_df: DataFrame, batch_id: int) -> None:
-        """foreachBatch: DLQ-split → decode → dedup replays → compact →
-        partition-scoped merge (only touched buckets rewritten).
+        """foreachBatch: decode → DLQ-split → compact → partition-scoped
+        merge (only touched buckets rewritten).
 
         Malformed envelopes (mandatory ``op`` null after PERMISSIVE
         from_json) are written raw to the dead-letter table instead of
@@ -81,31 +114,24 @@ class StreamingCdcPipeline:
         (foreachBatch is at-least-once).
 
         Idempotent apply (`q_stream_dedup`): duplicate (key, offset)
-        deliveries collapse before compaction, mirroring the
-        reference's offset tracking (`connect-standalone.properties:13`).
+        deliveries are the same event, so the mirror's latest-wins
+        compaction (one row per key) collapses them with no separate
+        dedup shuffle, mirroring the reference's offset tracking
+        (`connect-standalone.properties:13`). An empty batch is a no-op
+        inside ``apply``, which returns no touched buckets for it.
         """
-        parse_op = F.from_json("value", ENVELOPE_SCHEMA).getField("op")
-        tagged = batch_df.withColumn("_op_probe", parse_op)
-        bad = tagged.filter(F.col("_op_probe").isNull()).drop("_op_probe")
+        parsed = parse_envelopes(batch_df)
+        is_bad = F.col(f"{ENV_COL}.op").isNull()
+        bad = parsed.filter(is_bad).select("key", "value")
         if not bad.isEmpty():
             (bad.withColumn("batch_id", F.lit(batch_id).cast("long"))
              .write.mode("overwrite")
              .option("partitionOverwriteMode", "dynamic")
              .partitionBy("batch_id")
              .parquet(self.dlq_path))
-        good = tagged.filter(F.col("_op_probe").isNotNull()).drop("_op_probe")
-        changes = decode_envelope(good).select(
-            F.coalesce(F.col("after.k"), F.col("before.k")).alias("k"),
-            F.col("after.name").alias("name"),
-            F.col("after.bal").alias("bal"),
-            "op",
-            "ts_ms",
-            "off",
-        ).dropDuplicates(["k", "off"])
-        if changes.isEmpty():
-            return
-        self._mirror.apply(changes, tag=f"b{batch_id}")
-        self.batches_applied += 1
+        changes = envelope_changes(parsed.filter(~is_bad), keys=["k"])
+        if self._mirror.apply(changes, tag=f"b{batch_id}"):
+            self.batches_applied += 1
 
     def start(self, trigger_once: bool = True):
         stream = (
@@ -172,16 +198,3 @@ def kafka_changelog_stream(spark: SparkSession, brokers: str,
         .load()
         .selectExpr("CAST(key AS STRING) AS key", "CAST(value AS STRING) AS value")
     )
-
-
-def run_changelog_through_stream(spark: SparkSession, enveloped_batches:
-                                 list[DataFrame], snapshot: DataFrame) -> DataFrame:
-    """Feed envelope batches through a real streaming query (availableNow)
-    and return the final mirror."""
-    pipe = StreamingCdcPipeline(spark)
-    pipe.init_mirror(snapshot)
-    for i, b in enumerate(enveloped_batches):
-        pipe.feed(b, f"batch_{i:03d}")
-    q = pipe.start(trigger_once=True)
-    q.awaitTermination(timeout=300)
-    return pipe.mirror()

@@ -23,7 +23,8 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from ..cdc.bucketed import BucketedMirror
-from ..cdc.envelope import ROW_SCHEMA, decode_envelope, envelope_schema
+from ..cdc.envelope import ROW_SCHEMA
+from .pipeline import envelope_changes, parse_envelopes
 
 
 class RoutedStreamingCdcPipeline:
@@ -90,28 +91,18 @@ class RoutedStreamingCdcPipeline:
                 if keys is None:
                     continue  # unrouted topic: reference would fail-fast
                 row = self.row_schema_by_target.get(target, ROW_SCHEMA)
-                data_cols = [f.name for f in row.fields if f.name not in keys]
-                decoded = decode_envelope(
-                    tagged.filter(F.col("__target") == target),
-                    schema=envelope_schema(row),
-                )
-                changes = (
-                    decoded.select(
-                        *[
-                            F.coalesce(F.col(f"after.{k}"), F.col(f"before.{k}"))
-                            .alias(k)
-                            for k in keys
-                        ],
-                        *[F.col(f"after.{c}").alias(c) for c in data_cols],
-                        "op", "ts_ms", "off",
-                    )
-                    .dropDuplicates([*keys, "off"])
-                )
+                # Replayed (key, offset) deliveries collapse in the
+                # mirror's latest-wins compaction (see
+                # StreamingCdcPipeline._apply_batch).
+                changes = envelope_changes(
+                    parse_envelopes(tagged.filter(F.col("__target") == target),
+                                    row),
+                    keys, row)
                 if target not in self.mirrors:
                     # auto-create: first batch's upserts become the table
                     m = BucketedMirror(self.spark, self.mirror_path(target),
                                        keys=keys, n_buckets=self.n_buckets)
-                    m.init(changes.select(*keys, *data_cols).limit(0))
+                    m.init(changes.drop("op", "ts_ms", "off").limit(0))
                     self.mirrors[target] = m
                 self.mirrors[target].apply(changes, tag=f"b{batch_id}")
         finally:

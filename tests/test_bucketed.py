@@ -290,3 +290,101 @@ def test_snapshot_mirror_delete_and_expire(spark, tmp_path):
     live_refs = {os.path.basename(os.path.dirname(d))
                  for d in m._load_manifest(1)["buckets"].values()}
     assert set(os.listdir(data_dir)) <= live_refs | set()
+
+
+def _jobs_in_group(spark, group, fn):
+    """Run ``fn`` under a fresh job group; return (result, jobs it ran)."""
+    sc = spark.sparkContext
+    sc.setJobGroup(group, group)
+    try:
+        out = fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    return out, len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def test_mirror_reads_build_without_spark_jobs(spark, tmp_path):
+    """Building a read runs no footer-reading (schema inference) job:
+    BucketedMirror takes its schema from the init sidecar,
+    SnapshotMirror from the manifest. Without a sidecar the bucketed
+    read still works, by inference."""
+    import uuid
+
+    from proof_of_concept___cdc_w_iceberg_spark.cdc.versioned import SnapshotMirror
+
+    snap = _snapshot(spark)
+    bm = BucketedMirror(spark, str(tmp_path / "b"), keys=["k"],
+                        n_buckets=N_BUCKETS)
+    bm.init(snap)
+    sm = SnapshotMirror(spark, str(tmp_path / "s"), keys=["k"],
+                        n_buckets=N_BUCKETS)
+    sm.init(snap)
+    sm.apply(_changes(spark, [(3, "x", 9.9, "u", 100, 1)]))
+    for name, build in (("bucketed", bm.read), ("snapshot", sm.read),
+                        ("travel", lambda: sm.read(0)),
+                        ("diff", lambda: sm.diff(0, 1))):
+        df, n_jobs = _jobs_in_group(spark, f"read-{name}-{uuid.uuid4().hex}",
+                                    build)
+        assert n_jobs == 0, f"{name} read ran {n_jobs} jobs while building"
+    def shape(df):
+        return [(f.name, f.dataType) for f in df.schema.fields]
+
+    assert shape(bm.read()) == shape(snap)
+    assert sorted(map(tuple, bm.read().collect())) == \
+        sorted(map(tuple, snap.collect()))
+    assert sm.diff(0, 1).count() == 1
+
+    os.remove(os.path.join(bm.path, "_schema.json"))
+    assert shape(bm.read()) == shape(snap)
+    assert bm.read().count() == 100
+
+
+def test_apply_writes_one_file_per_touched_bucket(spark, tmp_path):
+    """The merged relation is rebalanced on the bucket column, so at
+    small sizes each rewritten bucket is ONE file, even after a
+    fragmented ingest left several per bucket."""
+    m = BucketedMirror(spark, str(tmp_path / "mirror"), keys=["k"],
+                       n_buckets=N_BUCKETS)
+    snap = _snapshot(spark)
+    m.init(snap, writers=4)
+    assert any(len(fs) > 1 for fs in m.partition_files().values())
+    batch = _changes(spark, [(k, f"u{k}", 0.5, "u", 100, k)
+                             for k in range(0, 100, 3)])
+    touched = m.apply(batch)
+    assert touched == list(range(N_BUCKETS))
+    assert all(len(fs) == 1 for fs in m.partition_files().values())
+    expected = apply_changes(snap, batch, keys=["k"])
+    assert mirror_diff(m.read(), expected).count() == 0
+
+
+def test_apply_splits_oversized_bucket_across_writers(spark, tmp_path):
+    """Scale path of the rebalanced write: with AQE's advisory
+    partition size far below one bucket, the bucket is split across
+    several writer tasks (more than one file) instead of funnelling
+    through one, and the mirror still equals a latest-wins rebuild."""
+    m = BucketedMirror(spark, str(tmp_path / "mirror"), keys=["k"],
+                       n_buckets=2)
+    snap = spark.range(20_000).select(
+        F.col("id").alias("k"),
+        F.concat(F.lit("name_"), F.col("id")).alias("name"),
+        (F.col("id") * 1.5).alias("bal"),
+    )
+    m.init(snap, writers=8)
+    batch = _changes(spark, [(k, "upd", 1.0, "u", 100, k)
+                             for k in range(0, 20_000, 97)]
+                     + [(k, None, None, "d", 200, k)
+                        for k in range(1, 20_000, 101)])
+    conf = {"spark.sql.adaptive.advisoryPartitionSizeInBytes": "16k",
+            "spark.sql.files.maxPartitionBytes": "16k"}
+    saved = {k: spark.conf.get(k) for k in conf}
+    try:
+        for k, v in conf.items():
+            spark.conf.set(k, v)
+        m.apply(batch)
+    finally:
+        for k, v in saved.items():
+            spark.conf.set(k, v)
+    assert max(len(fs) for fs in m.partition_files().values()) > 1
+    expected = apply_changes(snap, batch, keys=["k"])
+    assert mirror_diff(m.read(), expected).count() == 0

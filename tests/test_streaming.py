@@ -682,3 +682,51 @@ def test_sessionizer_overdue_timeout_closes_inline():
     rows = list(session_state_fn((7,), iter([late]), at_boundary))
     assert rows == [] and not at_boundary.removed
     assert at_boundary.armed == t0 // 1_000 + gap // 1_000
+
+
+def test_apply_batch_job_budget_and_replay_collapse(spark, tmp_path):
+    """One micro-batch commit runs at most 8 Spark jobs: the DLQ probe,
+    the compaction with its touched-bucket collect, and the rebalanced
+    write — no separate dedup shuffle or emptiness probe. Duplicate
+    (key, offset) deliveries inside the batch collapse in the
+    latest-wins compaction, and an empty batch is not counted as
+    applied."""
+    import uuid
+
+    snap = spark.range(200).select(
+        F.col("id").alias("k"),
+        F.concat(F.lit("n"), F.col("id")).alias("name"),
+        (F.col("id") * 1.0).alias("bal"),
+    )
+    pipe = StreamingCdcPipeline(spark, workdir=str(tmp_path / "pipe"))
+    pipe.init_mirror(snap)
+    events = spark.createDataFrame(
+        [(k, f"u{k}", 2.0, "u", 2000, k) for k in range(0, 200, 7)]
+        + [(k, None, None, "d", 2100, 1000 + k) for k in range(3, 200, 11)],
+        "k long, name string, bal double, op string, ts_ms long, off long")
+    batch = encode_envelope(events)
+    batch = batch.unionByName(batch)  # every event delivered twice
+
+    sc = spark.sparkContext
+    group = f"apply-batch-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, group)
+    try:
+        pipe._apply_batch(batch, 0)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    n_jobs = len(sc.statusTracker().getJobIdsForGroup(group))
+    assert n_jobs <= 8, f"one commit ran {n_jobs} Spark jobs"
+    assert pipe.batches_applied == 1
+
+    expected = compact_latest(
+        snap.select("k", "name", "bal", F.lit("r").alias("op"),
+                    F.lit(1000).cast("long").alias("ts_ms"),
+                    F.col("k").alias("off")).unionByName(events),
+        ["k"],
+    ).filter(F.col("op") != "d").select("k", "name", "bal")
+    assert mirror_diff(pipe.mirror(), expected).count() == 0
+
+    pipe._apply_batch(batch.limit(0), 1)
+    assert pipe.batches_applied == 1
+    assert mirror_diff(pipe.mirror(), expected).count() == 0
