@@ -80,7 +80,8 @@ def apply_changes(target: DataFrame, changes: DataFrame, keys: list[str],
 
 def upsert_compacted(target: DataFrame, latest: DataFrame, keys: list[str],
                      op_col: str = "op",
-                     routed: DataFrame | None = None) -> DataFrame:
+                     routed: DataFrame | None = None,
+                     key_rows: DataFrame | None = None) -> DataFrame:
     """The merge half of ``apply_changes`` over an ALREADY-compacted
     (one row per key) batch. Mirror apply paths that persist the
     compacted batch up front (versioned/bucketed/specs) call this
@@ -102,8 +103,15 @@ def upsert_compacted(target: DataFrame, latest: DataFrame, keys: list[str],
     compacted batch up front (cdc/versioned.py ``_prepare_batch``), so
     the broadcast is of a bounded, already-materialized relation.
     Without ``routed`` (the generic ``apply_changes`` path, where no
-    caller has bounded the batch) the planner keeps the choice."""
-    touched = latest.select(*[F.col(k).alias(f"__t_{k}") for k in keys])
+    caller has bounded the batch) the planner keeps the choice.
+
+    ``key_rows``: a relation holding the batch's keys, repeats allowed
+    (e.g. the raw batch ``latest`` was compacted from, which has the
+    same key set). The anti-join reads its keys instead of ``latest``'s,
+    so an un-persisted compaction's window shuffle is planned once, for
+    the upserts, not a second time for the anti-join."""
+    touched = (latest if key_rows is None else key_rows).select(
+        *[F.col(k).alias(f"__t_{k}") for k in keys])
     if routed is not None:
         touched = F.broadcast(touched)
     # Null-safe anti join (still a hash equi-join): a plain-equality

@@ -10,19 +10,28 @@ data moves.
 This module restores that property without Iceberg: the mirror is laid
 out as a parquet table partitioned by a key-hash bucket column, and a
 change batch rewrites ONLY the bucket partitions its keys land in,
-via Spark's dynamic partition overwrite. Cost per batch becomes
-O(touched buckets × bucket size), not O(|mirror|):
+by swapping in freshly written bucket directories. Cost per batch
+becomes O(touched buckets × bucket size), not O(|mirror|):
 
-- 100 TB mirror, 4096 buckets → ~25 GB/bucket; a batch touching
-  1 000 distinct keys rewrites ≤1 000 buckets, and in the common
-  skewed-update case far fewer.
+- Bucket count (``n_buckets=None``): sized at ``init`` to one scan
+  split of data per bucket, ``ceil(estimated snapshot bytes /
+  spark.sql.files.maxPartitionBytes)``, and recorded in the mirror's
+  sidecar. A bucket smaller than a split buys no read parallelism but
+  still costs one file (and its fixed write cost) per commit that
+  touches it; a bucket larger than a split makes every touched-bucket
+  rewrite move more bytes. So the write amplification of a commit is
+  bounded by one split per touched bucket: a 1 MB mirror is one
+  bucket and each commit rewrites it whole, while a 1 TB mirror is
+  8 192 buckets of 128 MB and a batch touching 100 keys rewrites at
+  most 100 of them. The count is fixed at ``init``; a mirror that
+  outgrows it keeps its buckets and they grow.
 - The bucket column is ``pmod(hash(keys), n)`` — deterministic, so
   change rows co-locate with the mirror rows they replace, and the
   per-bucket merge join never sees foreign keys.
 - Buckets whose merged result is empty (every row deleted) are
-  cleared explicitly — dynamic partition overwrite only replaces
-  partitions present in the written data, which would otherwise
-  resurrect deleted rows.
+  cleared explicitly — a bucket with no surviving rows writes no
+  staged directory, which would otherwise leave its old files in
+  place and resurrect deleted rows.
 
 At even larger scale the same layout extends to date × bucket
 (``TwoLevelMirror``): the outer date level gives retention drops,
@@ -47,11 +56,34 @@ from pyspark.sql import types as T
 from .apply import compact_latest, upsert_compacted
 
 BUCKET_COL = "__bucket"
+# Bucket count for a snapshot whose size the planner cannot estimate
+# (e.g. a DataFrame built from a Python list, whose plan is an RDD scan).
+UNSIZED_BUCKETS = 16
 
 
 def bucket_expr(keys: list[str], n_buckets: int):
     """Deterministic key→bucket assignment: pmod(hash, n) ∈ [0, n)."""
     return F.pmod(F.hash(*[F.col(k) for k in keys]), F.lit(n_buckets))
+
+
+def sized_bucket_count(df: DataFrame) -> int:
+    """One bucket per scan split of ``df``'s estimated size:
+    ``max(1, ceil(bytes / spark.sql.files.maxPartitionBytes))``.
+
+    The estimate is the optimized plan's size statistic, so sizing runs
+    no Spark job. It is capped by the sum of the plan's leaf sizes,
+    because a join's estimate is the product of its inputs' sizes. A
+    plan whose size is unknown (Spark reports spark.sql.defaultSizeInBytes)
+    gets ``UNSIZED_BUCKETS``."""
+    conf = df.sparkSession._jsparkSession.sessionState().conf()
+    plan = df._jdf.queryExecution().optimizedPlan()
+    leaves = plan.collectLeaves()
+    leaf_bytes = sum(int(leaves.apply(i).stats().sizeInBytes())
+                     for i in range(leaves.size()))
+    est = min(int(plan.stats().sizeInBytes()), leaf_bytes)
+    if est >= conf.defaultSizeInBytes():
+        return UNSIZED_BUCKETS
+    return max(1, -(-est // conf.filesMaxPartitionBytes()))
 
 
 class BucketedMirror:
@@ -61,16 +93,45 @@ class BucketedMirror:
     ``init(snapshot)`` lays the table out; ``apply(changes)`` merges a
     change batch rewriting only touched bucket partitions;
     ``read()`` returns the logical table (bucket column dropped).
+
+    ``n_buckets=None`` sizes the bucket count to the snapshot at
+    ``init`` (``sized_bucket_count``). Either way ``init`` records the
+    count in the ``_schema.json`` sidecar, and every later apply uses
+    the recorded count; an explicit ``n_buckets`` that disagrees with it
+    raises ``ValueError`` instead of hashing keys into the wrong
+    buckets.
     """
 
     def __init__(self, spark: SparkSession, path: str, keys: list[str],
-                 n_buckets: int = 16,
+                 n_buckets: int | None = None,
                  order_cols: list[str] = ("ts_ms", "off")):
+        if n_buckets is not None and n_buckets < 1:
+            raise ValueError(f"n_buckets must be >= 1, got {n_buckets!r}")
         self.spark = spark
         self.path = path
         self.keys = list(keys)
-        self.n_buckets = n_buckets
+        self._n_buckets = n_buckets
         self.order_cols = list(order_cols)
+
+    @property
+    def n_buckets(self) -> int:
+        """The bucket count keys hash into: the one recorded at
+        ``init``, else the explicit constructor value."""
+        recorded = (self._sidecar() or {}).get("n_buckets")
+        if recorded is None:
+            if self._n_buckets is None:
+                raise ValueError(
+                    f"{self.path}: no recorded bucket count; init() the "
+                    f"mirror or pass n_buckets")
+            return self._n_buckets
+        if self._n_buckets is not None and self._n_buckets != recorded:
+            raise ValueError(
+                f"{self.path} is laid out in {recorded} buckets, "
+                f"not n_buckets={self._n_buckets}")
+        return recorded
+
+    def _partition_cols(self) -> list[str]:
+        return [BUCKET_COL]
 
     def _with_bucket(self, df: DataFrame) -> DataFrame:
         return df.withColumn(BUCKET_COL, bucket_expr(self.keys, self.n_buckets))
@@ -78,13 +139,20 @@ class BucketedMirror:
     def _schema_path(self) -> str:
         return os.path.join(self.path, "_schema.json")
 
-    def _schema(self) -> T.StructType | None:
-        """The row schema from the ``init`` sidecar; None for a mirror
-        laid out without one (hand-built layouts)."""
+    def _sidecar(self) -> dict | None:
+        """``{"schema": ..., "n_buckets": ...}`` from ``init``; None for
+        a mirror laid out without one (hand-built layouts). A sidecar
+        holding only a schema records no bucket count."""
         if not os.path.exists(self._schema_path()):
             return None
         with open(self._schema_path()) as f:
-            return T.StructType.fromJson(json.load(f))
+            meta = json.load(f)
+        return meta if "schema" in meta else {"schema": meta}
+
+    def _schema(self) -> T.StructType | None:
+        """The row schema from the sidecar; None without one."""
+        meta = self._sidecar()
+        return T.StructType.fromJson(meta["schema"]) if meta else None
 
     def _empty(self) -> DataFrame:
         return self.spark.createDataFrame([], self._schema())
@@ -104,35 +172,45 @@ class BucketedMirror:
             n.startswith(f"{BUCKET_COL}=") for n in os.listdir(self.path))
 
     def init(self, snapshot: DataFrame, writers: int | None = None) -> None:
-        """Lay the table out. ``writers=None`` (default) shuffles by the
-        bucket column first — one writer set per partition dir, one file
-        per bucket. ``writers=N`` skips that clustering shuffle and
-        writes with N tasks each holding rows of many buckets — the
-        cheap-ingest layout a large snapshot load actually produces
-        (hundreds of upstream tasks, ~N files PER bucket dir), the
-        fragmentation that ``compact()`` exists to repair.
+        """Lay the table out in the explicit ``n_buckets``, or in
+        ``sized_bucket_count(snapshot)`` buckets, and record the count
+        and the row schema in the sidecar. Re-initialising a mirror
+        replaces its layout, count included.
 
-        r21 (guide §2.5): the writer split hashes a DETERMINISTIC key
-        expression instead of round-robin ``repartition(N)`` — the
-        keyless form pays a local sort of the whole input
-        (sortBeforeRepartition, needed so retried map tasks reproduce
-        their row→partition assignment), while xxhash64 of the merge
-        keys is retry-stable for free. Same file counts (each writer
-        holds rows of many buckets), same content; measured 1.2-1.4 s
-        → 0.8-0.9 s on the sf0.1 ingest write."""
+        ``writers=None`` (default) shuffles by the partition columns
+        first — one writer set per partition dir, one file per bucket.
+        ``writers=N`` skips that clustering shuffle and writes with N
+        tasks each holding rows of many buckets — the cheap-ingest
+        layout a large snapshot load actually produces (hundreds of
+        upstream tasks, ~N files PER bucket dir), the fragmentation
+        that ``compact()`` exists to repair.
+
+        The writer split hashes the merge keys (xxhash64) instead of a
+        round-robin ``repartition(N)``: the keyless form pays a local
+        sort of the whole input (sortBeforeRepartition, so that retried
+        map tasks reproduce their row→partition assignment), while a
+        key hash is retry-stable for free. Measured 1.2-1.4 s → 0.8-0.9 s
+        on the sf0.1 ingest write. The split assumes high-cardinality
+        keys: with few distinct or heavily skewed keys some writers get
+        most of the rows (at the extreme, fewer non-empty writers than
+        N), so the layout is less fragmented than N files per bucket."""
         if writers is not None and writers < 1:
             raise ValueError(f"writers must be >= 1, got {writers!r}")
-        part = (self._with_bucket(snapshot).repartition(
+        n = self._n_buckets or sized_bucket_count(snapshot)
+        cols = self._partition_cols()
+        bucketed = snapshot.withColumn(BUCKET_COL, bucket_expr(self.keys, n))
+        part = (bucketed.repartition(
                     writers, F.xxhash64(*[F.col(k) for k in self.keys]))
-                if writers is not None else
-                self._with_bucket(snapshot).repartition(BUCKET_COL))
-        (part.write.mode("overwrite").partitionBy(BUCKET_COL).parquet(self.path))
-        # Schema sidecar: a zero-row partitioned write leaves no data
-        # files to infer from, so an empty (or fully-deleted) mirror
-        # must still know its row shape. (An Iceberg/catalog table
-        # carries this in table metadata.)
+                if writers is not None else bucketed.repartition(*cols))
+        part.write.mode("overwrite").partitionBy(*cols).parquet(self.path)
+        # Written after the data (the overwrite clears the directory).
+        # A zero-row partitioned write leaves no data files to infer
+        # from, so an empty (or fully-deleted) mirror must still know
+        # its row shape. (An Iceberg/catalog table carries both in
+        # table metadata.)
         with open(self._schema_path(), "w") as f:
-            f.write(snapshot.schema.json())
+            json.dump({"schema": snapshot.schema.jsonValue(),
+                       "n_buckets": n}, f)
 
     def read(self) -> DataFrame:
         if self._has_buckets():
@@ -161,32 +239,53 @@ class BucketedMirror:
         latest.count()
         return latest
 
+    def _compaction(self, changes: DataFrame | None,
+                    prepared: DataFrame | None, touched) -> DataFrame:
+        """The latest-wins batch ``apply`` merges: the ``prepare``
+        handle, else the compaction of ``changes``, persisted unless
+        the caller passed ``touched`` (see ``apply``)."""
+        if prepared is not None:
+            return prepared
+        if changes is None:
+            raise ValueError("apply needs changes or prepared")
+        latest = compact_latest(changes, self.keys, self.order_cols)
+        return latest if touched is not None else latest.persist()
+
     def apply(self, changes: DataFrame | None = None, op_col: str = "op",
-              tag: str = "batch", prepared: DataFrame | None = None
-              ) -> list[int]:
+              tag: str = "batch", prepared: DataFrame | None = None,
+              touched: list[int] | None = None) -> list[int]:
         """Merge a change batch, rewriting only touched bucket
         partitions. Returns the list of buckets rewritten.
 
-        Plan shape: compact (1 shuffle on keys) → partition-pruned scan
-        of touched buckets only (filter on the partition column — no
-        data files outside them are read) → anti-join + union →
-        rebalance on the bucket column → staged write of those buckets,
-        swapped in by directory rename.
+        Plan shape: one collect of the batch's distinct buckets, then a
+        single write job chain: compact (1 shuffle on keys) →
+        partition-pruned scan of touched buckets only (filter on the
+        partition column — no data files outside them are read) →
+        anti-join + union → rebalance on the bucket column → staged
+        write of those buckets, swapped in by directory rename.
+
+        ``touched``: the batch's distinct buckets (``bucket_expr`` of
+        its keys with this mirror's ``n_buckets``) when the caller has
+        already collected them, as the streaming commit does in the
+        collect that also finds its dead letters. The compaction then
+        runs only inline in the write, planned from the batch's own
+        size estimate; the raw keys' buckets equal the compacted
+        batch's, since the latest-wins compaction keeps a row per key.
+        ``touched`` must cover every key of the batch: a bucket left
+        out is rewritten from the batch rows alone and loses its other
+        rows. Without it, apply persists the compaction and collects
+        the buckets over it; that run also gives the merge the batch's
+        exact size, so the anti-join plans as a broadcast even when the
+        batch's own plan has no size estimate (an RDD-backed frame).
 
         ``prepared``: a handle from ``prepare`` whose compaction job
-        already ran (r21, guide §2.6); ``changes`` is then ignored.
+        already ran; ``changes`` is then ignored. Apply unpersists every
+        persisted compaction, the handle included.
         """
-        # Computed ONCE and persisted (r20, guide §5): the compaction
-        # window/shuffle used to run twice — once under the
-        # touched-bucket collect, once inside apply_changes' plan.
-        if prepared is None:
-            if changes is None:
-                raise ValueError("apply needs changes or prepared")
-            prepared = compact_latest(
-                changes, self.keys, self.order_cols).persist()
-        latest = prepared
+        latest = self._compaction(changes, prepared, touched)
         try:
-            touched = self.touched_buckets(latest)
+            if touched is None:
+                touched = self.touched_buckets(latest)
             if not touched:
                 return []
             if self._has_buckets():
@@ -205,9 +304,10 @@ class BucketedMirror:
             # several files per bucket, and the scan packs the big ones
             # into one split, so one task writes nearly the whole
             # mirror. The planner picks the anti-join strategy from the
-            # cached batch's size.
-            merged = upsert_compacted(subset, self._with_bucket(latest),
-                                      self.keys, op_col=op_col)
+            # batch's size.
+            merged = upsert_compacted(
+                subset, self._with_bucket(latest), self.keys, op_col=op_col,
+                key_rows=None if latest.is_cached else changes)
             # Stage before overwriting partitions we are also reading
             # from — the parquet-table analogue of Iceberg's snapshot
             # commit.
@@ -215,7 +315,8 @@ class BucketedMirror:
             (merged.hint("rebalance", BUCKET_COL).write.mode("overwrite")
              .partitionBy(BUCKET_COL).parquet(staged))
         finally:
-            latest.unpersist()
+            if latest.is_cached:
+                latest.unpersist()
         # Publish = per-partition directory swap of the staged commit
         # (r20, guide §1.2/§6): the old path re-READ the staged table,
         # re-SHUFFLED it by bucket, and re-WROTE every staged byte
@@ -363,7 +464,7 @@ class TwoLevelMirror(BucketedMirror):
     """
 
     def __init__(self, spark: SparkSession, path: str, keys: list[str],
-                 date_col: str, n_buckets: int = 16,
+                 date_col: str, n_buckets: int | None = None,
                  order_cols: list[str] = ("ts_ms", "off")):
         super().__init__(spark, path, keys, n_buckets, order_cols)
         self.date_col = date_col
@@ -378,23 +479,8 @@ class TwoLevelMirror(BucketedMirror):
                     return True
         return False
 
-    def init(self, snapshot: DataFrame, writers: int | None = None) -> None:
-        """Two-level layout; ``writers`` has the same cheap-ingest
-        fragmentation semantics as BucketedMirror.init (LSP — review
-        finding: the override must accept the base signature; r21:
-        same deterministic hash split instead of round-robin — see
-        the base docstring)."""
-        if writers is not None and writers < 1:
-            raise ValueError(f"writers must be >= 1, got {writers!r}")
-        part = (self._with_bucket(snapshot).repartition(
-                    writers, F.xxhash64(*[F.col(k) for k in self.keys]))
-                if writers is not None else
-                self._with_bucket(snapshot)
-                .repartition(self.date_col, BUCKET_COL))
-        (part.write.mode("overwrite")
-         .partitionBy(self.date_col, BUCKET_COL).parquet(self.path))
-        with open(self._schema_path(), "w") as f:
-            f.write(snapshot.schema.json())
+    def _partition_cols(self) -> list[str]:
+        return [self.date_col, BUCKET_COL]
 
     def touched_partitions(self, changes: DataFrame) -> list[tuple]:
         """Distinct (date, bucket) pairs of the batch — bounded by
@@ -406,25 +492,20 @@ class TwoLevelMirror(BucketedMirror):
         return sorted((r[0], r[1]) for r in rows)
 
     def apply(self, changes: DataFrame | None = None, op_col: str = "op",
-              tag: str = "batch", prepared: DataFrame | None = None
-              ) -> list[tuple]:
+              tag: str = "batch", prepared: DataFrame | None = None,
+              touched: list[tuple] | None = None) -> list[tuple]:
         """Two-level partition-scoped merge: compact → scan only the
         (batch dates) × (touched buckets) partitions → anti-join +
         union → dynamic overwrite of exactly those partitions, with
         explicit clearing of emptied ones. Returns the touched pairs.
-        ``prepared`` as in BucketedMirror.apply (r21, guide §2.6)."""
-        # Same r20 shape as BucketedMirror.apply: compaction persisted
-        # (one execution instead of two) and the staged commit
-        # published by per-partition directory swap instead of a
-        # second read+shuffle+write job.
-        if prepared is None:
-            if changes is None:
-                raise ValueError("apply needs changes or prepared")
-            prepared = compact_latest(
-                changes, self.keys, self.order_cols).persist()
-        latest = prepared
+        ``prepared`` and ``touched`` as in BucketedMirror.apply, with
+        ``touched`` holding (date, bucket) pairs. A key's date is
+        immutable, so the raw batch's pairs equal the compacted
+        batch's."""
+        latest = self._compaction(changes, prepared, touched)
         try:
-            touched = self.touched_partitions(latest)
+            if touched is None:
+                touched = self.touched_partitions(latest)
             if not touched:
                 return []
             dates = sorted({d for d, _ in touched})
@@ -436,26 +517,26 @@ class TwoLevelMirror(BucketedMirror):
                           .drop(BUCKET_COL))
             else:
                 subset = self._empty()
-            # upsert_compacted (not apply_changes): the batch arrives
-            # compacted+persisted, so the merge plans ONE batch window
-            # (r20 wave 7). The staged write KEEPS the clustering
-            # exchange here, unlike BucketedMirror — measured (r20,
-            # interleaved A/B at sf0.1): the survivors-never-shuffle
-            # shape on the date x bucket GRID writes through ~3x more
-            # tasks with a per-task dynamic-partition sort and 2x the
-            # files, landing ~2x SLOWER warm (6.8-8.6 s vs 3.1-4.9 s);
-            # the 112-leaf grid gives the clustered write plenty of
-            # writer parallelism, so the single-writer-per-leaf concern
-            # that motivated the flat mirrors' shape does not bite.
-            merged = upsert_compacted(subset, latest, self.keys,
-                                      op_col=op_col)
+            # The staged write KEEPS the clustering exchange here,
+            # unlike BucketedMirror — measured (interleaved A/B at
+            # sf0.1): the survivors-never-shuffle shape on the
+            # date x bucket GRID writes through ~3x more tasks with a
+            # per-task dynamic-partition sort and 2x the files, landing
+            # ~2x SLOWER warm (6.8-8.6 s vs 3.1-4.9 s); the 112-leaf
+            # grid gives the clustered write plenty of writer
+            # parallelism, so the single-writer-per-leaf concern that
+            # motivated the flat mirrors' shape does not bite.
+            merged = upsert_compacted(
+                subset, latest, self.keys, op_col=op_col,
+                key_rows=None if latest.is_cached else changes)
             staged = f"{self.path}_{tag}_staged"
             (self._with_bucket(merged)
              .repartition(self.date_col, BUCKET_COL)
              .write.mode("overwrite")
              .partitionBy(self.date_col, BUCKET_COL).parquet(staged))
         finally:
-            latest.unpersist()
+            if latest.is_cached:
+                latest.unpersist()
         out_parts = set()
         for dname in os.listdir(staged):
             if not dname.startswith(f"{self.date_col}="):

@@ -92,11 +92,3 @@ def merge_into(spark: SparkSession, target_table: str, source: DataFrame,
         .saveAsTable(target_table)
     spark.sql(f"DROP TABLE IF EXISTS {target_table}__staged")
     merged.unpersist()
-
-
-def add_columns(spark: SparkSession, table: str, cols: dict[str, str]) -> None:
-    """Schema evolution DDL (`connect-iceberg-sink.json:16`): real
-    ALTER on Iceberg; with plain parquet tables Spark also supports
-    ADD COLUMNS (values surface as NULL on old files)."""
-    spec = ", ".join(f"{name} {dtype}" for name, dtype in cols.items())
-    spark.sql(f"ALTER TABLE {table} ADD COLUMNS ({spec})")

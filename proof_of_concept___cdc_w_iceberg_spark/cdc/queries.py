@@ -1859,11 +1859,6 @@ def q_cdc_wap_race(spark, sf_dir):
         f_init = pool.submit(m.init, li)
         f_prep_a = pool.submit(m.prepare, batch_a)
         f_prep_b = pool.submit(m.prepare, batch_b)
-        # The loser's cherry-pick re-applies the SAME batch B on the
-        # new head; its compacted form is a pure function of the
-        # batch, so the retry's handle is prepared upfront too instead
-        # of serially inside the cherry-pick (r21, guide §2.6).
-        f_prep_b2 = pool.submit(m.prepare, batch_b)
         f_init.result()
         m.branch_create("race_a")
         m.branch_create("race_b")
@@ -1891,7 +1886,10 @@ def q_cdc_wap_race(spark, sf_dir):
     m.drop_branch("race_b")
 
     m.branch_create("race_pick")  # cherry-pick: re-apply B on new head
-    m.apply_to_branch("race_pick", prepared=f_prep_b2.result())
+    # A second prepare() of batch B would alias the first handle's
+    # cache entry, which the race leg's apply already dropped, so the
+    # cherry-pick applies the batch itself.
+    m.apply_to_branch("race_pick", batch_b)
     audit = wap_audit(m.read_ref("race_pick").drop("__bucket"), keys,
                       batch_keys=batch_b)
     assert audit == {"null_keys": 0, "dup_keys": 0}, audit

@@ -25,11 +25,16 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from ..cdc.bucketed import BucketedMirror
+from ..cdc.bucketed import BucketedMirror, bucket_expr
 from ..cdc.envelope import ROW_SCHEMA, envelope_schema
 
 # The parsed envelope struct column ``parse_envelopes`` adds.
 ENV_COL = "__env"
+# Dead-letter rows: the raw stream record and the micro-batch it came in.
+DLQ_SCHEMA = "key LONG, value STRING, batch_id LONG"
+# Spark's size of a row of the LONG merge key: 8 bytes of row overhead
+# plus 8 for the value.
+KEY_ROW_BYTES = 16
 
 
 def parse_envelopes(batch_df: DataFrame,
@@ -67,13 +72,15 @@ class StreamingCdcPipeline:
 
     The mirror is a ``BucketedMirror`` (cdc/bucketed.py): each
     micro-batch rewrites only the key-hash bucket partitions it
-    touches (dynamic partition overwrite), not the whole table —
-    per-batch cost stays O(touched buckets), which is what makes a
-    10 s trigger viable against a 100 TB mirror without Iceberg.
+    touches, not the whole table — per-batch cost stays O(touched
+    buckets), which is what makes a 10 s trigger viable against a
+    100 TB mirror without Iceberg. ``n_buckets=None`` sizes the bucket
+    count to the snapshot at ``init_mirror`` (one scan split per
+    bucket), so a small mirror is one file per commit.
     """
 
     def __init__(self, spark: SparkSession, workdir: str | None = None,
-                 trigger_seconds: int = 10, n_buckets: int = 16):
+                 trigger_seconds: int = 10, n_buckets: int | None = None):
         self.spark = spark
         self.workdir = workdir or tempfile.mkdtemp(prefix="stream_cdc_")
         self.input_dir = os.path.join(self.workdir, "input")
@@ -117,20 +124,42 @@ class StreamingCdcPipeline:
         deliveries are the same event, so the mirror's latest-wins
         compaction (one row per key) collapses them with no separate
         dedup shuffle, mirroring the reference's offset tracking
-        (`connect-standalone.properties:13`). An empty batch is a no-op
-        inside ``apply``, which returns no touched buckets for it.
+        (`connect-standalone.properties:13`).
+
+        One collect over the parsed batch answers what the commit needs
+        before it writes: whether the batch holds dead letters, which
+        buckets its good keys land in, and how many good rows it has.
+        The mirror then plans its merge once, with the compaction
+        inline. With the row count known even when the batch's plan has
+        no size estimate (an RDD- or Kafka-backed batch), its keys are
+        broadcast to the merge's anti-join when they fit
+        ``spark.sql.autoBroadcastJoinThreshold``, so the touched buckets
+        are never shuffled by key. An empty batch touches no bucket and
+        is not counted as applied.
         """
         parsed = parse_envelopes(batch_df)
-        is_bad = F.col(f"{ENV_COL}.op").isNull()
-        bad = parsed.filter(is_bad).select("key", "value")
-        if not bad.isEmpty():
-            (bad.withColumn("batch_id", F.lit(batch_id).cast("long"))
+        flat = envelope_changes(parsed, keys=["k"])
+        is_bad = F.col("op").isNull()
+        marks = (flat.groupBy(is_bad.alias("bad"),
+                              F.when(~is_bad, bucket_expr(
+                                  ["k"], self._mirror.n_buckets)))
+                 .count().collect())
+        if any(bad for bad, _, _ in marks):
+            (parsed.filter(F.col(f"{ENV_COL}.op").isNull())
+             .select("key", "value")
+             .withColumn("batch_id", F.lit(batch_id).cast("long"))
              .write.mode("overwrite")
              .option("partitionOverwriteMode", "dynamic")
              .partitionBy("batch_id")
              .parquet(self.dlq_path))
-        changes = envelope_changes(parsed.filter(~is_bad), keys=["k"])
-        if self._mirror.apply(changes, tag=f"b{batch_id}"):
+        touched = sorted(b for bad, b, _ in marks if not bad)
+        good_rows = sum(n for bad, _, n in marks if not bad)
+        changes = flat.filter(~is_bad)
+        limit = self.spark._jsparkSession.sessionState().conf() \
+            .autoBroadcastJoinThreshold()
+        if 0 <= good_rows * KEY_ROW_BYTES <= limit:
+            changes = F.broadcast(changes)
+        if self._mirror.apply(changes, tag=f"b{batch_id}", touched=touched):
             self.batches_applied += 1
 
     def start(self, trigger_once: bool = True):
@@ -154,14 +183,11 @@ class StreamingCdcPipeline:
     def dead_letters(self) -> DataFrame:
         """Raw records that failed envelope decode (empty if none)."""
         if not os.path.isdir(self.dlq_path):
-            return self.spark.createDataFrame(
-                [], "key LONG, value STRING, batch_id LONG"
-            )
-        # Partition-column type inference yields INT for small ids —
-        # pin the declared LONG contract.
-        return self.spark.read.parquet(self.dlq_path).select(
-            "key", "value", F.col("batch_id").cast("long").alias("batch_id")
-        )
+            return self.spark.createDataFrame([], DLQ_SCHEMA)
+        # The declared schema types the batch_id partition column
+        # (inference would read INT for small ids) and spares the
+        # footer-reading inference job.
+        return self.spark.read.schema(DLQ_SCHEMA).parquet(self.dlq_path)
 
 
 def kafka_available(spark: SparkSession) -> bool:

@@ -7,9 +7,11 @@ the property that makes the no-Iceberg fallback viable per-trigger at
 
 from __future__ import annotations
 
+import json
 import os
 import tempfile
 
+import pytest
 from pyspark.sql import functions as F
 
 from proof_of_concept___cdc_w_iceberg_spark.cdc.apply import apply_changes, mirror_diff
@@ -17,6 +19,7 @@ from proof_of_concept___cdc_w_iceberg_spark.cdc.bucketed import (
     BUCKET_COL,
     BucketedMirror,
     bucket_expr,
+    sized_bucket_count,
 )
 
 N_BUCKETS = 8
@@ -388,3 +391,139 @@ def test_apply_splits_oversized_bucket_across_writers(spark, tmp_path):
     assert max(len(fs) for fs in m.partition_files().values()) > 1
     expected = apply_changes(snap, batch, keys=["k"])
     assert mirror_diff(m.read(), expected).count() == 0
+
+
+def _sidecar_buckets(m):
+    with open(os.path.join(m.path, "_schema.json")) as f:
+        return json.load(f)["n_buckets"]
+
+
+def test_small_snapshot_lays_out_as_one_bucket(spark, tmp_path):
+    """n_buckets=None sizes the mirror to one scan split per bucket: a
+    snapshot far below spark.sql.files.maxPartitionBytes is one bucket,
+    one file, and the count is recorded in the sidecar."""
+    m = BucketedMirror(spark, str(tmp_path / "mirror"), keys=["k"])
+    m.init(_snapshot(spark))
+    assert m.n_buckets == 1 == _sidecar_buckets(m)
+    assert {b: len(fs) for b, fs in m.partition_files().items()} == {0: 1}
+    batch = _changes(spark, [(3, "x", 9.9, "u", 100, 1),
+                             (7, None, None, "d", 100, 2)])
+    assert m.apply(batch) == [0]
+    expected = apply_changes(_snapshot(spark), batch, keys=["k"])
+    assert mirror_diff(m.read(), expected).count() == 0
+
+
+def _with_conf(spark, conf, fn):
+    saved = {k: spark.conf.get(k) for k in conf}
+    try:
+        for k, v in conf.items():
+            spark.conf.set(k, v)
+        return fn()
+    finally:
+        for k, v in saved.items():
+            spark.conf.set(k, v)
+
+
+def test_sized_bucket_count_follows_max_partition_bytes(spark, tmp_path):
+    """With a scan split far below the snapshot's size, the same
+    snapshot lays out as several buckets, with no Spark job spent on
+    sizing; later applies use the recorded count whatever the session
+    setting, and the mirror equals a latest-wins rebuild."""
+    import uuid
+
+    snap = spark.range(20_000).select(
+        F.col("id").alias("k"),
+        F.concat(F.lit("name_"), F.col("id")).alias("name"),
+        (F.col("id") * 1.5).alias("bal"),
+    )
+    split = {"spark.sql.files.maxPartitionBytes": "16k"}
+    n, n_jobs = _jobs_in_group(
+        spark, f"size-{uuid.uuid4().hex}",
+        lambda: _with_conf(spark, split, lambda: sized_bucket_count(snap)))
+    assert n_jobs == 0
+    assert n > 1
+    m = BucketedMirror(spark, str(tmp_path / "mirror"), keys=["k"])
+    _with_conf(spark, split, lambda: m.init(snap))
+    assert m.n_buckets == n == _sidecar_buckets(m)
+    assert len(m.partition_files()) == n
+    batch = _changes(spark, [(k, "upd", 1.0, "u", 100, k)
+                             for k in range(0, 20_000, 997)]
+                     + [(k, None, None, "d", 200, k)
+                        for k in range(1, 20_000, 1009)])
+    touched = m.apply(batch)
+    assert 1 < len(touched) <= n
+    expected = apply_changes(snap, batch, keys=["k"])
+    assert mirror_diff(m.read(), expected).count() == 0
+
+
+def test_reopened_mirror_adopts_recorded_bucket_count(spark, tmp_path):
+    """A mirror reopened without n_buckets hashes keys into the count
+    its init recorded."""
+    path = str(tmp_path / "mirror")
+    BucketedMirror(spark, path, keys=["k"], n_buckets=5).init(_snapshot(spark))
+    m = BucketedMirror(spark, path, keys=["k"])
+    assert m.n_buckets == 5
+    batch = _changes(spark, [(k, f"u{k}", 0.0, "u", 100, k)
+                             for k in range(0, 100, 9)])
+    m.apply(batch)
+    assert len(m.partition_files()) == 5
+    expected = apply_changes(_snapshot(spark), batch, keys=["k"])
+    assert mirror_diff(m.read(), expected).count() == 0
+
+
+def test_conflicting_bucket_count_is_refused(spark, tmp_path):
+    """Regression: reopening a 16-bucket mirror with n_buckets=8 hashed
+    the batch keys into the wrong buckets, so an update of all 200 keys
+    left 303 rows. The recorded count now refuses the conflict, for
+    both layouts, and the mirror is left as it was."""
+    from proof_of_concept___cdc_w_iceberg_spark.cdc.bucketed import TwoLevelMirror
+
+    snap = spark.range(200).select(
+        F.col("id").alias("k"),
+        F.concat(F.lit("name_"), F.col("id")).alias("name"),
+        (F.col("id") * 1.5).alias("bal"),
+        (F.lit(2024) + F.col("id") % 3).cast("int").alias("yr"),
+    )
+    batch = spark.createDataFrame(
+        [(k, "upd", 0.0, 2024 + k % 3, "u", 100, k) for k in range(200)],
+        "k long, name string, bal double, yr int, op string, ts_ms long, "
+        "off long")
+    for name, make in (
+            ("bucketed", lambda n: BucketedMirror(
+                spark, str(tmp_path / "b"), keys=["k"], n_buckets=n)),
+            ("two_level", lambda n: TwoLevelMirror(
+                spark, str(tmp_path / "t"), keys=["k"], date_col="yr",
+                n_buckets=n))):
+        make(16).init(snap)
+        reopened = make(8)
+        with pytest.raises(ValueError, match="16 buckets"):
+            reopened.apply(batch)
+        assert reopened.read().count() == 200, name
+        make(16).apply(batch)
+        got = make(16).read()
+        assert got.count() == 200, name
+        assert got.filter(F.col("name") != "upd").count() == 0, name
+
+
+def test_two_level_apply_with_collected_touched_pairs(spark, tmp_path):
+    """A caller that already collected the batch's (date, bucket) pairs
+    passes them; the compaction then runs inline in the write, and the
+    mirror equals a latest-wins rebuild."""
+    from proof_of_concept___cdc_w_iceberg_spark.cdc.bucketed import TwoLevelMirror
+
+    m = TwoLevelMirror(spark, str(tmp_path / "mirror"), keys=["k"],
+                       date_col="yr")
+    snap = _dated_snapshot(spark)
+    m.init(snap)
+    assert m.n_buckets == 1
+    batch = spark.createDataFrame(
+        [(6, "upd", 0.0, 2024, "u", 10, 1), (6, "upd2", 1.0, 2024, "u", 20, 2),
+         (7, None, None, 2025, "d", 10, 3)],
+        "k long, name string, bal double, yr int, op string, ts_ms long, off long",
+    )
+    pairs = m.touched_partitions(batch)
+    assert m.apply(batch, touched=pairs) == pairs
+    expected = apply_changes(snap, batch, keys=["k"])
+    got = m.read().withColumn("yr", F.col("yr").cast("int")).select(
+        "k", "name", "bal", "yr")
+    assert mirror_diff(got, expected.select("k", "name", "bal", "yr")).count() == 0

@@ -685,9 +685,10 @@ def test_sessionizer_overdue_timeout_closes_inline():
 
 
 def test_apply_batch_job_budget_and_replay_collapse(spark, tmp_path):
-    """One micro-batch commit runs at most 8 Spark jobs: the DLQ probe,
-    the compaction with its touched-bucket collect, and the rebalanced
-    write — no separate dedup shuffle or emptiness probe. Duplicate
+    """One micro-batch commit runs at most 7 Spark jobs: one collect
+    that finds the dead letters and the touched buckets, then the
+    rebalanced write with the compaction inline — no separate dedup
+    shuffle, emptiness probe or persisted compaction. Duplicate
     (key, offset) deliveries inside the batch collapse in the
     latest-wins compaction, and an empty batch is not counted as
     applied."""
@@ -716,7 +717,7 @@ def test_apply_batch_job_budget_and_replay_collapse(spark, tmp_path):
         sc.setLocalProperty("spark.jobGroup.id", None)
         sc.setLocalProperty("spark.job.description", None)
     n_jobs = len(sc.statusTracker().getJobIdsForGroup(group))
-    assert n_jobs <= 8, f"one commit ran {n_jobs} Spark jobs"
+    assert n_jobs <= 7, f"one commit ran {n_jobs} Spark jobs"
     assert pipe.batches_applied == 1
 
     expected = compact_latest(
@@ -730,3 +731,34 @@ def test_apply_batch_job_budget_and_replay_collapse(spark, tmp_path):
     pipe._apply_batch(batch.limit(0), 1)
     assert pipe.batches_applied == 1
     assert mirror_diff(pipe.mirror(), expected).count() == 0
+
+
+def test_dead_letters_build_without_spark_jobs(spark, tmp_path):
+    """The dead-letter table is read with its declared schema: building
+    the read runs no schema-inference job and batch_id is a LONG."""
+    import uuid
+
+    pipe = StreamingCdcPipeline(spark, workdir=str(tmp_path / "pipe"))
+    pipe.init_mirror(spark.range(10).select(
+        F.col("id").alias("k"), F.lit("n").alias("name"),
+        F.lit(1.0).alias("bal")))
+    events = spark.createDataFrame(
+        [(1, "u1", 2.0, "u", 2000, 1)],
+        "k long, name string, bal double, op string, ts_ms long, off long")
+    batch = encode_envelope(events).unionByName(
+        spark.createDataFrame([(99, "{not json")], "key long, value string"))
+    pipe._apply_batch(batch, 3)
+
+    sc = spark.sparkContext
+    group = f"dlq-read-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, group)
+    try:
+        dlq = pipe.dead_letters()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    assert sc.statusTracker().getJobIdsForGroup(group) == []
+    assert dlq.schema.simpleString() == \
+        "struct<key:bigint,value:string,batch_id:bigint>"
+    assert [tuple(r) for r in dlq.collect()] == [(99, "{not json", 3)]
+    assert pipe.batches_applied == 1
