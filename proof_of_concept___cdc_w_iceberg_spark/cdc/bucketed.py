@@ -73,17 +73,29 @@ def sized_bucket_count(df: DataFrame) -> int:
     The estimate is the optimized plan's size statistic, so sizing runs
     no Spark job. It is capped by the sum of the plan's leaf sizes,
     because a join's estimate is the product of its inputs' sizes. A
-    plan whose size is unknown (Spark reports spark.sql.defaultSizeInBytes)
-    gets ``UNSIZED_BUCKETS``."""
+    plan with a leaf of unknown size (Spark reports
+    spark.sql.defaultSizeInBytes for it, e.g. an RDD scan) gets
+    ``UNSIZED_BUCKETS``: the estimates above such a leaf are scaled
+    from that placeholder (a column-narrowing select halves it), not
+    from data."""
     conf = df.sparkSession._jsparkSession.sessionState().conf()
     plan = df._jdf.queryExecution().optimizedPlan()
     leaves = plan.collectLeaves()
-    leaf_bytes = sum(int(leaves.apply(i).stats().sizeInBytes())
-                     for i in range(leaves.size()))
-    est = min(int(plan.stats().sizeInBytes()), leaf_bytes)
-    if est >= conf.defaultSizeInBytes():
+    leaf_bytes = [int(leaves.apply(i).stats().sizeInBytes())
+                  for i in range(leaves.size())]
+    if max(leaf_bytes, default=0) >= conf.defaultSizeInBytes():
         return UNSIZED_BUCKETS
+    est = min(int(plan.stats().sizeInBytes()), sum(leaf_bytes))
     return max(1, -(-est // conf.filesMaxPartitionBytes()))
+
+
+def _fits_broadcast(df: DataFrame, rows: int) -> bool:
+    """Whether ``rows`` rows of ``df`` fit
+    spark.sql.autoBroadcastJoinThreshold, sized as the planner sizes a
+    row: 8 bytes of row overhead plus each column's default size."""
+    conf = df.sparkSession._jsparkSession.sessionState().conf()
+    row_bytes = 8 + df._jdf.schema().defaultSize()
+    return 0 <= rows * row_bytes <= conf.autoBroadcastJoinThreshold()
 
 
 class BucketedMirror:
@@ -220,10 +232,15 @@ class BucketedMirror:
     def touched_buckets(self, changes: DataFrame) -> list[int]:
         """Distinct buckets of the batch keys — ≤ n_buckets ints, a
         driver-safe collect regardless of batch size."""
-        rows = (changes.select(bucket_expr(self.keys, self.n_buckets)
-                               .alias(BUCKET_COL))
-                .distinct().collect())
-        return sorted(r[0] for r in rows)
+        return sorted(self._bucket_rows(changes))
+
+    def _bucket_rows(self, changes: DataFrame) -> dict[int, int]:
+        """Rows of the batch per bucket its keys land in — ≤ n_buckets
+        entries, one collect."""
+        rows = (changes.groupBy(bucket_expr(self.keys, self.n_buckets)
+                                .alias(BUCKET_COL))
+                .count().collect())
+        return {r[0]: r[1] for r in rows}
 
     def prepare(self, changes: DataFrame) -> DataFrame:
         """Materialize a batch's compacted latest-wins form AHEAD of
@@ -239,55 +256,46 @@ class BucketedMirror:
         latest.count()
         return latest
 
-    def _compaction(self, changes: DataFrame | None,
-                    prepared: DataFrame | None, touched) -> DataFrame:
-        """The latest-wins batch ``apply`` merges: the ``prepare``
-        handle, else the compaction of ``changes``, persisted unless
-        the caller passed ``touched`` (see ``apply``)."""
-        if prepared is not None:
-            return prepared
-        if changes is None:
-            raise ValueError("apply needs changes or prepared")
-        latest = compact_latest(changes, self.keys, self.order_cols)
-        return latest if touched is not None else latest.persist()
-
     def apply(self, changes: DataFrame | None = None, op_col: str = "op",
-              tag: str = "batch", prepared: DataFrame | None = None,
-              touched: list[int] | None = None) -> list[int]:
+              tag: str = "batch", prepared: DataFrame | None = None
+              ) -> list[int]:
         """Merge a change batch, rewriting only touched bucket
         partitions. Returns the list of buckets rewritten.
 
-        Plan shape: one collect of the batch's distinct buckets, then a
+        Plan shape: one collect of the batch's rows per bucket, then a
         single write job chain: compact (1 shuffle on keys) →
         partition-pruned scan of touched buckets only (filter on the
         partition column — no data files outside them are read) →
         anti-join + union → rebalance on the bucket column → staged
         write of those buckets, swapped in by directory rename.
 
-        ``touched``: the batch's distinct buckets (``bucket_expr`` of
-        its keys with this mirror's ``n_buckets``) when the caller has
-        already collected them, as the streaming commit does in the
-        collect that also finds its dead letters. The compaction then
-        runs only inline in the write, planned from the batch's own
-        size estimate; the raw keys' buckets equal the compacted
-        batch's, since the latest-wins compaction keeps a row per key.
-        ``touched`` must cover every key of the batch: a bucket left
-        out is rewritten from the batch rows alone and loses its other
-        rows. Without it, apply persists the compaction and collects
-        the buckets over it; that run also gives the merge the batch's
-        exact size, so the anti-join plans as a broadcast even when the
-        batch's own plan has no size estimate (an RDD-backed frame).
+        The collect reads the raw batch, not its compaction: the
+        latest-wins compaction keeps a row per key, so both land in
+        the same buckets, and the compaction is then planned once,
+        inline in the write, instead of being persisted for the
+        collect. The anti-join reads its keys from the raw batch too.
+        The collected row count sizes that key side: when it fits
+        spark.sql.autoBroadcastJoinThreshold it is broadcast, so a
+        batch whose plan carries no size estimate (an RDD-backed frame)
+        still never shuffles the touched buckets by key.
 
         ``prepared``: a handle from ``prepare`` whose compaction job
-        already ran; ``changes`` is then ignored. Apply unpersists every
-        persisted compaction, the handle included.
+        already ran; ``changes`` is then ignored, the collect reads the
+        handle, and apply unpersists it.
         """
-        latest = self._compaction(changes, prepared, touched)
+        if prepared is None and changes is None:
+            raise ValueError("apply needs changes or prepared")
+        batch = changes if prepared is None else prepared
         try:
-            if touched is None:
-                touched = self.touched_buckets(latest)
+            rows = self._bucket_rows(batch)
+            touched = sorted(rows)
             if not touched:
                 return []
+            latest = (prepared if prepared is not None else
+                      compact_latest(changes, self.keys, self.order_cols))
+            key_rows = batch.select(*self.keys)
+            if _fits_broadcast(key_rows, sum(rows.values())):
+                key_rows = F.broadcast(key_rows)
             if self._has_buckets():
                 # BUCKET_COL kept: the merged relation is written
                 # partitioned by it.
@@ -303,11 +311,10 @@ class BucketedMirror:
             # Writing survivors from their scan tasks instead leaves
             # several files per bucket, and the scan packs the big ones
             # into one split, so one task writes nearly the whole
-            # mirror. The planner picks the anti-join strategy from the
-            # batch's size.
+            # mirror.
             merged = upsert_compacted(
                 subset, self._with_bucket(latest), self.keys, op_col=op_col,
-                key_rows=None if latest.is_cached else changes)
+                key_rows=key_rows)
             # Stage before overwriting partitions we are also reading
             # from — the parquet-table analogue of Iceberg's snapshot
             # commit.
@@ -315,8 +322,8 @@ class BucketedMirror:
             (merged.hint("rebalance", BUCKET_COL).write.mode("overwrite")
              .partitionBy(BUCKET_COL).parquet(staged))
         finally:
-            if latest.is_cached:
-                latest.unpersist()
+            if prepared is not None:
+                prepared.unpersist()
         # Publish = per-partition directory swap of the staged commit
         # (r20, guide §1.2/§6): the old path re-READ the staged table,
         # re-SHUFFLED it by bucket, and re-WROTE every staged byte
@@ -492,20 +499,25 @@ class TwoLevelMirror(BucketedMirror):
         return sorted((r[0], r[1]) for r in rows)
 
     def apply(self, changes: DataFrame | None = None, op_col: str = "op",
-              tag: str = "batch", prepared: DataFrame | None = None,
-              touched: list[tuple] | None = None) -> list[tuple]:
+              tag: str = "batch", prepared: DataFrame | None = None
+              ) -> list[tuple]:
         """Two-level partition-scoped merge: compact → scan only the
         (batch dates) × (touched buckets) partitions → anti-join +
         union → dynamic overwrite of exactly those partitions, with
         explicit clearing of emptied ones. Returns the touched pairs.
-        ``prepared`` and ``touched`` as in BucketedMirror.apply, with
-        ``touched`` holding (date, bucket) pairs. A key's date is
-        immutable, so the raw batch's pairs equal the compacted
-        batch's."""
-        latest = self._compaction(changes, prepared, touched)
+        ``prepared`` as in BucketedMirror.apply (r21, guide §2.6)."""
+        # The compaction is persisted (one execution for the pair
+        # collect and the merge) and the staged commit published by
+        # per-partition directory swap instead of a second
+        # read+shuffle+write job.
+        if prepared is None:
+            if changes is None:
+                raise ValueError("apply needs changes or prepared")
+            prepared = compact_latest(
+                changes, self.keys, self.order_cols).persist()
+        latest = prepared
         try:
-            if touched is None:
-                touched = self.touched_partitions(latest)
+            touched = self.touched_partitions(latest)
             if not touched:
                 return []
             dates = sorted({d for d, _ in touched})
@@ -517,26 +529,26 @@ class TwoLevelMirror(BucketedMirror):
                           .drop(BUCKET_COL))
             else:
                 subset = self._empty()
-            # The staged write KEEPS the clustering exchange here,
-            # unlike BucketedMirror — measured (interleaved A/B at
-            # sf0.1): the survivors-never-shuffle shape on the
-            # date x bucket GRID writes through ~3x more tasks with a
-            # per-task dynamic-partition sort and 2x the files, landing
-            # ~2x SLOWER warm (6.8-8.6 s vs 3.1-4.9 s); the 112-leaf
-            # grid gives the clustered write plenty of writer
-            # parallelism, so the single-writer-per-leaf concern that
-            # motivated the flat mirrors' shape does not bite.
-            merged = upsert_compacted(
-                subset, latest, self.keys, op_col=op_col,
-                key_rows=None if latest.is_cached else changes)
+            # upsert_compacted (not apply_changes): the batch arrives
+            # compacted+persisted, so the merge plans ONE batch window
+            # (r20 wave 7). The staged write KEEPS the clustering
+            # exchange here, unlike BucketedMirror — measured (r20,
+            # interleaved A/B at sf0.1): the survivors-never-shuffle
+            # shape on the date x bucket GRID writes through ~3x more
+            # tasks with a per-task dynamic-partition sort and 2x the
+            # files, landing ~2x SLOWER warm (6.8-8.6 s vs 3.1-4.9 s);
+            # the 112-leaf grid gives the clustered write plenty of
+            # writer parallelism, so the single-writer-per-leaf concern
+            # that motivated the flat mirrors' shape does not bite.
+            merged = upsert_compacted(subset, latest, self.keys,
+                                      op_col=op_col)
             staged = f"{self.path}_{tag}_staged"
             (self._with_bucket(merged)
              .repartition(self.date_col, BUCKET_COL)
              .write.mode("overwrite")
              .partitionBy(self.date_col, BUCKET_COL).parquet(staged))
         finally:
-            if latest.is_cached:
-                latest.unpersist()
+            latest.unpersist()
         out_parts = set()
         for dname in os.listdir(staged):
             if not dname.startswith(f"{self.date_col}="):

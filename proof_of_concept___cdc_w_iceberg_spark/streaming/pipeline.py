@@ -25,16 +25,13 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from ..cdc.bucketed import BucketedMirror, bucket_expr
+from ..cdc.bucketed import BucketedMirror
 from ..cdc.envelope import ROW_SCHEMA, envelope_schema
 
 # The parsed envelope struct column ``parse_envelopes`` adds.
 ENV_COL = "__env"
 # Dead-letter rows: the raw stream record and the micro-batch it came in.
 DLQ_SCHEMA = "key LONG, value STRING, batch_id LONG"
-# Spark's size of a row of the LONG merge key: 8 bytes of row overhead
-# plus 8 for the value.
-KEY_ROW_BYTES = 16
 
 
 def parse_envelopes(batch_df: DataFrame,
@@ -124,42 +121,20 @@ class StreamingCdcPipeline:
         deliveries are the same event, so the mirror's latest-wins
         compaction (one row per key) collapses them with no separate
         dedup shuffle, mirroring the reference's offset tracking
-        (`connect-standalone.properties:13`).
-
-        One collect over the parsed batch answers what the commit needs
-        before it writes: whether the batch holds dead letters, which
-        buckets its good keys land in, and how many good rows it has.
-        The mirror then plans its merge once, with the compaction
-        inline. With the row count known even when the batch's plan has
-        no size estimate (an RDD- or Kafka-backed batch), its keys are
-        broadcast to the merge's anti-join when they fit
-        ``spark.sql.autoBroadcastJoinThreshold``, so the touched buckets
-        are never shuffled by key. An empty batch touches no bucket and
-        is not counted as applied.
+        (`connect-standalone.properties:13`). An empty batch is a no-op
+        inside ``apply``, which returns no touched buckets for it.
         """
         parsed = parse_envelopes(batch_df)
-        flat = envelope_changes(parsed, keys=["k"])
-        is_bad = F.col("op").isNull()
-        marks = (flat.groupBy(is_bad.alias("bad"),
-                              F.when(~is_bad, bucket_expr(
-                                  ["k"], self._mirror.n_buckets)))
-                 .count().collect())
-        if any(bad for bad, _, _ in marks):
-            (parsed.filter(F.col(f"{ENV_COL}.op").isNull())
-             .select("key", "value")
-             .withColumn("batch_id", F.lit(batch_id).cast("long"))
+        is_bad = F.col(f"{ENV_COL}.op").isNull()
+        bad = parsed.filter(is_bad).select("key", "value")
+        if not bad.isEmpty():
+            (bad.withColumn("batch_id", F.lit(batch_id).cast("long"))
              .write.mode("overwrite")
              .option("partitionOverwriteMode", "dynamic")
              .partitionBy("batch_id")
              .parquet(self.dlq_path))
-        touched = sorted(b for bad, b, _ in marks if not bad)
-        good_rows = sum(n for bad, _, n in marks if not bad)
-        changes = flat.filter(~is_bad)
-        limit = self.spark._jsparkSession.sessionState().conf() \
-            .autoBroadcastJoinThreshold()
-        if 0 <= good_rows * KEY_ROW_BYTES <= limit:
-            changes = F.broadcast(changes)
-        if self._mirror.apply(changes, tag=f"b{batch_id}", touched=touched):
+        changes = envelope_changes(parsed.filter(~is_bad), keys=["k"])
+        if self._mirror.apply(changes, tag=f"b{batch_id}"):
             self.batches_applied += 1
 
     def start(self, trigger_once: bool = True):

@@ -456,6 +456,22 @@ def test_sized_bucket_count_follows_max_partition_bytes(spark, tmp_path):
     assert mirror_diff(m.read(), expected).count() == 0
 
 
+def test_unsized_snapshot_keeps_fixed_bucket_count(spark):
+    """A snapshot built from a Python list has no size estimate: its
+    RDD scan reports spark.sql.defaultSizeInBytes. A column-narrowing
+    select scales that placeholder down by row width, but the count
+    stays UNSIZED_BUCKETS instead of one bucket per placeholder split."""
+    from proof_of_concept___cdc_w_iceberg_spark.cdc.bucketed import UNSIZED_BUCKETS
+
+    rows = spark.createDataFrame(
+        [(k, f"name_{k}", k * 1.5, f"note_{k}") for k in range(100)],
+        "k long, name string, bal double, note string")
+    assert sized_bucket_count(rows) == UNSIZED_BUCKETS
+    assert sized_bucket_count(rows.select("k", "name")) == UNSIZED_BUCKETS
+    assert sized_bucket_count(
+        rows.select("k").join(_snapshot(spark), "k")) == UNSIZED_BUCKETS
+
+
 def test_reopened_mirror_adopts_recorded_bucket_count(spark, tmp_path):
     """A mirror reopened without n_buckets hashes keys into the count
     its init recorded."""
@@ -503,27 +519,3 @@ def test_conflicting_bucket_count_is_refused(spark, tmp_path):
         got = make(16).read()
         assert got.count() == 200, name
         assert got.filter(F.col("name") != "upd").count() == 0, name
-
-
-def test_two_level_apply_with_collected_touched_pairs(spark, tmp_path):
-    """A caller that already collected the batch's (date, bucket) pairs
-    passes them; the compaction then runs inline in the write, and the
-    mirror equals a latest-wins rebuild."""
-    from proof_of_concept___cdc_w_iceberg_spark.cdc.bucketed import TwoLevelMirror
-
-    m = TwoLevelMirror(spark, str(tmp_path / "mirror"), keys=["k"],
-                       date_col="yr")
-    snap = _dated_snapshot(spark)
-    m.init(snap)
-    assert m.n_buckets == 1
-    batch = spark.createDataFrame(
-        [(6, "upd", 0.0, 2024, "u", 10, 1), (6, "upd2", 1.0, 2024, "u", 20, 2),
-         (7, None, None, 2025, "d", 10, 3)],
-        "k long, name string, bal double, yr int, op string, ts_ms long, off long",
-    )
-    pairs = m.touched_partitions(batch)
-    assert m.apply(batch, touched=pairs) == pairs
-    expected = apply_changes(snap, batch, keys=["k"])
-    got = m.read().withColumn("yr", F.col("yr").cast("int")).select(
-        "k", "name", "bal", "yr")
-    assert mirror_diff(got, expected.select("k", "name", "bal", "yr")).count() == 0

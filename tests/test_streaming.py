@@ -12,6 +12,7 @@ import time
 from pyspark.sql import functions as F
 
 from proof_of_concept___cdc_w_iceberg_spark.cdc.apply import compact_latest, mirror_diff
+from proof_of_concept___cdc_w_iceberg_spark.cdc.bucketed import bucket_expr
 from proof_of_concept___cdc_w_iceberg_spark.cdc.envelope import encode_envelope
 from proof_of_concept___cdc_w_iceberg_spark.sources.cdc_fixtures import changelog
 from proof_of_concept___cdc_w_iceberg_spark.sources.tables import load
@@ -378,7 +379,7 @@ def test_streaming_dead_letter_routing(spark, sf_dir):
         .otherwise(F.col("value"))
         .alias("value"),
     )
-    pipe = StreamingCdcPipeline(spark)
+    pipe = StreamingCdcPipeline(spark, n_buckets=16)
     pipe.init_mirror(snapshot)
     pipe.feed(corrupted, "b0")
     q = pipe.start(trigger_once=True)
@@ -685,13 +686,13 @@ def test_sessionizer_overdue_timeout_closes_inline():
 
 
 def test_apply_batch_job_budget_and_replay_collapse(spark, tmp_path):
-    """One micro-batch commit runs at most 7 Spark jobs: one collect
-    that finds the dead letters and the touched buckets, then the
-    rebalanced write with the compaction inline — no separate dedup
-    shuffle, emptiness probe or persisted compaction. Duplicate
-    (key, offset) deliveries inside the batch collapse in the
-    latest-wins compaction, and an empty batch is not counted as
-    applied."""
+    """One micro-batch commit runs at most 7 Spark jobs: the dead-letter
+    probe, the collect of the touched buckets over the raw batch, then
+    the rebalanced write with the compaction inline — no separate dedup
+    shuffle or persisted compaction. Duplicate (key, offset) deliveries
+    inside the batch collapse in the latest-wins compaction, an empty
+    batch is not counted as applied, and a batch whose keys land in
+    some of the mirror's buckets rewrites only those."""
     import uuid
 
     snap = spark.range(200).select(
@@ -699,7 +700,8 @@ def test_apply_batch_job_budget_and_replay_collapse(spark, tmp_path):
         F.concat(F.lit("n"), F.col("id")).alias("name"),
         (F.col("id") * 1.0).alias("bal"),
     )
-    pipe = StreamingCdcPipeline(spark, workdir=str(tmp_path / "pipe"))
+    pipe = StreamingCdcPipeline(spark, workdir=str(tmp_path / "pipe"),
+                                n_buckets=8)
     pipe.init_mirror(snap)
     events = spark.createDataFrame(
         [(k, f"u{k}", 2.0, "u", 2000, k) for k in range(0, 200, 7)]
@@ -730,6 +732,27 @@ def test_apply_batch_job_budget_and_replay_collapse(spark, tmp_path):
 
     pipe._apply_batch(batch.limit(0), 1)
     assert pipe.batches_applied == 1
+    assert mirror_diff(pipe.mirror(), expected).count() == 0
+
+    # Two keys in different buckets: the other six buckets keep their
+    # files, and the mirror still equals a latest-wins rebuild.
+    few = spark.createDataFrame(
+        [(1, "v1", 3.0, "u", 3000, 5000), (2, None, None, "d", 3000, 5001),
+         (1, "v1b", 4.0, "u", 3001, 5002)],
+        "k long, name string, bal double, op string, ts_ms long, off long")
+    hit = {r[0] for r in few.select(bucket_expr(["k"], 8)).collect()}
+    assert len(hit) == 2
+    before = pipe._mirror.partition_files()
+    assert len(before) == 8
+    pipe._apply_batch(encode_envelope(few), 2)
+    after = pipe._mirror.partition_files()
+    assert {b for b in before if before[b] != after.get(b)} == hit
+    expected = compact_latest(
+        expected.select("k", "name", "bal", F.lit("r").alias("op"),
+                        F.lit(1000).cast("long").alias("ts_ms"),
+                        F.col("k").alias("off")).unionByName(few),
+        ["k"],
+    ).filter(F.col("op") != "d").select("k", "name", "bal")
     assert mirror_diff(pipe.mirror(), expected).count() == 0
 
 
