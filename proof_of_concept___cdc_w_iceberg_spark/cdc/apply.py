@@ -100,8 +100,9 @@ def upsert_compacted(target: DataFrame, latest: DataFrame, keys: list[str],
     and a batch above the broadcast threshold would silently degrade
     to a sort-merge join — shuffling the full survivor leg and making
     the ``routed`` re-layout redundant. Those callers persist the
-    compacted batch up front (cdc/versioned.py ``_prepare_batch``), so
-    the broadcast is of a bounded, already-materialized relation.
+    compacted batch up front (``PreparingMirror.prepare`` in
+    cdc/bucketed.py), so the broadcast is of a bounded,
+    already-materialized relation.
     Without ``routed`` (the generic ``apply_changes`` path, where no
     caller has bounded the batch) the planner keeps the choice.
 

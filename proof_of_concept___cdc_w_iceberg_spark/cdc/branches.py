@@ -44,6 +44,8 @@ from contextlib import contextmanager
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from ..operators._util import overlap
+from .bucketed import PreparedBatch
 from .versioned import CommitConflictError, SnapshotMirror
 
 MAIN = "main"
@@ -208,68 +210,51 @@ class BranchedMirror(SnapshotMirror):
     def read_ref(self, name: str = MAIN) -> DataFrame:
         return self.read(version=self.get_ref(name))
 
-    def apply(self, changes: DataFrame | None = None, op_col: str = "op",
-              base_version: int | None = None, max_retries: int = 5,
-              prepared=None) -> int:
+    def apply(self, changes: DataFrame | PreparedBatch, op_col: str = "op",
+              base_version: int | None = None, max_retries: int = 5) -> int:
         """Unqualified apply = commit on main's head and advance main
         (the un-branched SnapshotMirror behavior, ref-tracked)."""
         if base_version is not None:
             return super().apply(changes, op_col=op_col,
                                  base_version=base_version,
-                                 max_retries=max_retries,
-                                 prepared=prepared)
-        return self._apply_to_ref(MAIN, changes, op_col=op_col,
-                                  prepared=prepared)
+                                 max_retries=max_retries)
+        return self._apply_to_ref(MAIN, changes, op_col=op_col)
 
-    def apply_to_branch(self, name: str, changes: DataFrame | None = None,
-                        op_col: str = "op", prepared=None) -> int:
-        """Commit a batch on the BRANCH head and advance only that
-        ref — main and sibling branches are isolated. ``prepared``:
-        a ``prepare`` handle whose compaction job already ran
-        (overlappable with init/other branches — r21, guide §2.6)."""
-        return self._apply_to_ref(name, changes, op_col=op_col,
-                                  prepared=prepared)
+    def apply_to_branch(self, name: str, changes: DataFrame | PreparedBatch,
+                        op_col: str = "op") -> int:
+        """Commit a batch (raw, or a ``prepare`` handle) on the BRANCH
+        head and advance only that ref — main and sibling branches are
+        isolated."""
+        return self._apply_to_ref(name, changes, op_col=op_col)
 
-    def _apply_to_ref(self, name: str, changes: DataFrame | None,
-                      op_col: str = "op", max_retries: int = 5,
-                      prepared=None) -> int:
+    def _apply_to_ref(self, name: str, changes: DataFrame | PreparedBatch,
+                      op_col: str = "op", max_retries: int = 5) -> int:
         """The ref-level optimistic-concurrency loop: merge from the
         ref's CURRENT head, commit the snapshot (version allocation is
         collision-safe one level down), then CAS the ref forward. If
         the ref moved underneath the merge, the committed snapshot is
         abandoned (expirable garbage — its data was never adopted) and
         the merge re-runs from the NEW head, so two writers advancing
-        one branch serialize instead of losing the first's batch."""
+        one branch serialize instead of losing the first's batch.
+
+        The batch is prepared (compacted and persisted) once, so a CAS
+        retry re-merges from the new head over cache blocks instead of
+        re-running the compaction job, and it is released when the loop
+        ends."""
         if max_retries < 1:
             raise ValueError("max_retries must be >= 1")
         last: CommitConflictError | None = None
-        # Prepared (and MATERIALIZED — _prepare_batch persists the
-        # compacted batch) once: a CAS retry re-merges from the new
-        # head but never re-runs the batch-compaction job, because the
-        # retry's plan reads cache blocks, not the lazy compaction
-        # (r16 advice: the hoist alone left ``latest`` lazy, so each
-        # retry's apply_changes still re-executed compact_latest).
-        # Released in the finally — this loop is _prepare_batch's only
-        # caller besides apply(), and both own their batch's lifetime
-        # (r17 advice: checkpoint blocks leaked until ContextCleaner).
-        if prepared is None:
-            if changes is None:
-                raise ValueError("apply needs changes or prepared")
-            prepared = self._prepare_batch(changes)
-        latest, touched = prepared
-        try:
+        with self._batch(changes) as batch:
             for _ in range(max_retries):
                 base = self.get_ref(name)
-                v = self._apply_prepared(latest, touched, op_col=op_col,
-                                         base_version=base)
+                v = self._merge_batch(batch, op_col=op_col,
+                                      base_version=base)
                 try:
                     self.set_ref(name, v, expect=base)
                     return v
                 except CommitConflictError as e:
                     last = e  # v orphaned; re-merge from the new head
             raise last
-        finally:
-            latest.unpersist()
 
     def fast_forward(self, to_ref: str, from_ref: str) -> int:
         """Publish: point ``to_ref`` at ``from_ref``'s head. No data
@@ -357,20 +342,9 @@ def wap_audit(state: DataFrame, keys: list[str],
     if batch_keys is not None:
         scope = state.join(F.broadcast(batch_keys.select(*keys).distinct()),
                            on=keys, how="left_semi")
-    # r20 (guide §2.6): the two passes are independent ACTIONS over the
-    # same branch scan — overlapping them from two driver threads lets
-    # the dup pass's tasks back-fill executors the null pass's tail
-    # frees (at sf0.1 each pass is a short wide stage; serial they pay
-    # two full job latencies). Two passes stay two passes — the
-    # one-pass rewrite was measured slower (note above).
-    # Thread-local caveat (r21, ADVICE item): under PySpark's default
-    # pinned-thread mode, fresh executor threads do NOT inherit the
-    # caller's JVM local properties — a caller-set job group /
-    # scheduler pool is silently absent for these jobs (cancellation
-    # and fair-scheduling scope only; results are unaffected). A
-    # harness that sets job groups should submit via
-    # pyspark.inheritable_thread_target instead.
-    from concurrent.futures import ThreadPoolExecutor
+    # The two passes are independent actions over the same branch
+    # scan: overlapped, the dup pass's tasks back-fill the executors the
+    # null pass's tail frees.
 
     def _nulls() -> int:
         row = state.agg(
@@ -384,6 +358,5 @@ def wap_audit(state: DataFrame, keys: list[str],
             .filter(F.col("n") > 1).count()
         )
 
-    with ThreadPoolExecutor(max_workers=2) as pool:
-        fn, fd = pool.submit(_nulls), pool.submit(_dups)
-        return {"null_keys": fn.result(), "dup_keys": fd.result()}
+    nulls, dups = overlap(state.sparkSession, _nulls, _dups)
+    return {"null_keys": nulls, "dup_keys": dups}

@@ -98,7 +98,79 @@ def _fits_broadcast(df: DataFrame, rows: int) -> bool:
     return 0 <= rows * row_bytes <= conf.autoBroadcastJoinThreshold()
 
 
-class BucketedMirror:
+class PreparedBatch:
+    """A change batch compacted latest-wins and persisted ahead of a
+    mirror's ``apply``, with its rows per mirror partition under
+    ``n_buckets`` (the collect that materialized it).
+
+    Preparing reads only the changes, never the mirror, so it can run
+    concurrently with ``init`` or other independent jobs. Every mirror
+    ``apply`` accepts a handle in place of the raw changes and releases
+    it when it returns or raises. ``release()`` is idempotent, and a
+    handle is a context manager, so a caller can release one that never
+    reaches ``apply``. Two handles of the same plan share Spark's cache
+    entry: releasing either drops it, and the other then recomputes."""
+
+    def __init__(self, latest: DataFrame, n_buckets: int, rows: dict):
+        self.latest = latest
+        self.n_buckets = n_buckets
+        self.rows = rows
+        self._released = False
+
+    def release(self) -> None:
+        if not self._released:
+            self._released = True
+            self.latest.unpersist()
+
+    def __enter__(self) -> PreparedBatch:
+        return self
+
+    def __exit__(self, *exc) -> None:
+        self.release()
+
+
+class PreparingMirror:
+    """``prepare`` for every mirror layout. A subclass provides
+    ``keys``, ``order_cols`` and ``n_buckets``, and overrides
+    ``_partition_rows`` when it partitions by more than the bucket."""
+
+    def _bucket_count(self) -> int:
+        """The bucket count a batch prepared now is counted under."""
+        return self.n_buckets
+
+    def prepare(self, changes: DataFrame) -> PreparedBatch:
+        """Compact ``changes`` latest-wins, persist the result and count
+        its rows per partition; that collect is what materializes it."""
+        n = self._bucket_count()
+        latest = compact_latest(changes, self.keys, self.order_cols).persist()
+        try:
+            return PreparedBatch(latest, n, self._partition_rows(latest, n))
+        except BaseException:
+            latest.unpersist()
+            raise
+
+    def _batch(self, changes: DataFrame | PreparedBatch) -> PreparedBatch:
+        """``changes`` as a handle, preparing a raw DataFrame."""
+        if isinstance(changes, PreparedBatch):
+            return changes
+        return self.prepare(changes)
+
+    def _rows(self, batch: PreparedBatch, n: int) -> dict:
+        """The batch's rows per partition under ``n`` buckets; reuses
+        the prepare collect when it counted under ``n``."""
+        if batch.n_buckets == n:
+            return batch.rows
+        return self._partition_rows(batch.latest, n)
+
+    def _partition_rows(self, df: DataFrame, n: int) -> dict:
+        """Rows of ``df`` per bucket under ``n`` buckets — at most ``n``
+        entries, one collect."""
+        rows = (df.groupBy(bucket_expr(self.keys, n).alias(BUCKET_COL))
+                .count().collect())
+        return {r[0]: r[1] for r in rows}
+
+
+class BucketedMirror(PreparingMirror):
     """A parquet mirror partitioned by key-hash bucket with
     partition-scoped CDC apply.
 
@@ -232,33 +304,10 @@ class BucketedMirror:
     def touched_buckets(self, changes: DataFrame) -> list[int]:
         """Distinct buckets of the batch keys — ≤ n_buckets ints, a
         driver-safe collect regardless of batch size."""
-        return sorted(self._bucket_rows(changes))
+        return sorted(self._partition_rows(changes, self.n_buckets))
 
-    def _bucket_rows(self, changes: DataFrame) -> dict[int, int]:
-        """Rows of the batch per bucket its keys land in — ≤ n_buckets
-        entries, one collect."""
-        rows = (changes.groupBy(bucket_expr(self.keys, self.n_buckets)
-                                .alias(BUCKET_COL))
-                .count().collect())
-        return {r[0]: r[1] for r in rows}
-
-    def prepare(self, changes: DataFrame) -> DataFrame:
-        """Materialize a batch's compacted latest-wins form AHEAD of
-        ``apply`` (r21, guide §2.6): the compaction reads only
-        ``changes``, never the mirror, so callers can overlap it with
-        the init write (or any independent job) and pass the handle to
-        ``apply(prepared=...)``. Single-use; apply unpersists it. A
-        handle never passed to apply must be ``unpersist()``-ed by the
-        caller. The count() is the materializing action — persist
-        alone is lazy, and an un-materialized handle would defeat the
-        overlap."""
-        latest = compact_latest(changes, self.keys, self.order_cols).persist()
-        latest.count()
-        return latest
-
-    def apply(self, changes: DataFrame | None = None, op_col: str = "op",
-              tag: str = "batch", prepared: DataFrame | None = None
-              ) -> list[int]:
+    def apply(self, changes: DataFrame | PreparedBatch, op_col: str = "op",
+              tag: str = "batch") -> list[int]:
         """Merge a change batch, rewriting only touched bucket
         partitions. Returns the list of buckets rewritten.
 
@@ -279,51 +328,55 @@ class BucketedMirror:
         batch whose plan carries no size estimate (an RDD-backed frame)
         still never shuffles the touched buckets by key.
 
-        ``prepared``: a handle from ``prepare`` whose compaction job
-        already ran; ``changes`` is then ignored, the collect reads the
-        handle, and apply unpersists it.
+        ``changes`` may also be a ``prepare`` handle: its compaction and
+        collect already ran, the merge reads them, and apply releases
+        the handle.
         """
-        if prepared is None and changes is None:
-            raise ValueError("apply needs changes or prepared")
-        batch = changes if prepared is None else prepared
-        try:
-            rows = self._bucket_rows(batch)
-            touched = sorted(rows)
-            if not touched:
-                return []
-            latest = (prepared if prepared is not None else
-                      compact_latest(changes, self.keys, self.order_cols))
-            key_rows = batch.select(*self.keys)
-            if _fits_broadcast(key_rows, sum(rows.values())):
-                key_rows = F.broadcast(key_rows)
-            if self._has_buckets():
-                # BUCKET_COL kept: the merged relation is written
-                # partitioned by it.
-                subset = self._scan().filter(F.col(BUCKET_COL).isin(touched))
-            else:
-                subset = self._with_bucket(self._empty())
-            # The merged relation (survivors + upserts) goes through one
-            # AQE rebalance on the bucket column: at small sizes AQE
-            # coalesces it to a few tasks holding whole buckets, so each
-            # touched bucket is rewritten as ONE file (no small-file
-            # growth per commit); an oversized bucket is split across
-            # several writers instead of funnelling through one task.
-            # Writing survivors from their scan tasks instead leaves
-            # several files per bucket, and the scan packs the big ones
-            # into one split, so one task writes nearly the whole
-            # mirror.
-            merged = upsert_compacted(
-                subset, self._with_bucket(latest), self.keys, op_col=op_col,
-                key_rows=key_rows)
-            # Stage before overwriting partitions we are also reading
-            # from — the parquet-table analogue of Iceberg's snapshot
-            # commit.
-            staged = f"{self.path}_{tag}_staged"
-            (merged.hint("rebalance", BUCKET_COL).write.mode("overwrite")
-             .partitionBy(BUCKET_COL).parquet(staged))
-        finally:
-            if prepared is not None:
-                prepared.unpersist()
+        n = self.n_buckets
+        if isinstance(changes, PreparedBatch):
+            with changes:
+                return self._merge(changes.latest, changes.latest,
+                                   self._rows(changes, n), op_col, tag)
+        return self._merge(
+            compact_latest(changes, self.keys, self.order_cols), changes,
+            self._partition_rows(changes, n), op_col, tag)
+
+    def _merge(self, latest: DataFrame, batch: DataFrame,
+               rows: dict[int, int], op_col: str, tag: str) -> list[int]:
+        """apply() over the compacted batch ``latest``, the relation
+        ``batch`` it was compacted from, and ``batch``'s rows per
+        bucket."""
+        touched = sorted(rows)
+        if not touched:
+            return []
+        key_rows = batch.select(*self.keys)
+        if _fits_broadcast(key_rows, sum(rows.values())):
+            key_rows = F.broadcast(key_rows)
+        if self._has_buckets():
+            # BUCKET_COL kept: the merged relation is written
+            # partitioned by it.
+            subset = self._scan().filter(F.col(BUCKET_COL).isin(touched))
+        else:
+            subset = self._with_bucket(self._empty())
+        # The merged relation (survivors + upserts) goes through one
+        # AQE rebalance on the bucket column: at small sizes AQE
+        # coalesces it to a few tasks holding whole buckets, so each
+        # touched bucket is rewritten as ONE file (no small-file
+        # growth per commit); an oversized bucket is split across
+        # several writers instead of funnelling through one task.
+        # Writing survivors from their scan tasks instead leaves
+        # several files per bucket, and the scan packs the big ones
+        # into one split, so one task writes nearly the whole
+        # mirror.
+        merged = upsert_compacted(
+            subset, self._with_bucket(latest), self.keys, op_col=op_col,
+            key_rows=key_rows)
+        # Stage before overwriting partitions we are also reading
+        # from — the parquet-table analogue of Iceberg's snapshot
+        # commit.
+        staged = f"{self.path}_{tag}_staged"
+        (merged.hint("rebalance", BUCKET_COL).write.mode("overwrite")
+         .partitionBy(BUCKET_COL).parquet(staged))
         # Publish = per-partition directory swap of the staged commit
         # (r20, guide §1.2/§6): the old path re-READ the staged table,
         # re-SHUFFLED it by bucket, and re-WROTE every staged byte
@@ -492,32 +545,29 @@ class TwoLevelMirror(BucketedMirror):
     def touched_partitions(self, changes: DataFrame) -> list[tuple]:
         """Distinct (date, bucket) pairs of the batch — bounded by
         |batch dates| × n_buckets, a driver-safe collect."""
-        rows = (changes.select(
-            F.col(self.date_col),
-            bucket_expr(self.keys, self.n_buckets).alias(BUCKET_COL))
-            .distinct().collect())
-        return sorted((r[0], r[1]) for r in rows)
+        return sorted(self._partition_rows(changes, self.n_buckets))
 
-    def apply(self, changes: DataFrame | None = None, op_col: str = "op",
-              tag: str = "batch", prepared: DataFrame | None = None
-              ) -> list[tuple]:
+    def _partition_rows(self, df: DataFrame, n: int) -> dict:
+        """Rows of ``df`` per (date, bucket) pair under ``n`` buckets."""
+        rows = (df.groupBy(F.col(self.date_col),
+                           bucket_expr(self.keys, n).alias(BUCKET_COL))
+                .count().collect())
+        return {(r[0], r[1]): r[2] for r in rows}
+
+    def apply(self, changes: DataFrame | PreparedBatch, op_col: str = "op",
+              tag: str = "batch") -> list[tuple]:
         """Two-level partition-scoped merge: compact → scan only the
         (batch dates) × (touched buckets) partitions → anti-join +
         union → dynamic overwrite of exactly those partitions, with
         explicit clearing of emptied ones. Returns the touched pairs.
-        ``prepared`` as in BucketedMirror.apply (r21, guide §2.6)."""
+        ``changes``: the raw batch or a ``prepare`` handle."""
         # The compaction is persisted (one execution for the pair
         # collect and the merge) and the staged commit published by
         # per-partition directory swap instead of a second
         # read+shuffle+write job.
-        if prepared is None:
-            if changes is None:
-                raise ValueError("apply needs changes or prepared")
-            prepared = compact_latest(
-                changes, self.keys, self.order_cols).persist()
-        latest = prepared
-        try:
-            touched = self.touched_partitions(latest)
+        with self._batch(changes) as batch:
+            latest = batch.latest
+            touched = sorted(self._rows(batch, self.n_buckets))
             if not touched:
                 return []
             dates = sorted({d for d, _ in touched})
@@ -547,8 +597,6 @@ class TwoLevelMirror(BucketedMirror):
              .repartition(self.date_col, BUCKET_COL)
              .write.mode("overwrite")
              .partitionBy(self.date_col, BUCKET_COL).parquet(staged))
-        finally:
-            latest.unpersist()
         out_parts = set()
         for dname in os.listdir(staged):
             if not dname.startswith(f"{self.date_col}="):

@@ -14,6 +14,7 @@ import tempfile
 from pyspark.sql import Window
 from pyspark.sql import functions as F
 
+from ..operators._util import overlap
 from ..registry import query
 from ..sources.cdc_fixtures import CHANGELOG_SQL, MIRROR_SQL, changelog, mirror_cte
 from ..sources.tables import load
@@ -212,15 +213,10 @@ def q_cdc_apply_bucketed(spark, sf_dir):
     path = os.path.join(tempfile.mkdtemp(prefix="cdc_bucketed_"), "mirror")
     m = BucketedMirror(spark, path, keys=["l_orderkey", "l_linenumber"],
                        n_buckets=16)
-    # r21 (guide §2.6): the batch compaction reads only the change
-    # relation, so it overlaps the init write.
-    from concurrent.futures import ThreadPoolExecutor
-
-    with ThreadPoolExecutor(max_workers=2) as pool:
-        f_init = pool.submit(m.init, li)
-        f_prep = pool.submit(m.prepare, changes)
-        f_init.result()
-        m.apply(prepared=f_prep.result())
+    # The batch compaction reads only the change relation, so it
+    # overlaps the init write.
+    _, batch = overlap(spark, lambda: m.init(li), lambda: m.prepare(changes))
+    m.apply(batch)
     return m.read()
 
 
@@ -309,14 +305,8 @@ def q_cdc_apply_partitioned(spark, sf_dir):
     path = os.path.join(tempfile.mkdtemp(prefix="cdc_twolevel_"), "mirror")
     m = TwoLevelMirror(spark, path, keys=["l_orderkey", "l_linenumber"],
                        date_col="part_year", n_buckets=16)
-    # r21 (guide §2.6): batch compaction overlaps the init write.
-    from concurrent.futures import ThreadPoolExecutor
-
-    with ThreadPoolExecutor(max_workers=2) as pool:
-        f_init = pool.submit(m.init, li)
-        f_prep = pool.submit(m.prepare, changes)
-        f_init.result()
-        m.apply(prepared=f_prep.result())
+    _, batch = overlap(spark, lambda: m.init(li), lambda: m.prepare(changes))
+    m.apply(batch)
     return m.read().select(
         "l_orderkey", "l_linenumber", "l_quantity", "l_extendedprice",
         F.col("part_year").cast("int").alias("part_year"),
@@ -1620,16 +1610,11 @@ def q_cdc_compact_files(spark, sf_dir):
     path = os.path.join(tempfile.mkdtemp(prefix="cdc_compact_"), "mirror")
     m = BucketedMirror(spark, path, keys=["l_orderkey", "l_linenumber"],
                        n_buckets=16)
-    # r21 (guide §2.6): batch compaction overlaps the fragmented
-    # ingest write.
-    from concurrent.futures import ThreadPoolExecutor
-
-    with ThreadPoolExecutor(max_workers=2) as pool:
-        f_init = pool.submit(m.init, li, 8)
-        f_prep = pool.submit(m.prepare, changes)
-        f_init.result()
+    _, batch = overlap(spark, lambda: m.init(li, 8),
+                       lambda: m.prepare(changes))
+    with batch:
         ingest_files = sum(len(fs) for fs in m.partition_files().values())
-        m.apply(prepared=f_prep.result())
+        m.apply(batch)
     m.compact(max_files=1)
     after = m.partition_files()
     n_after = sum(len(fs) for fs in after.values())
@@ -1657,11 +1642,9 @@ def q_cdc_wap_publish(spark, sf_dir):
        rewritten);
     2. a POISONED batch (null-PK inserts — a malformed envelope class
        that slips past decode) commits to branch ``audit_bad`` — a
-       SECOND writer running CONCURRENTLY with leg 1 (r21, guide
-       §2.6: both audit branches are cut from the same base and the
-       legs share no state, so their Spark jobs overlap from two
-       driver threads — the same pattern q_cdc_wap_race registers;
-       branch isolation means neither leg observes the other);
+       SECOND writer running CONCURRENTLY with leg 1 (both audit
+       branches are cut from the same base and the legs share no
+       state; branch isolation means neither leg observes the other);
        the audit catches it → the branch is dropped; main's ref is
        asserted to land exactly on the audited publish, byte-untouched
        by the failed writer.
@@ -1694,26 +1677,19 @@ def q_cdc_wap_publish(spark, sf_dir):
         (F.col("l_orderkey") * 10 + F.lit(3_000_000_000)).cast("long").alias("off"),
     )
 
-    # Both audit branches cut from the same base; the two legs share
-    # no refs or data dirs, so they run as concurrent driver threads
-    # (r21, guide §2.6 — the commit protocol's collision safety and
-    # the thread-overlap pattern are the ones q_cdc_wap_race already
-    # registers; the published CONTENT is identical to the serial
-    # flow, which the registered oracle hash-checks). Both batches'
-    # compaction jobs read only their change relations, never the
-    # mirror, so they also overlap the init write (mirror.prepare).
-    from concurrent.futures import ThreadPoolExecutor
-
-    with ThreadPoolExecutor(max_workers=4) as pool:
-        f_init = pool.submit(m.init, li)
-        f_prep_good = pool.submit(m.prepare, changes)
-        f_prep_bad = pool.submit(m.prepare, bad)
-        f_init.result()
+    # Both batches' compactions read only their change relations, so
+    # they overlap the init write. Both audit branches are cut from the
+    # same base and the two legs share no refs or data dirs, so they
+    # overlap too; the published content is that of the serial flow.
+    _, good, poisoned = overlap(spark, lambda: m.init(li),
+                                lambda: m.prepare(changes),
+                                lambda: m.prepare(bad))
+    with good, poisoned:
         m.branch_create("audit_good")
         m.branch_create("audit_bad")
 
         def good_leg() -> int:
-            m.apply_to_branch("audit_good", prepared=f_prep_good.result())
+            m.apply_to_branch("audit_good", good)
             audit = wap_audit(m.read_ref("audit_good").drop("__bucket"),
                               keys, batch_keys=changes)
             assert audit == {"null_keys": 0, "dup_keys": 0}, audit
@@ -1722,14 +1698,13 @@ def q_cdc_wap_publish(spark, sf_dir):
             return m.get_ref("main")
 
         def bad_leg() -> None:
-            m.apply_to_branch("audit_bad", prepared=f_prep_bad.result())
+            m.apply_to_branch("audit_bad", poisoned)
             audit = wap_audit(m.read_ref("audit_bad").drop("__bucket"), keys)
             assert audit["null_keys"] > 0, (
                 "audit must catch the poisoned batch")
             m.drop_branch("audit_bad")
 
-        fg, fb = pool.submit(good_leg), pool.submit(bad_leg)
-        published, _ = fg.result(), fb.result()
+        published, _ = overlap(spark, good_leg, bad_leg)
     assert m.get_ref("main") == published, "failed WAP leaked into main"
 
     return m.read_ref("main").select(
@@ -1843,37 +1818,27 @@ def q_cdc_wap_race(spark, sf_dir):
     path = os.path.join(tempfile.mkdtemp(prefix="cdc_wap_race_"), "mirror")
     m = BranchedMirror(spark, path, keys=keys, n_buckets=16)
 
-    # r20 (guide §2.6): the two branch writers ARE concurrent — that is
-    # the scenario this rung registers — so run them as concurrent
-    # driver threads instead of serializing their Spark jobs. The
-    # commit protocol is collision-safe by design (exclusive-create
-    # manifests, uniquified data dirs, per-ref CAS), each writer's
-    # batch/tail tasks back-fill the other's idle executors, and the
-    # published CONTENT is version-number-independent (the oracle
-    # hashes the final read). Audits overlap the same way. r21: both
-    # batches' compaction jobs additionally overlap the init write
-    # (mirror.prepare reads only the change relations).
-    from concurrent.futures import ThreadPoolExecutor
-
-    with ThreadPoolExecutor(max_workers=4) as pool:
-        f_init = pool.submit(m.init, li)
-        f_prep_a = pool.submit(m.prepare, batch_a)
-        f_prep_b = pool.submit(m.prepare, batch_b)
-        f_init.result()
+    # The two branch writers ARE concurrent — that is the scenario
+    # this rung registers. The commit protocol is collision-safe by
+    # design (exclusive-create manifests, uniquified data dirs, per-ref
+    # CAS), and the published content is version-number-independent
+    # (the oracle hashes the final read). Both batches' compactions
+    # read only their change relations, so they overlap the init write.
+    _, prep_a, prep_b = overlap(spark, lambda: m.init(li),
+                                lambda: m.prepare(batch_a),
+                                lambda: m.prepare(batch_b))
+    with prep_a, prep_b:
         m.branch_create("race_a")
         m.branch_create("race_b")
-        fa = pool.submit(m.apply_to_branch, "race_a",
-                         prepared=f_prep_a.result())
-        fb = pool.submit(m.apply_to_branch, "race_b",
-                         prepared=f_prep_b.result())  # the race
-        fa.result(), fb.result()
-        audits = {
-            br: pool.submit(
-                wap_audit, m.read_ref(br).drop("__bucket"), keys, batch)
-            for br, batch in (("race_a", batch_a), ("race_b", batch_b))
-        }
-        for br, fut in audits.items():
-            assert fut.result() == {"null_keys": 0, "dup_keys": 0}, br
+        overlap(spark, lambda: m.apply_to_branch("race_a", prep_a),
+                lambda: m.apply_to_branch("race_b", prep_b))  # the race
+    audits = overlap(
+        spark,
+        lambda: wap_audit(m.read_ref("race_a").drop("__bucket"), keys,
+                          batch_a),
+        lambda: wap_audit(m.read_ref("race_b").drop("__bucket"), keys,
+                          batch_b))
+    assert audits == [{"null_keys": 0, "dup_keys": 0}] * 2, audits
 
     m.fast_forward("main", "race_a")
     published = m.get_ref("main")
@@ -1886,9 +1851,9 @@ def q_cdc_wap_race(spark, sf_dir):
     m.drop_branch("race_b")
 
     m.branch_create("race_pick")  # cherry-pick: re-apply B on new head
-    # A second prepare() of batch B would alias the first handle's
-    # cache entry, which the race leg's apply already dropped, so the
-    # cherry-pick applies the batch itself.
+    # Batch B is prepared again inside this apply: a handle prepared up
+    # front would share the race leg's cache entry, which that leg's
+    # apply released.
     m.apply_to_branch("race_pick", batch_b)
     audit = wap_audit(m.read_ref("race_pick").drop("__bucket"), keys,
                       batch_keys=batch_b)
@@ -1941,20 +1906,16 @@ def q_cdc_expire_branch(spark, sf_dir):
     keys = ["l_orderkey", "l_linenumber"]
     path = os.path.join(tempfile.mkdtemp(prefix="cdc_expire_br_"), "mirror")
     m = BranchedMirror(spark, path, keys=keys, n_buckets=16)
-    # r21 (guide §2.6): the two branch commits are sequential by
-    # semantics (one branch, chained heads), but their batch
-    # COMPACTION jobs read only the change relations — both overlap
-    # the init write via mirror.prepare.
-    from concurrent.futures import ThreadPoolExecutor
-
-    with ThreadPoolExecutor(max_workers=3) as pool:
-        f_init = pool.submit(m.init, li)
-        f_prep_a = pool.submit(m.prepare, batch_a)
-        f_prep_b = pool.submit(m.prepare, batch_b)
-        v0 = f_init.result()
+    # The two branch commits are sequential (one branch, chained
+    # heads), but their batch compactions read only the change
+    # relations, so both overlap the init write.
+    v0, prep_a, prep_b = overlap(spark, lambda: m.init(li),
+                                 lambda: m.prepare(batch_a),
+                                 lambda: m.prepare(batch_b))
+    with prep_a, prep_b:
         m.branch_create("audit")
-        v1 = m.apply_to_branch("audit", prepared=f_prep_a.result())
-        v2 = m.apply_to_branch("audit", prepared=f_prep_b.result())
+        v1 = m.apply_to_branch("audit", prep_a)
+        v2 = m.apply_to_branch("audit", prep_b)
 
     dead = m.expire(keep_last=1)
     assert v1 in dead, f"intermediate branch commit must expire: {dead}"
@@ -2018,32 +1979,29 @@ def cdc_evolve_spec_query(spark, sf_dir):
     path = os.path.join(tempfile.mkdtemp(prefix="cdc_evolve_spec_"),
                         "mirror")
     m = SpecEvolvingMirror(spark, path, keys=keys, n_buckets=8)
-    # r21 (guide §2.6): both batches' compaction jobs are
-    # spec-independent (the touched sets derive per spec inside the
-    # merge), so they overlap the init write.
-    from concurrent.futures import ThreadPoolExecutor
+    # Both batches' compactions are spec-independent (the touched
+    # sets derive per spec inside the merge), so they overlap the init
+    # write.
+    _, prep_a, prep_b = overlap(spark, lambda: m.init(li),
+                                lambda: m.prepare(batch_a),
+                                lambda: m.prepare(batch_b))
+    with prep_b:
+        m.apply(prep_a)
+        head = m.current_version()
+        try:
+            m.evolve_spec(12)
+            raise AssertionError("non-multiple spec must be refused")
+        except ValueError:
+            pass
+        assert m.current_version() == head, "refused evolve moved the head"
 
-    with ThreadPoolExecutor(max_workers=3) as pool:
-        f_init = pool.submit(m.init, li)
-        f_prep_a = pool.submit(m.prepare, batch_a)
-        f_prep_b = pool.submit(m.prepare, batch_b)
-        f_init.result()
-        m.apply(prepared=f_prep_a.result())
-    head = m.current_version()
-    try:
-        m.evolve_spec(12)
-        raise AssertionError("non-multiple spec must be refused")
-    except ValueError:
-        pass
-    assert m.current_version() == head, "refused evolve moved the head"
+        before = dict(m._entries(m._load_manifest(head)))
+        m.evolve_spec(16)
+        after = dict(m._entries(m._load_manifest(m.current_version())))
+        assert after == before, "evolve must move zero data"
+        assert set(m.spec_census()) == {8}, "evolve migrates nothing"
 
-    before = dict(m._entries(m._load_manifest(head)))
-    m.evolve_spec(16)
-    after = dict(m._entries(m._load_manifest(m.current_version())))
-    assert after == before, "evolve must move zero data"
-    assert set(m.spec_census()) == {8}, "evolve migrates nothing"
-
-    m.apply(prepared=f_prep_b.result())  # lazy migration, new spec
+        m.apply(prep_b)  # lazy migration, new spec
     assert set(m.spec_census()) <= {8, 16}, m.spec_census()
     m.migrate()
     assert set(m.spec_census()) == {16}, "migrate must finish the drain"

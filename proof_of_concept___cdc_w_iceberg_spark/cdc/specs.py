@@ -51,7 +51,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 
 from .apply import upsert_compacted
-from .bucketed import BUCKET_COL, bucket_expr
+from .bucketed import BUCKET_COL, PreparedBatch, bucket_expr
 from .versioned import CommitConflictError, SnapshotMirror
 
 from pyspark.sql import functions as F
@@ -120,52 +120,22 @@ class SpecEvolvingMirror(SnapshotMirror):
         return self._commit_spec(self._entries(m), m["schema"],
                                  spec=new_n, parent=base)
 
-    def prepare(self, changes: DataFrame) -> DataFrame:
-        """Spec-independent batch materialization ahead of ``apply``
-        (r21, guide §2.6 — overlappable with init; overrides the base
-        prepare because this class's apply derives touched sets PER
-        SPEC inside the merge loop, so the handle is just the
-        persisted compacted batch). count() materializes it."""
-        from .apply import compact_latest
+    def _bucket_count(self) -> int:
+        """A batch prepared now is counted under the current spec, or
+        under the initial one while ``init`` has not committed."""
+        return self.current_spec() if self.versions() else self.n_buckets
 
-        latest = compact_latest(changes, self.keys, self.order_cols).persist()
-        latest.count()
-        return latest
-
-    def apply(self, changes: DataFrame | None = None, op_col: str = "op",
-              base_version: int | None = None, max_retries: int = 5,
-              prepared: DataFrame | None = None) -> int:
+    def _merge_batch(self, batch: PreparedBatch, op_col: str = "op",
+                     base_version: int | None = None,
+                     max_retries: int = 5) -> int:
         """Touched-only COW merge under the manifest's CURRENT spec,
         across however many specs the live entries span. Affected
         entries rewrite UNDER THE CURRENT SPEC (lazy migration);
-        unaffected entries carry verbatim. ``prepared`` as in
-        BucketedMirror.apply (r21, guide §2.6)."""
+        unaffected entries carry verbatim. The touched set is derived
+        per retry, because the spec may move between attempts."""
         if max_retries < 1:
             raise ValueError("max_retries must be >= 1")
-        from .apply import compact_latest
-
-        # Materialized once, like _prepare_batch: the touched-bucket
-        # collect AND every retry's merge read cache blocks instead of
-        # re-running the compaction job; released in the finally (r17
-        # advice — checkpoint blocks leaked until ContextCleaner GC,
-        # a persist the owner unpersists does not).
-        if prepared is None:
-            if changes is None:
-                raise ValueError("apply needs changes or prepared")
-            prepared = compact_latest(
-                changes, self.keys, self.order_cols
-            ).persist()
-        latest = prepared
-        try:
-            return self._apply_cached(latest, op_col=op_col,
-                                      base_version=base_version,
-                                      max_retries=max_retries)
-        finally:
-            latest.unpersist()
-
-    def _apply_cached(self, latest: DataFrame, op_col: str,
-                      base_version: int | None, max_retries: int) -> int:
-        """apply()'s retry loop over the already-cached batch."""
+        latest = batch.latest
         # Pinned base => branch-commit shape: version numbers may
         # interleave with other writers, so the commit allocates the
         # next free version instead of demanding parent+1 (linear).
@@ -179,11 +149,7 @@ class SpecEvolvingMirror(SnapshotMirror):
                     else base_version)
             m = self._load_manifest(base)
             spec = self.current_spec(m)
-            touched = {
-                int(r[0]) for r in
-                latest.select(bucket_expr(self.keys, spec)).distinct()
-                .collect()
-            }
+            touched = set(self._rows(batch, spec))
             entries = self._entries(m)
             # Touched-modulo sets precomputed once per DISTINCT spec
             # among the live entries (r17 advice: the inline set
@@ -211,7 +177,7 @@ class SpecEvolvingMirror(SnapshotMirror):
                 # bucket value is a projection of the keys, so
                 # partitionBy routes each scan task's rows directly;
                 # only the batch leg exchanges (batch-sized). The
-                # batch is already compacted (apply() persisted it),
+                # batch is already compacted (prepare persisted it),
                 # so apply_changes' second compaction window is gone.
                 routed = latest.repartition(bucket_expr(self.keys, spec))
                 merged = upsert_compacted(subset, latest, self.keys,

@@ -34,8 +34,8 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from .apply import compact_latest, upsert_compacted
-from .bucketed import BUCKET_COL, bucket_expr
+from .apply import upsert_compacted
+from .bucketed import BUCKET_COL, PreparedBatch, PreparingMirror, bucket_expr
 from .diff import table_changes
 
 # Strict manifest-file name parse (r16 advice): a stray
@@ -55,7 +55,7 @@ class CommitConflictError(RuntimeError):
     surfaces the conflict for branch commits."""
 
 
-class SnapshotMirror:
+class SnapshotMirror(PreparingMirror):
     """Versioned bucketed mirror: ``init`` → v0, each ``apply`` → a new
     version; ``read(version=k)`` time-travels; ``diff(i, j)`` is the
     incremental read (changelog scan) between two snapshots."""
@@ -174,10 +174,10 @@ class SnapshotMirror:
                         "schema": schema_json, "buckets": buckets}
             if parent is not None:
                 manifest["base"] = parent
-            # Writer-unique tmp name (r21 fix): a pid-only suffix
-            # COLLIDES for two concurrent branch writers in one driver
-            # process (q_cdc_wap_race / q_cdc_wap_publish commit from
-            # ThreadPoolExecutor threads) — both stage the same
+            # Writer-unique tmp name: a pid-only suffix COLLIDES for
+            # two concurrent branch writers in one driver process
+            # (q_cdc_wap_race / q_cdc_wap_publish commit from
+            # overlapped driver threads) — both stage the same
             # version's tmp file, the winner links-and-unlinks it, and
             # the loser's os.link dies with FileNotFoundError instead
             # of the FileExistsError the allocation loop handles. Same
@@ -314,21 +314,8 @@ class SnapshotMirror:
                 f"reclaimed; only its lineage tombstone remains")
         return self._read_dirs(sorted(m["buckets"].values()), m["schema"])
 
-    def prepare(self, changes: DataFrame):
-        """Materialize a batch's merge-ready form AHEAD of ``apply``
-        (r21, guide §2.6): the compaction window + persist + touched-
-        bucket collect read only ``changes``, never the mirror, so a
-        caller can run this concurrently with ``init`` (or any other
-        independent job) and pass the handle to
-        ``apply(prepared=...)``. The handle is OPAQUE and single-use;
-        ``apply`` releases its cache whether the commit lands or
-        raises. A handle that is never passed to ``apply`` must be
-        released by the caller (``handle[0].unpersist()``)."""
-        return self._prepare_batch(changes)
-
-    def apply(self, changes: DataFrame | None = None, op_col: str = "op",
-              base_version: int | None = None, max_retries: int = 5,
-              prepared=None) -> int:
+    def apply(self, changes: DataFrame | PreparedBatch, op_col: str = "op",
+              base_version: int | None = None, max_retries: int = 5) -> int:
         """Merge a change batch as a new snapshot. Reads ONLY the
         touched buckets of the base version (default: latest), writes
         ONLY their replacements; every other bucket entry is carried
@@ -344,64 +331,33 @@ class SnapshotMirror:
         lineage is still recorded, but conflict detection for branches
         happens at the ref swap, so no retry is attempted here.
 
-        ``prepared``: a handle from ``prepare`` — the batch's
-        compaction job already ran (possibly overlapped with other
-        work); ``changes`` is then ignored and the handle is consumed
-        (r21, guide §2.6)."""
-        if prepared is None:
-            if changes is None:
-                raise ValueError("apply needs changes or prepared")
-            prepared = self._prepare_batch(changes)
-        latest, touched = prepared
-        try:
-            return self._apply_prepared(latest, touched, op_col=op_col,
-                                        base_version=base_version,
-                                        max_retries=max_retries)
-        finally:
-            # Caller owns the batch cache's lifetime (r17 advice): once
-            # the commit lands (or the last retry raises) nothing reads
-            # it again, and a long-lived driver doing many applies must
-            # not accumulate executor storage until ContextCleaner GC.
-            latest.unpersist()
+        ``changes``: the raw batch, or a ``prepare`` handle whose
+        compaction already ran. A raw batch is prepared here. The
+        prepared batch is computed ONCE and reused across every
+        conflict retry (this ledger's retry loop AND the ref-CAS loop
+        one level up in branches.py), and it is MATERIALIZED, not just
+        hoisted: a lazy plan would re-execute the compaction job inside
+        every retry's merge, and even the no-retry path would pay it
+        twice (once for the touched-bucket collect, once in the merge).
+        persist, NOT localCheckpoint: checkpoint blocks are freeable
+        only by ContextCleaner GC, while apply releases the handle the
+        moment its commit lands or the last retry raises, so a
+        long-lived driver doing many applies does not accumulate
+        executor storage; and persist keeps lineage, so an evicted
+        block recomputes instead of failing."""
+        with self._batch(changes) as batch:
+            return self._merge_batch(batch, op_col=op_col,
+                                     base_version=base_version,
+                                     max_retries=max_retries)
 
-    def _prepare_batch(self, changes: DataFrame):
-        """The batch's compacted latest-wins form and its touched-bucket
-        set — pure functions of ``changes``, computed ONCE and reused
-        across every conflict retry (this ledger's retry loop AND the
-        ref-CAS loop one level up in branches.py, which used to re-run
-        the compaction job per retry — review finding r16).
-
-        ``latest`` is MATERIALIZED (persist + the touched-bucket
-        collect below as the materializing action), not just hoisted:
-        a lazy plan would re-execute the compaction job inside every
-        retry's ``apply_changes`` — and even the no-retry path would
-        pay it twice (once for the touched-bucket collect, once in the
-        merge). Cached, the window/shuffle runs exactly once and
-        retries re-read batch-sized cache blocks (r16 advice: the
-        hoist alone only saved the collect). persist, NOT
-        localCheckpoint (r17 advice): checkpoint blocks are freeable
-        only by ContextCleaner GC, while the caller can (and must)
-        ``unpersist()`` this relation the moment its commit lands —
-        and persist keeps lineage, so an evicted block recomputes
-        instead of failing."""
-        latest = compact_latest(
-            changes, self.keys, self.order_cols
-        ).persist()
-        touched = {
-            str(r[0]) for r in
-            latest.select(bucket_expr(self.keys, self.n_buckets)).distinct()
-            .collect()
-        }
-        return latest, touched
-
-    def _apply_prepared(self, latest: DataFrame, touched: set[str],
-                        op_col: str = "op",
-                        base_version: int | None = None,
-                        max_retries: int = 5) -> int:
-        """apply()'s merge-and-commit loop over an already-prepared
-        batch (see _prepare_batch)."""
+    def _merge_batch(self, batch: PreparedBatch, op_col: str = "op",
+                     base_version: int | None = None,
+                     max_retries: int = 5) -> int:
+        """apply()'s merge-and-commit loop over a prepared batch."""
         if max_retries < 1:
             raise ValueError("max_retries must be >= 1")
+        latest = batch.latest
+        touched = {str(b) for b in self._rows(batch, self.n_buckets)}
         pinned = base_version is not None
         last_conflict: CommitConflictError | None = None
         for _ in range(max_retries):
@@ -418,7 +374,7 @@ class SnapshotMirror:
                 # BATCH leg is routed by bucket — a batch-sized
                 # exchange — so the staged write needs no full-table
                 # shuffle (cluster=False). The batch arrives already
-                # compacted and persisted (_prepare_batch), so the old
+                # compacted and persisted (prepare), so the old
                 # second compaction window inside apply_changes is
                 # gone too (upsert_compacted).
                 routed = latest.repartition(

@@ -40,6 +40,7 @@ import math
 from pyspark.sql import Window
 from pyspark.sql import functions as F
 
+from ..operators._util import checkpoint_all
 from ..operators.sketches import _hex_u32_sql
 from ..registry import query
 from ..sources.tables import load
@@ -610,27 +611,19 @@ def q_stream_knn_graph_upsert(spark, sf_dir):
     ]
     corpus = e.filter(F.col("vec_id") <= 600).localCheckpoint(eager=True)
     state = knn_graph_state(corpus).localCheckpoint(eager=True)
-    # r21 (guide §2.6): each batch's four eager checkpoints pair into
-    # two independent groups — (surv, batch) touch only checkpointed
-    # corpus / the scan, and (state', corpus') touch disjoint inputs —
-    # so they overlap from a 2-thread pool: ~2 job latencies per batch
-    # instead of 4. Same relations, same rows.
-    from concurrent.futures import ThreadPoolExecutor
-
-    def _cp(df):
-        return df.localCheckpoint(eager=True)
-
-    with ThreadPoolExecutor(max_workers=2) as pool:
-        for ins_cond, del_range in batches:
-            del_cond = del_range & (F.col("vec_id") % 7 == 2)
-            dels = corpus.filter(del_cond).select("vec_id")
-            f_surv = pool.submit(_cp, corpus.filter(~del_cond))
-            f_batch = pool.submit(_cp, e.filter(ins_cond))
-            surv, batch = f_surv.result(), f_batch.result()
-            state = knn_graph_delete_apply(state, surv, dels)
-            f_state = pool.submit(_cp, knn_graph_apply(state, surv, batch))
-            f_corpus = pool.submit(_cp, surv.unionByName(batch))
-            state, corpus = f_state.result(), f_corpus.result()
+    # Each batch's four eager checkpoints pair into two independent
+    # groups — (surv, batch) touch only checkpointed corpus / the scan,
+    # and (state', corpus') touch disjoint inputs — so each pair
+    # overlaps: ~2 job latencies per batch instead of 4.
+    for ins_cond, del_range in batches:
+        del_cond = del_range & (F.col("vec_id") % 7 == 2)
+        dels = corpus.filter(del_cond).select("vec_id")
+        surv, batch = checkpoint_all(
+            spark, corpus.filter(~del_cond), e.filter(ins_cond))
+        state = knn_graph_delete_apply(state, surv, dels)
+        state, corpus = checkpoint_all(
+            spark, knn_graph_apply(state, surv, batch),
+            surv.unionByName(batch))
     return state.select(
         "src", "dst", F.round("cosine", 6).alias("cosine"),
         F.col("rn").cast("long").alias("rn"),
@@ -660,20 +653,13 @@ def q_stream_knn_graph(spark, sf_dir):
     ]
     corpus = e.filter(splits[0]).localCheckpoint(eager=True)
     state = knn_graph_state(corpus).localCheckpoint(eager=True)
-    # r21 (guide §2.6): state' and corpus' are independent eager
-    # checkpoints — overlap them per batch (same pairing as the
-    # upsert twin above).
-    from concurrent.futures import ThreadPoolExecutor
-
-    def _cp(df):
-        return df.localCheckpoint(eager=True)
-
-    with ThreadPoolExecutor(max_workers=2) as pool:
-        for cond in splits[1:]:
-            batch = e.filter(cond).localCheckpoint(eager=True)
-            f_state = pool.submit(_cp, knn_graph_apply(state, corpus, batch))
-            f_corpus = pool.submit(_cp, corpus.unionByName(batch))
-            state, corpus = f_state.result(), f_corpus.result()
+    # state' and corpus' are independent eager checkpoints: overlap
+    # them per batch.
+    for cond in splits[1:]:
+        batch = e.filter(cond).localCheckpoint(eager=True)
+        state, corpus = checkpoint_all(
+            spark, knn_graph_apply(state, corpus, batch),
+            corpus.unionByName(batch))
     return state.select(
         "src", "dst", F.round("cosine", 6).alias("cosine"),
         F.col("rn").cast("long").alias("rn"),

@@ -3,8 +3,13 @@
 from __future__ import annotations
 
 import os
+from collections.abc import Callable
+from concurrent.futures import ThreadPoolExecutor
+from functools import partial
+from typing import Any
 
-from pyspark.sql import Column
+from pyspark import inheritable_thread_target
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 # Debug guard for rdiv's exactness premise (r18 advice): with this env
@@ -131,6 +136,43 @@ def rdiv_sql(num: str, den: str, round_to: int) -> str:
         f"+ CAST({den} AS DOUBLE)) / (2.0 * CAST({den} AS DOUBLE))) "
         f"/ {m}.0"
     )
+
+
+def overlap(spark: SparkSession, *thunks: Callable[[], Any]) -> list:
+    """Run independent Spark actions concurrently, one driver thread per
+    thunk, and return their results in thunk order (``[]`` for none).
+
+    Each thread starts with the caller's JVM local properties
+    (``pyspark.inheritable_thread_target``), so the jobs a thunk
+    launches run under the caller's job group, description and
+    scheduler pool: ``cancelJobGroup`` reaches them and per-group job
+    counts include them. A plain pool thread starts with none of these.
+
+    Waits for every thunk, then re-raises the first failure in thunk
+    order. On failure, every result with a ``release()`` method (a
+    mirror's prepared batch) is released, because no caller will
+    consume it."""
+    if not thunks:
+        return []
+    # Wrapped here, in the caller's thread: the wrapper snapshots the
+    # local properties when it is built, one copy per thunk.
+    targets = [inheritable_thread_target(spark)(t) for t in thunks]
+    with ThreadPoolExecutor(max_workers=len(targets)) as pool:
+        futures = [pool.submit(t) for t in targets]
+    errors = [f.exception() for f in futures]
+    failure = next((e for e in errors if e is not None), None)
+    if failure is None:
+        return [f.result() for f in futures]
+    for f, e in zip(futures, errors):
+        if e is None and hasattr(f.result(), "release"):
+            f.result().release()
+    raise failure
+
+
+def checkpoint_all(spark: SparkSession, *dfs: DataFrame) -> list[DataFrame]:
+    """Eager local checkpoints of independent relations, overlapped."""
+    return overlap(spark, *[partial(df.localCheckpoint, eager=True)
+                            for df in dfs])
 
 
 # --- tracked persists (r18 advice / r19 persist census) ----------------

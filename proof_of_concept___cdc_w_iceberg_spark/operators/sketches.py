@@ -21,11 +21,13 @@ bit positions / cells and results hash-match exactly.
 
 from __future__ import annotations
 
+from functools import partial
+
 from pyspark.sql import functions as F
 
 from ..registry import query
 from ..sources.tables import load
-from ._util import dec_sum
+from ._util import checkpoint_all, dec_sum, overlap
 
 
 def _hex_u32_sql(h: str) -> str:
@@ -954,12 +956,11 @@ def _kq_exact_ranks(spark, li, targets, n=None):
     + 64 bucket counts; phase 2 re-scans ONLY the target's bucket
     behind a pushed-down range predicate). Returns ``({q: value}, n)``.
 
-    r21 (guide §1.2/§2.6): the stream count rides the min/max stats
-    pass when the caller doesn't already have it (``n=None`` — one
-    corpus aggregate instead of two), and the per-target phase-2
-    probes are INDEPENDENT bounded jobs, so they overlap from a small
-    thread pool instead of paying |targets| serial job latencies.
-    No targets: no probes (an empty pool would be invalid)."""
+    The stream count rides the min/max stats pass when the caller
+    doesn't already have it (``n=None`` — one corpus aggregate instead
+    of two), and the per-target phase-2 probes are independent bounded
+    jobs, so they overlap instead of paying |targets| serial job
+    latencies. No targets: no probes."""
     import math as _math
 
     if not targets:
@@ -995,11 +996,8 @@ def _kq_exact_ranks(spark, li, targets, n=None):
         )
         return in_bucket.orderBy("v").limit(offset).agg(F.max("v")).first()[0]
 
-    from concurrent.futures import ThreadPoolExecutor
-
-    with ThreadPoolExecutor(max_workers=min(4, len(targets))) as pool:
-        out = dict(zip(targets, pool.map(probe, targets)))
-    return out, n
+    return dict(zip(targets, overlap(
+        spark, *[partial(probe, q) for q in targets]))), n
 
 
 @query("q_sketch_quantile", oracle=KQ_SKETCH_SQL)
@@ -1245,16 +1243,10 @@ def theta_readout(sk_a, sk_b, a_keys, b_keys):
     md5-hoist negative (theta_order_stream note above) came from
     inserting a projection UNDER the distinct; cutting at the readout
     boundary leaves every aggregate shape intact. The four
-    materializations are independent jobs and overlap from a small
-    thread pool (guide §2.6) so the cut costs ~one job latency, not
-    four."""
-    from concurrent.futures import ThreadPoolExecutor
-
-    with ThreadPoolExecutor(max_workers=4) as pool:
-        sk_a, sk_b, a_keys, b_keys = pool.map(
-            lambda df: df.localCheckpoint(eager=True),
-            (sk_a, sk_b, a_keys, b_keys),
-        )
+    materializations are independent jobs and overlap, so the cut
+    costs ~one job latency, not four."""
+    sk_a, sk_b, a_keys, b_keys = checkpoint_all(
+        sk_a.sparkSession, sk_a, sk_b, a_keys, b_keys)
     th_a, th_b = _theta_of(sk_a), _theta_of(sk_b)
     th_u = (
         th_a.crossJoin(th_b.withColumnRenamed("theta", "theta_b"))

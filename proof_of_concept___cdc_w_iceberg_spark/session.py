@@ -14,6 +14,14 @@ import os
 from pyspark.sql import SparkSession
 
 
+def default_driver_memory() -> str:
+    """A quarter of physical memory in whole GiB (at least 1g), capped
+    at 16g: the driver JVM, the Python driver and the Python workers
+    share the box in local mode."""
+    phys = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES")
+    return f"{min(16, max(1, round(phys / 4 / 2**30)))}g"
+
+
 def get_spark(app_name: str = "poc_cdc_iceberg_spark") -> SparkSession:
     cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
     builder = (
@@ -29,7 +37,8 @@ def get_spark(app_name: str = "poc_cdc_iceberg_spark") -> SparkSession:
         # epoch-math surface (unix_millis & co.) stays valid everywhere.
         .config("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
-        .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEM", "16g"))
+        .config("spark.driver.memory",
+                os.environ.get("SPARK_DRIVER_MEM") or default_driver_memory())
         .config("spark.ui.enabled", "false")
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
         # zstd: ~30% smaller files than snappy at comparable scan speed —

@@ -295,25 +295,11 @@ def test_snapshot_mirror_delete_and_expire(spark, tmp_path):
     assert set(os.listdir(data_dir)) <= live_refs | set()
 
 
-def _jobs_in_group(spark, group, fn):
-    """Run ``fn`` under a fresh job group; return (result, jobs it ran)."""
-    sc = spark.sparkContext
-    sc.setJobGroup(group, group)
-    try:
-        out = fn()
-    finally:
-        sc.setLocalProperty("spark.jobGroup.id", None)
-        sc.setLocalProperty("spark.job.description", None)
-    return out, len(sc.statusTracker().getJobIdsForGroup(group))
-
-
-def test_mirror_reads_build_without_spark_jobs(spark, tmp_path):
+def test_mirror_reads_build_without_spark_jobs(spark, tmp_path, jobs_in_group):
     """Building a read runs no footer-reading (schema inference) job:
     BucketedMirror takes its schema from the init sidecar,
     SnapshotMirror from the manifest. Without a sidecar the bucketed
     read still works, by inference."""
-    import uuid
-
     from proof_of_concept___cdc_w_iceberg_spark.cdc.versioned import SnapshotMirror
 
     snap = _snapshot(spark)
@@ -327,8 +313,7 @@ def test_mirror_reads_build_without_spark_jobs(spark, tmp_path):
     for name, build in (("bucketed", bm.read), ("snapshot", sm.read),
                         ("travel", lambda: sm.read(0)),
                         ("diff", lambda: sm.diff(0, 1))):
-        df, n_jobs = _jobs_in_group(spark, f"read-{name}-{uuid.uuid4().hex}",
-                                    build)
+        df, n_jobs = jobs_in_group(build)
         assert n_jobs == 0, f"{name} read ran {n_jobs} jobs while building"
     def shape(df):
         return [(f.name, f.dataType) for f in df.schema.fields]
@@ -424,21 +409,19 @@ def _with_conf(spark, conf, fn):
             spark.conf.set(k, v)
 
 
-def test_sized_bucket_count_follows_max_partition_bytes(spark, tmp_path):
+def test_sized_bucket_count_follows_max_partition_bytes(spark, tmp_path,
+                                                       jobs_in_group):
     """With a scan split far below the snapshot's size, the same
     snapshot lays out as several buckets, with no Spark job spent on
     sizing; later applies use the recorded count whatever the session
     setting, and the mirror equals a latest-wins rebuild."""
-    import uuid
-
     snap = spark.range(20_000).select(
         F.col("id").alias("k"),
         F.concat(F.lit("name_"), F.col("id")).alias("name"),
         (F.col("id") * 1.5).alias("bal"),
     )
     split = {"spark.sql.files.maxPartitionBytes": "16k"}
-    n, n_jobs = _jobs_in_group(
-        spark, f"size-{uuid.uuid4().hex}",
+    n, n_jobs = jobs_in_group(
         lambda: _with_conf(spark, split, lambda: sized_bucket_count(snap)))
     assert n_jobs == 0
     assert n > 1

@@ -251,25 +251,22 @@ def test_spec_apply_pinned_base_commits_branch_shape(spark, tmp_path):
 
 
 def test_prepare_batch_is_materialized(spark, tmp_path):
-    """_prepare_batch's compacted batch reads as cache blocks — a
+    """prepare's compacted batch reads as cache blocks — a
     retry (or the first merge) must never re-run the compaction window
     (r16 advice: the hoist alone left it lazy). Since r18 the
     materialization is persist, not localCheckpoint (r17 advice:
     checkpoint blocks were freeable only by ContextCleaner GC), so the
     pinned shape is a cache scan plus an owner-released lifetime."""
     m, df = _mk_mirror(spark, tmp_path)
-    latest, touched = m._prepare_batch(_batch(df, 0, 9, 2000))
-    try:
-        plan = latest._jdf.queryExecution().executedPlan().toString()
+    with m.prepare(_batch(df, 0, 9, 2000)) as batch:
+        plan = batch.latest._jdf.queryExecution().executedPlan().toString()
         # Consumers (the merge, every retry) scan the in-memory
         # relation; the window lives only INSIDE the cached plan.
         assert "InMemoryTableScan" in plan, plan
-        assert touched and all(isinstance(t, str) for t in touched)
-        # The collect in _prepare_batch already materialized the cache.
+        assert batch.rows and sum(batch.rows.values()) == 10
+        # The collect in prepare already materialized the cache.
         infos = spark.sparkContext._jsc.sc().getRDDStorageInfo()
         assert any(i.numCachedPartitions() > 0 for i in infos)
-    finally:
-        latest.unpersist()
 
 
 def test_apply_releases_batch_cache(spark, tmp_path):

@@ -117,9 +117,9 @@ def test_concurrent_commits_same_process_allocate_distinct_versions(spark, tmp_p
 
 
 def test_prepare_then_apply_matches_plain_apply(spark, tmp_path):
-    """r21 prepare/apply(prepared=) split: applying a pre-materialized
-    batch handle must commit exactly what the one-call apply commits,
-    and the branch path must accept handles the same way."""
+    """apply takes a raw batch or a prepare() handle as its one batch
+    argument: applying a pre-materialized handle must commit exactly
+    what the one-call apply commits, on main and on a branch."""
     from proof_of_concept___cdc_w_iceberg_spark.cdc.branches import (
         BranchedMirror,
     )
@@ -141,7 +141,7 @@ def test_prepare_then_apply_matches_plain_apply(spark, tmp_path):
 
     m2 = BranchedMirror(spark, str(tmp_path / "prepped"), keys=["k"])
     m2.init(base)
-    m2.apply(prepared=m2.prepare(changes))
+    m2.apply(m2.prepare(changes))
     prepped = sorted(
         map(tuple, m2.read_ref("main").drop("__bucket").collect()))
     assert plain == prepped
@@ -149,14 +149,7 @@ def test_prepare_then_apply_matches_plain_apply(spark, tmp_path):
     m3 = BranchedMirror(spark, str(tmp_path / "branch"), keys=["k"])
     m3.init(base)
     m3.branch_create("audit")
-    m3.apply_to_branch("audit", prepared=m3.prepare(changes))
+    m3.apply_to_branch("audit", m3.prepare(changes))
     branched = sorted(
         map(tuple, m3.read_ref("audit").drop("__bucket").collect()))
     assert plain == branched
-
-    # apply without either argument must refuse loudly
-    try:
-        m3.apply()
-        raise AssertionError("apply() with no batch must raise")
-    except ValueError:
-        pass

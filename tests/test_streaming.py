@@ -685,7 +685,8 @@ def test_sessionizer_overdue_timeout_closes_inline():
     assert at_boundary.armed == t0 // 1_000 + gap // 1_000
 
 
-def test_apply_batch_job_budget_and_replay_collapse(spark, tmp_path):
+def test_apply_batch_job_budget_and_replay_collapse(spark, tmp_path,
+                                                   jobs_in_group):
     """One micro-batch commit runs at most 7 Spark jobs: the dead-letter
     probe, the collect of the touched buckets over the raw batch, then
     the rebalanced write with the compaction inline — no separate dedup
@@ -693,8 +694,6 @@ def test_apply_batch_job_budget_and_replay_collapse(spark, tmp_path):
     inside the batch collapse in the latest-wins compaction, an empty
     batch is not counted as applied, and a batch whose keys land in
     some of the mirror's buckets rewrites only those."""
-    import uuid
-
     snap = spark.range(200).select(
         F.col("id").alias("k"),
         F.concat(F.lit("n"), F.col("id")).alias("name"),
@@ -710,15 +709,7 @@ def test_apply_batch_job_budget_and_replay_collapse(spark, tmp_path):
     batch = encode_envelope(events)
     batch = batch.unionByName(batch)  # every event delivered twice
 
-    sc = spark.sparkContext
-    group = f"apply-batch-{uuid.uuid4().hex}"
-    sc.setJobGroup(group, group)
-    try:
-        pipe._apply_batch(batch, 0)
-    finally:
-        sc.setLocalProperty("spark.jobGroup.id", None)
-        sc.setLocalProperty("spark.job.description", None)
-    n_jobs = len(sc.statusTracker().getJobIdsForGroup(group))
+    _, n_jobs = jobs_in_group(lambda: pipe._apply_batch(batch, 0))
     assert n_jobs <= 7, f"one commit ran {n_jobs} Spark jobs"
     assert pipe.batches_applied == 1
 
@@ -756,11 +747,10 @@ def test_apply_batch_job_budget_and_replay_collapse(spark, tmp_path):
     assert mirror_diff(pipe.mirror(), expected).count() == 0
 
 
-def test_dead_letters_build_without_spark_jobs(spark, tmp_path):
+def test_dead_letters_build_without_spark_jobs(spark, tmp_path,
+                                                 jobs_in_group):
     """The dead-letter table is read with its declared schema: building
     the read runs no schema-inference job and batch_id is a LONG."""
-    import uuid
-
     pipe = StreamingCdcPipeline(spark, workdir=str(tmp_path / "pipe"))
     pipe.init_mirror(spark.range(10).select(
         F.col("id").alias("k"), F.lit("n").alias("name"),
@@ -772,15 +762,8 @@ def test_dead_letters_build_without_spark_jobs(spark, tmp_path):
         spark.createDataFrame([(99, "{not json")], "key long, value string"))
     pipe._apply_batch(batch, 3)
 
-    sc = spark.sparkContext
-    group = f"dlq-read-{uuid.uuid4().hex}"
-    sc.setJobGroup(group, group)
-    try:
-        dlq = pipe.dead_letters()
-    finally:
-        sc.setLocalProperty("spark.jobGroup.id", None)
-        sc.setLocalProperty("spark.job.description", None)
-    assert sc.statusTracker().getJobIdsForGroup(group) == []
+    dlq, n_jobs = jobs_in_group(pipe.dead_letters)
+    assert n_jobs == 0
     assert dlq.schema.simpleString() == \
         "struct<key:bigint,value:string,batch_id:bigint>"
     assert [tuple(r) for r in dlq.collect()] == [(99, "{not json", 3)]
