@@ -422,6 +422,37 @@ def _cache_state(sf_dir: str) -> dict:
     }
 
 
+def _box_stamp(spark) -> dict:
+    """Which box and session produced the run, so runs from different
+    boxes or core counts are never compared as one: ``cpus`` is the
+    core count of Spark's ``local[N]`` master (SPARK_GRAFT_CPUS),
+    ``nproc`` the cores this process may run on, ``pyspark`` the
+    library version, and ``host`` a fingerprint of the host name, CPU
+    model and memory size."""
+    import platform
+
+    import pyspark
+
+    master = spark.sparkContext.master
+    m = re.fullmatch(r"local\[(\d+)\]", master)
+    model = ""
+    try:
+        with open("/proc/cpuinfo") as f:
+            model = next((line.split(":", 1)[1].strip() for line in f
+                          if line.startswith("model name")), "")
+    except OSError:
+        pass
+    mem = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES")
+    host = hashlib.sha1(
+        f"{platform.node()}|{model}|{mem}".encode()).hexdigest()[:12]
+    return {
+        "cpus": int(m.group(1)) if m else master,
+        "nproc": len(os.sched_getaffinity(0)),
+        "pyspark": pyspark.__version__,
+        "host": host,
+    }
+
+
 def _prev_timings(sf: float) -> dict[str, float]:
     """Per-query timings from the PREVIOUS run's BENCH_DETAIL.json (the
     on-disk artifact this run is about to overwrite). Used to spot
@@ -882,6 +913,7 @@ def main() -> None:
     if ratio is not None:
         cache_state["calib_vs_floor"] = ratio
     spark = get_spark("poc_cdc_bench")
+    cache_state.update(_box_stamp(spark))
     qs = registry.queries()
 
     # Warm the session (JVM/codegen) AND the page cache: count every

@@ -12,9 +12,12 @@ Reference semantics being reproduced (SURVEY.md §2.10):
 Scale notes: compaction is one shuffle on the merge keys; the apply
 join shuffles target+compacted-batch on the same keys. On a real
 cluster the target table would be bucketed by key so the per-batch
-merge co-locates; change batches are tiny relative to the mirror, so
-AQE turns the batch side into a broadcast. No Python in the path —
-everything is Catalyst-planned DataFrame ops.
+merge co-locates. Change batches are tiny relative to the mirror: the
+mirror merge (``merge_staged`` in cdc/bucketed.py) broadcasts the
+batch's key side when its collected row count fits
+spark.sql.autoBroadcastJoinThreshold (``_fits_broadcast``) and leaves
+a larger batch to the planner's sort-merge join. No Python in the
+path — everything is Catalyst-planned DataFrame ops.
 """
 
 from __future__ import annotations
@@ -80,41 +83,22 @@ def apply_changes(target: DataFrame, changes: DataFrame, keys: list[str],
 
 def upsert_compacted(target: DataFrame, latest: DataFrame, keys: list[str],
                      op_col: str = "op",
-                     routed: DataFrame | None = None,
                      key_rows: DataFrame | None = None) -> DataFrame:
     """The merge half of ``apply_changes`` over an ALREADY-compacted
-    (one row per key) batch. Mirror apply paths that persist the
-    compacted batch up front (versioned/bucketed/specs) call this
-    directly so the batch's window shuffle runs once, not re-planned
-    inside every merge (the old shape passed the compacted batch back
-    through ``apply_changes``, which re-ran ``compact_latest`` on it —
-    an identity, but a second batch-sized Exchange+Sort per commit).
-
-    ``routed``: an optional re-layout of the SAME batch rows (e.g.
-    repartitioned by bucket for the staged write). Only the appended
-    upsert images are drawn from it; the anti-join's broadcast side
-    stays on ``latest`` so building the broadcast never executes the
-    routing exchange. With ``routed`` the anti-join's batch side is
-    broadcast EXPLICITLY (r21, ADVICE item): the staged-write callers'
-    "survivors never shuffle" invariant relied on AQE size estimation,
-    and a batch above the broadcast threshold would silently degrade
-    to a sort-merge join — shuffling the full survivor leg and making
-    the ``routed`` re-layout redundant. Those callers persist the
-    compacted batch up front (``PreparingMirror.prepare`` in
-    cdc/bucketed.py), so the broadcast is of a bounded,
-    already-materialized relation.
-    Without ``routed`` (the generic ``apply_changes`` path, where no
-    caller has bounded the batch) the planner keeps the choice.
+    (one row per key) batch: drop every touched key from ``target``,
+    append the surviving latest images. The mirror merge
+    (``merge_staged``) calls it directly, so the batch's window shuffle
+    runs once instead of being re-planned by ``apply_changes`` around
+    a compaction that is already done.
 
     ``key_rows``: a relation holding the batch's keys, repeats allowed
     (e.g. the raw batch ``latest`` was compacted from, which has the
     same key set). The anti-join reads its keys instead of ``latest``'s,
     so an un-persisted compaction's window shuffle is planned once, for
-    the upserts, not a second time for the anti-join."""
+    the upserts, not a second time for the anti-join. A broadcast hint
+    on it is kept."""
     touched = (latest if key_rows is None else key_rows).select(
         *[F.col(k).alias(f"__t_{k}") for k in keys])
-    if routed is not None:
-        touched = F.broadcast(touched)
     # Null-safe anti join (still a hash equi-join): a plain-equality
     # anti join can never drop a NULL-keyed row, which would break the
     # diff/apply round-trip law for NULL keys.
@@ -123,8 +107,7 @@ def upsert_compacted(target: DataFrame, latest: DataFrame, keys: list[str],
         [F.col(k).eqNullSafe(F.col(f"__t_{k}")) for k in keys],
     )
     survivors = target.join(touched, cond, "left_anti")
-    src = latest if routed is None else routed
-    upserts = src.filter(F.col(op_col) != "d").select(*target.columns)
+    upserts = latest.filter(F.col(op_col) != "d").select(*target.columns)
     return survivors.unionByName(upserts)
 
 

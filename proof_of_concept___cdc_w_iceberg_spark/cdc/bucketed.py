@@ -98,6 +98,49 @@ def _fits_broadcast(df: DataFrame, rows: int) -> bool:
     return 0 <= rows * row_bytes <= conf.autoBroadcastJoinThreshold()
 
 
+def _leaf_files(root: str):
+    """(leaf partition dir relative to ``root``, its parquet file names)
+    for every leaf holding data, at any partition depth."""
+    for d, _dirs, files in os.walk(root):
+        pq = {f for f in files if f.endswith(".parquet")}
+        if pq and d != root and "=" in os.path.basename(d):
+            yield os.path.relpath(d, root), pq
+
+
+def merge_staged(subset: DataFrame, latest: DataFrame, key_rows: DataFrame,
+                 n_rows: int, keys: list[str], part_cols: list[str],
+                 staged: str, op_col: str = "op") -> set[str]:
+    """The one mirror merge: rewrite the touched partitions ``subset``
+    with the compacted batch ``latest`` into ``staged`` and return the
+    leaf partition dirs written there (relative paths). Both relations
+    carry ``part_cols``; publishing the staged leaves is the caller's.
+
+    The anti-join reads its keys from ``key_rows`` (the batch, or any
+    relation with the same key set), ``n_rows`` rows of it. When those
+    rows fit spark.sql.autoBroadcastJoinThreshold the key side is
+    broadcast, so a batch whose plan carries no size estimate (an
+    RDD-backed frame) still never shuffles the touched partitions by
+    key; a larger batch falls back to the planner's sort-merge join.
+
+    The merged relation (survivors + upserts) goes through one AQE
+    rebalance on the partition columns: at small sizes AQE coalesces
+    it to a few tasks holding whole partitions, so each touched leaf is
+    rewritten as ONE file (no small-file growth per commit); an
+    oversized leaf is split across several writers instead of
+    funnelling through one task. Writing survivors straight from their
+    scan tasks instead leaves several files per leaf, and the scan
+    packs big leaves into one split, so one task writes nearly the
+    whole subset."""
+    key_rows = key_rows.select(*keys)
+    if _fits_broadcast(key_rows, n_rows):
+        key_rows = F.broadcast(key_rows)
+    merged = upsert_compacted(subset, latest, keys, op_col=op_col,
+                              key_rows=key_rows)
+    (merged.hint("rebalance", *part_cols).write.mode("overwrite")
+     .partitionBy(*part_cols).parquet(staged))
+    return {rel for rel, _ in _leaf_files(staged)}
+
+
 class PreparedBatch:
     """A change batch compacted latest-wins and persisted ahead of a
     mirror's ``apply``, with its rows per mirror partition under
@@ -252,8 +295,7 @@ class BucketedMirror(PreparingMirror):
         return reader.parquet(self.path)
 
     def _has_buckets(self) -> bool:
-        return os.path.isdir(self.path) and any(
-            n.startswith(f"{BUCKET_COL}=") for n in os.listdir(self.path))
+        return any(_leaf_files(self.path))
 
     def init(self, snapshot: DataFrame, writers: int | None = None) -> None:
         """Lay the table out in the explicit ``n_buckets``, or in
@@ -301,32 +343,24 @@ class BucketedMirror(PreparingMirror):
             return self._scan().drop(BUCKET_COL)
         return self._empty()
 
-    def touched_buckets(self, changes: DataFrame) -> list[int]:
-        """Distinct buckets of the batch keys — ≤ n_buckets ints, a
-        driver-safe collect regardless of batch size."""
-        return sorted(self._partition_rows(changes, self.n_buckets))
-
     def apply(self, changes: DataFrame | PreparedBatch, op_col: str = "op",
-              tag: str = "batch") -> list[int]:
-        """Merge a change batch, rewriting only touched bucket
-        partitions. Returns the list of buckets rewritten.
+              tag: str = "batch") -> list:
+        """Merge a change batch, rewriting only touched partitions.
+        Returns the touched partitions (``_partition_rows`` keys:
+        buckets, or (date, bucket) pairs), sorted.
 
-        Plan shape: one collect of the batch's rows per bucket, then a
-        single write job chain: compact (1 shuffle on keys) →
-        partition-pruned scan of touched buckets only (filter on the
-        partition column — no data files outside them are read) →
-        anti-join + union → rebalance on the bucket column → staged
-        write of those buckets, swapped in by directory rename.
+        Plan shape: one collect of the batch's rows per partition, then
+        a single write job chain (``merge_staged``): compact (1 shuffle
+        on keys) → partition-pruned scan of touched partitions only →
+        anti-join + union → rebalance on the partition columns → staged
+        write, swapped in leaf by leaf (``_publish``).
 
         The collect reads the raw batch, not its compaction: the
         latest-wins compaction keeps a row per key, so both land in
-        the same buckets, and the compaction is then planned once,
+        the same partitions, and the compaction is then planned once,
         inline in the write, instead of being persisted for the
-        collect. The anti-join reads its keys from the raw batch too.
-        The collected row count sizes that key side: when it fits
-        spark.sql.autoBroadcastJoinThreshold it is broadcast, so a
-        batch whose plan carries no size estimate (an RDD-backed frame)
-        still never shuffles the touched buckets by key.
+        collect. The anti-join reads its keys from the raw batch too,
+        and the collected row count gates their broadcast.
 
         ``changes`` may also be a ``prepare`` handle: its compaction and
         collect already ran, the merge reads them, and apply releases
@@ -342,104 +376,78 @@ class BucketedMirror(PreparingMirror):
             self._partition_rows(changes, n), op_col, tag)
 
     def _merge(self, latest: DataFrame, batch: DataFrame,
-               rows: dict[int, int], op_col: str, tag: str) -> list[int]:
+               rows: dict, op_col: str, tag: str) -> list:
         """apply() over the compacted batch ``latest``, the relation
         ``batch`` it was compacted from, and ``batch``'s rows per
-        bucket."""
+        partition."""
         touched = sorted(rows)
         if not touched:
             return []
-        key_rows = batch.select(*self.keys)
-        if _fits_broadcast(key_rows, sum(rows.values())):
-            key_rows = F.broadcast(key_rows)
         if self._has_buckets():
-            # BUCKET_COL kept: the merged relation is written
-            # partitioned by it.
-            subset = self._scan().filter(F.col(BUCKET_COL).isin(touched))
+            # Partition columns kept: the merged relation is written
+            # partitioned by them.
+            subset = self._scan().filter(self._touched_filter(touched))
         else:
             subset = self._with_bucket(self._empty())
-        # The merged relation (survivors + upserts) goes through one
-        # AQE rebalance on the bucket column: at small sizes AQE
-        # coalesces it to a few tasks holding whole buckets, so each
-        # touched bucket is rewritten as ONE file (no small-file
-        # growth per commit); an oversized bucket is split across
-        # several writers instead of funnelling through one task.
-        # Writing survivors from their scan tasks instead leaves
-        # several files per bucket, and the scan packs the big ones
-        # into one split, so one task writes nearly the whole
-        # mirror.
-        merged = upsert_compacted(
-            subset, self._with_bucket(latest), self.keys, op_col=op_col,
-            key_rows=key_rows)
         # Stage before overwriting partitions we are also reading
         # from — the parquet-table analogue of Iceberg's snapshot
         # commit.
         staged = f"{self.path}_{tag}_staged"
-        (merged.hint("rebalance", BUCKET_COL).write.mode("overwrite")
-         .partitionBy(BUCKET_COL).parquet(staged))
-        # Publish = per-partition directory swap of the staged commit
-        # (r20, guide §1.2/§6): the old path re-READ the staged table,
-        # re-SHUFFLED it by bucket, and re-WROTE every staged byte
-        # through dynamic partition overwrite — a full second write job
-        # whose only effect a directory rename already has.
-        # FILESYSTEM ASSUMPTION (r21, VERDICT item 8): os.rename is an
-        # atomic, O(1) metadata move on the POSIX filesystems this
-        # local lake emulates. On an object store (the 100 TB
-        # deployment surface) directory "rename" is copy+delete and
-        # NON-atomic — a production port must publish through the
-        # catalog's pointer swap (Iceberg metadata commit) or an
-        # atomic-rename-capable layer (HDFS, Azure ADLS Gen2),
-        # exactly like the manifest swap in cdc/versioned.py.
-        # This is the
-        # same swap discipline Iceberg's commit applies at the metadata
-        # pointer; content is byte-identical (the staged files ARE the
-        # files). The out-bucket set comes from the staged dir listing,
-        # not a collect job.
-        out_buckets = {
-            int(n.split("=", 1)[1]) for n in os.listdir(staged)
-            if n.startswith(f"{BUCKET_COL}=")
-        }
-        for b in out_buckets:
-            self._drop_partition(b)
-            os.rename(os.path.join(staged, f"{BUCKET_COL}={b}"),
-                      os.path.join(self.path, f"{BUCKET_COL}={b}"))
-        # A bucket whose rows were all deleted writes nothing to the
-        # staged dir and must be cleared explicitly or its old files
-        # survive.
-        for b in set(touched) - out_buckets:
-            self._drop_partition(b)
-        shutil.rmtree(staged, ignore_errors=True)
+        written = merge_staged(
+            subset, self._with_bucket(latest), batch, sum(rows.values()),
+            self.keys, self._partition_cols(), staged, op_col)
+        self._publish(staged, written, {self._leaf(p) for p in touched})
         return touched
 
-    def _drop_partition(self, bucket: int) -> None:
-        part_dir = os.path.join(self.path, f"{BUCKET_COL}={bucket}")
-        # Local-fs mirror in tests; on HDFS/S3A this is one
-        # FileSystem.delete of the partition dir.
-        shutil.rmtree(part_dir, ignore_errors=True)
+    def _touched_filter(self, touched: list):
+        """Partition-pruning predicate over the touched partitions."""
+        return F.col(BUCKET_COL).isin(touched)
 
-    def partition_files(self) -> dict[int, set[str]]:
-        """Parquet file names per bucket dir — test/observability hook
-        for asserting which partitions a batch physically rewrote."""
-        out: dict[int, set[str]] = {}
-        if not os.path.isdir(self.path):
-            return out
-        for name in os.listdir(self.path):
-            if not name.startswith(f"{BUCKET_COL}="):
-                continue
-            b = int(name.split("=", 1)[1])
-            full = os.path.join(self.path, name)
-            out[b] = {f for f in os.listdir(full) if f.endswith(".parquet")}
+    def _leaf(self, part) -> str:
+        """Relative leaf dir of one ``_partition_rows`` key."""
+        vals = part if isinstance(part, tuple) else (part,)
+        return os.path.join(*(f"{c}={v}" for c, v in
+                              zip(self._partition_cols(), vals)))
+
+    def _publish(self, staged: str, written: set[str],
+                 touched: set[str]) -> None:
+        """Swap the staged leaves in, one directory rename each, and
+        clear touched leaves the merge left empty: a leaf whose rows
+        were all deleted writes nothing to the staged dir, and its old
+        files would otherwise survive. Content is byte-identical (the
+        staged files ARE the files), and no second read+shuffle+write
+        job runs.
+
+        FILESYSTEM ASSUMPTION: os.rename is an atomic, O(1) metadata
+        move on the POSIX filesystems this local lake emulates. On an
+        object store directory "rename" is copy+delete and NON-atomic —
+        a production port must publish through the catalog's pointer
+        swap (Iceberg metadata commit) or an atomic-rename-capable
+        layer (HDFS, Azure ADLS Gen2), like the manifest commit in
+        cdc/versioned.py."""
+        for rel in written:
+            target = os.path.join(self.path, rel)
+            shutil.rmtree(target, ignore_errors=True)
+            os.makedirs(os.path.dirname(target), exist_ok=True)
+            os.rename(os.path.join(staged, rel), target)
+        for rel in touched - written:
+            shutil.rmtree(os.path.join(self.path, rel), ignore_errors=True)
+        shutil.rmtree(staged, ignore_errors=True)
+
+    def partition_files(self) -> dict:
+        """Parquet file names per leaf partition, keyed by bucket (or by
+        (date dir value, bucket)) — test/observability hook for
+        asserting which partitions a batch physically rewrote."""
+        out: dict = {}
+        for rel, files in _leaf_files(self.path):
+            *outer, bucket = [p.split("=", 1)[1] for p in rel.split(os.sep)]
+            out[(*outer, int(bucket)) if outer else int(bucket)] = files
         return out
 
     def _leaf_partitions(self) -> dict[str, set[str]]:
         """Relative leaf partition dir -> parquet file names, for any
         partition depth (bucket, or date/bucket)."""
-        out: dict[str, set[str]] = {}
-        for root, _dirs, files in os.walk(self.path):
-            pq = {f for f in files if f.endswith(".parquet")}
-            if pq and "=" in os.path.basename(root):
-                out[os.path.relpath(root, self.path)] = pq
-        return out
+        return dict(_leaf_files(self.path))
 
     def compact(self, max_files: int = 1) -> dict[str, tuple[int, int]]:
         """Small-file maintenance: rewrite every leaf partition holding
@@ -529,104 +537,19 @@ class TwoLevelMirror(BucketedMirror):
         super().__init__(spark, path, keys, n_buckets, order_cols)
         self.date_col = date_col
 
-    def _has_buckets(self) -> bool:
-        if not os.path.isdir(self.path):
-            return False
-        for name in os.listdir(self.path):
-            if name.startswith(f"{self.date_col}="):
-                full = os.path.join(self.path, name)
-                if any(n.startswith(f"{BUCKET_COL}=") for n in os.listdir(full)):
-                    return True
-        return False
-
     def _partition_cols(self) -> list[str]:
         return [self.date_col, BUCKET_COL]
 
-    def touched_partitions(self, changes: DataFrame) -> list[tuple]:
-        """Distinct (date, bucket) pairs of the batch — bounded by
-        |batch dates| × n_buckets, a driver-safe collect."""
-        return sorted(self._partition_rows(changes, self.n_buckets))
-
     def _partition_rows(self, df: DataFrame, n: int) -> dict:
-        """Rows of ``df`` per (date, bucket) pair under ``n`` buckets."""
+        """Rows of ``df`` per (date, bucket) pair under ``n`` buckets —
+        bounded by |batch dates| × n, a driver-safe collect."""
         rows = (df.groupBy(F.col(self.date_col),
                            bucket_expr(self.keys, n).alias(BUCKET_COL))
                 .count().collect())
         return {(r[0], r[1]): r[2] for r in rows}
 
-    def apply(self, changes: DataFrame | PreparedBatch, op_col: str = "op",
-              tag: str = "batch") -> list[tuple]:
-        """Two-level partition-scoped merge: compact → scan only the
-        (batch dates) × (touched buckets) partitions → anti-join +
-        union → dynamic overwrite of exactly those partitions, with
-        explicit clearing of emptied ones. Returns the touched pairs.
-        ``changes``: the raw batch or a ``prepare`` handle."""
-        # The compaction is persisted (one execution for the pair
-        # collect and the merge) and the staged commit published by
-        # per-partition directory swap instead of a second
-        # read+shuffle+write job.
-        with self._batch(changes) as batch:
-            latest = batch.latest
-            touched = sorted(self._rows(batch, self.n_buckets))
-            if not touched:
-                return []
-            dates = sorted({d for d, _ in touched})
-            buckets = sorted({b for _, b in touched})
-            if self._has_buckets():
-                subset = (self._scan()
-                          .filter(F.col(self.date_col).isin(dates)
-                                  & F.col(BUCKET_COL).isin(buckets))
-                          .drop(BUCKET_COL))
-            else:
-                subset = self._empty()
-            # upsert_compacted (not apply_changes): the batch arrives
-            # compacted+persisted, so the merge plans ONE batch window
-            # (r20 wave 7). The staged write KEEPS the clustering
-            # exchange here, unlike BucketedMirror — measured (r20,
-            # interleaved A/B at sf0.1): the survivors-never-shuffle
-            # shape on the date x bucket GRID writes through ~3x more
-            # tasks with a per-task dynamic-partition sort and 2x the
-            # files, landing ~2x SLOWER warm (6.8-8.6 s vs 3.1-4.9 s);
-            # the 112-leaf grid gives the clustered write plenty of
-            # writer parallelism, so the single-writer-per-leaf concern
-            # that motivated the flat mirrors' shape does not bite.
-            merged = upsert_compacted(subset, latest, self.keys,
-                                      op_col=op_col)
-            staged = f"{self.path}_{tag}_staged"
-            (self._with_bucket(merged)
-             .repartition(self.date_col, BUCKET_COL)
-             .write.mode("overwrite")
-             .partitionBy(self.date_col, BUCKET_COL).parquet(staged))
-        out_parts = set()
-        for dname in os.listdir(staged):
-            if not dname.startswith(f"{self.date_col}="):
-                continue
-            d = dname.split("=", 1)[1]
-            for bname in os.listdir(os.path.join(staged, dname)):
-                if not bname.startswith(f"{BUCKET_COL}="):
-                    continue
-                out_parts.add((d, int(bname.split("=", 1)[1])))
-                target = os.path.join(self.path, dname, bname)
-                shutil.rmtree(target, ignore_errors=True)
-                os.makedirs(os.path.join(self.path, dname), exist_ok=True)
-                os.rename(os.path.join(staged, dname, bname), target)
-        # touched_partitions() yields the date values as read back from
-        # parquet (native types); the staged dir names are their string
-        # forms — compare stringified.
-        touched_str = {(str(d), b) for d, b in touched}
-        for d, b in touched_str - {(str(d), b) for d, b in out_parts}:
-            shutil.rmtree(
-                os.path.join(self.path, f"{self.date_col}={d}",
-                             f"{BUCKET_COL}={b}"),
-                ignore_errors=True)
-        shutil.rmtree(staged, ignore_errors=True)
-        return touched
-
-    def partition_files(self) -> dict[tuple, set[str]]:  # type: ignore[override]
-        """(date, bucket) -> parquet file names."""
-        out: dict[tuple, set[str]] = {}
-        for rel, files in self._leaf_partitions().items():
-            date_part, bucket_part = rel.split(os.sep)
-            out[(date_part.split("=", 1)[1],
-                 int(bucket_part.split("=", 1)[1]))] = files
-        return out
+    def _touched_filter(self, touched: list):
+        """(batch dates) × (touched buckets): the grid partition
+        pruning can express; its untouched pairs rewrite unchanged."""
+        return (F.col(self.date_col).isin(sorted({d for d, _ in touched}))
+                & F.col(BUCKET_COL).isin(sorted({b for _, b in touched})))

@@ -10,10 +10,13 @@ snapshot ledger on top of the same bucket layout:
 
 - immutable data: each commit writes ONLY its touched buckets under a
   fresh ``data/commit_{n}/`` directory; files are never mutated;
-- manifest per version: ``manifests/v{n}.json`` maps bucket → data
-  directory. Untouched buckets point at files written by EARLIER
-  commits — the same file-reuse that makes Iceberg snapshots cheap
-  (a commit costs O(touched buckets), never O(|mirror|));
+- manifest per version: ``manifests/v{n}.json`` maps spec-qualified
+  bucket labels ``"{spec}:{b}"`` → data directory and records the
+  table's bucket count as ``spec`` (sized at ``init`` like a
+  ``BucketedMirror``'s; cdc/specs.py evolves it). Untouched buckets
+  point at files written by EARLIER commits — the same file-reuse
+  that makes Iceberg snapshots cheap (a commit costs O(touched
+  buckets), never O(|mirror|));
 - the manifest write is the commit point (Iceberg's metadata-pointer
   swap): readers of version n never observe a half-written commit,
   and old versions remain fully readable because nothing they
@@ -29,19 +32,33 @@ from __future__ import annotations
 import json
 import os
 import re
+import threading
+import uuid
 
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from .apply import upsert_compacted
-from .bucketed import BUCKET_COL, PreparedBatch, PreparingMirror, bucket_expr
+from .bucketed import (
+    BUCKET_COL,
+    UNSIZED_BUCKETS,
+    PreparedBatch,
+    PreparingMirror,
+    bucket_expr,
+    merge_staged,
+    sized_bucket_count,
+)
 from .diff import table_changes
 
 # Strict manifest-file name parse (r16 advice): a stray
 # ``v2.json.bak`` or editor droppings in manifests/ must be IGNORED,
 # not crash every versions() walk with ValueError on int().
 _MANIFEST_RE = re.compile(r"^v(\d+)\.json$")
+
+
+def _parse_label(label: str) -> tuple[int, int]:
+    """A manifest entry label "{n}:{b}" -> (spec n, bucket b)."""
+    n, b = label.split(":", 1)
+    return int(n), int(b)
 
 
 class CommitConflictError(RuntimeError):
@@ -58,10 +75,15 @@ class CommitConflictError(RuntimeError):
 class SnapshotMirror(PreparingMirror):
     """Versioned bucketed mirror: ``init`` → v0, each ``apply`` → a new
     version; ``read(version=k)`` time-travels; ``diff(i, j)`` is the
-    incremental read (changelog scan) between two snapshots."""
+    incremental read (changelog scan) between two snapshots.
+
+    ``n_buckets`` is the bucket count ``init`` lays v0 out in; None
+    sizes it to the snapshot (``sized_bucket_count``). After ``init``
+    the manifest's ``spec`` is authoritative: every merge hashes keys
+    under its base manifest's spec, whatever this constructor got."""
 
     def __init__(self, spark: SparkSession, path: str, keys: list[str],
-                 n_buckets: int = 16,
+                 n_buckets: int | None = None,
                  order_cols: list[str] = ("ts_ms", "off")):
         self.spark = spark
         self.path = path
@@ -131,9 +153,21 @@ class SnapshotMirror(PreparingMirror):
         with open(self._manifest_path(version)) as f:
             return json.load(f)
 
+    def _entries(self, manifest: dict) -> dict[str, str]:
+        """The spec-qualified data entries ("{n}:{b}" -> dir)."""
+        return dict(manifest["buckets"])
+
+    def _bucket_count(self) -> int:
+        """A batch prepared now is counted under the head's spec, or
+        under ``init``'s count while no version is committed."""
+        vs = self.versions()
+        if vs:
+            return self._load_manifest(vs[-1])["spec"]
+        return self.n_buckets or UNSIZED_BUCKETS
+
     def _commit(self, buckets: dict[str, str], schema_json: str,
                 parent: int | None = None, linear: bool = False,
-                extra: dict | None = None) -> int:
+                spec: int | None = None) -> int:
         """Write the next manifest — the atomic commit point.
 
         Version allocation is OPTIMISTIC-CONCURRENCY safe (the Iceberg
@@ -157,7 +191,13 @@ class SnapshotMirror(PreparingMirror):
         commits: version numbers legitimately interleave across refs)
         a collision is pure allocation and the next number is retried;
         the lost-update guard for those lives at the ref swap
-        (``BranchedMirror.set_ref`` CAS)."""
+        (``BranchedMirror.set_ref`` CAS).
+
+        ``spec`` is the bucket count recorded as the manifest's top-level
+        ``spec`` field; None carries the parent's forward (a merge
+        writes under its base's spec)."""
+        if spec is None:
+            spec = self._load_manifest(parent)["spec"]
         vs = self._all_versions()  # tombstones hold their numbers
         version = (vs[-1] + 1) if vs else 0
         while True:
@@ -165,12 +205,10 @@ class SnapshotMirror(PreparingMirror):
                 raise CommitConflictError(
                     f"head moved past v{parent} (next free version is "
                     f"v{version}): bucket map is stale — re-read and re-merge")
-            # ``extra``: subclass metadata riders (cdc/specs.py stores
-            # the table's CURRENT partition spec as a TOP-LEVEL field —
-            # r16 advice: a sentinel entry inside the buckets map would
-            # break any base consumer that treats bucket values as data
-            # paths). Core keys always win over a rider collision.
-            manifest = {**(extra or {}), "version": version,
+            # The spec rides as a TOP-LEVEL field: a sentinel entry
+            # inside the buckets map would break any consumer that
+            # treats bucket values as data paths.
+            manifest = {"version": version, "spec": spec,
                         "schema": schema_json, "buckets": buckets}
             if parent is not None:
                 manifest["base"] = parent
@@ -183,12 +221,9 @@ class SnapshotMirror(PreparingMirror):
             # of the FileExistsError the allocation loop handles. Same
             # uniquifier discipline as _write_ref's tmp (r16) and the
             # data-dir names.
-            import threading
-            import uuid as _uuid
-
             tmp = (self._manifest_path(version)
                    + f".tmp{os.getpid()}.{threading.get_ident()}."
-                   + _uuid.uuid4().hex[:8])
+                   + uuid.uuid4().hex[:8])
             with open(tmp, "w") as f:
                 json.dump(manifest, f)
             try:
@@ -229,47 +264,52 @@ class SnapshotMirror(PreparingMirror):
 
     # --- data IO ---
 
+    def _commit_dir(self, version: int) -> str:
+        """A fresh data dir, data/commit_{version}_{uniq}. The
+        uniquifier makes concurrent writers' data dirs disjoint (the
+        manifest carries full paths, so readers and the orphan vacuum
+        never depend on the dir NAME matching the version the writer
+        eventually wins in ``_commit``)."""
+        return os.path.join(self.path, "data",
+                            f"commit_{version:05d}_{uuid.uuid4().hex[:8]}")
+
+    @staticmethod
+    def _labelled(commit_dir: str, leaves, spec: int) -> dict[str, str]:
+        """Manifest entries for the ``__bucket=b`` leaves written under
+        ``commit_dir``."""
+        return {f"{spec}:{rel.split('=', 1)[1]}": os.path.join(commit_dir, rel)
+                for rel in leaves}
+
     def _write_commit_data(self, df: DataFrame, version: int,
-                           n_buckets: int | None = None,
-                           cluster: bool = True) -> dict[str, str]:
-        """Write df's buckets under data/commit_{version}_{uniq};
-        return bucket → dir entries for the buckets that produced
-        files. The uniquifier makes concurrent writers' data dirs
-        disjoint (the manifest carries full paths, so readers and the
-        orphan vacuum never depend on the dir NAME matching the
-        version the writer eventually wins in ``_commit``).
-        ``n_buckets`` overrides the layout spec (cdc/specs.py writes
-        under the manifest's CURRENT spec, not the constructor's).
+                           spec: int) -> dict[str, str]:
+        """Write all of ``df`` in ``spec`` buckets, one file per bucket
+        (Iceberg's hash distribution-mode); return its manifest
+        entries."""
+        commit_dir = self._commit_dir(version)
+        (df.withColumn(BUCKET_COL, bucket_expr(self.keys, spec))
+         .repartition(BUCKET_COL)
+         .write.mode("overwrite").partitionBy(BUCKET_COL).parquet(commit_dir))
+        return self._labelled(
+            commit_dir,
+            (n for n in os.listdir(commit_dir)
+             if n.startswith(f"{BUCKET_COL}=")),
+            spec)
 
-        ``cluster=False`` skips the full-relation Exchange before the
-        write (r20, guide §2.4/§8): a COW merge's survivor leg was READ
-        from per-bucket data dirs, so its rows already sit in
-        bucket-aligned scan tasks — re-shuffling the whole merged
-        relation by a 16-value key moved every surviving byte over the
-        network (and, at 100 TB, serialized each 25 GB bucket through
-        ONE writer task) only to recreate the clustering the scan
-        already had. With the shuffle skipped, partitionBy still routes
-        each row to its bucket dir; a task holding several buckets'
-        rows just writes several files (manifests map bucket → dir, not
-        bucket → one file). Callers keep the batch leg tidy by routing
-        it alone (a batch-sized exchange) before the union. init-style
-        full loads keep ``cluster=True`` — one clean file per bucket,
-        Iceberg's hash distribution-mode."""
-        import uuid
-
-        commit_dir = os.path.join(
-            self.path, "data",
-            f"commit_{version:05d}_{uuid.uuid4().hex[:8]}")
-        n = self.n_buckets if n_buckets is None else n_buckets
-        to_write = df.withColumn(BUCKET_COL, bucket_expr(self.keys, n))
-        if cluster:
-            to_write = to_write.repartition(BUCKET_COL)
-        (to_write.write.mode("overwrite").partitionBy(BUCKET_COL)
-         .parquet(commit_dir))
-        out: dict[str, str] = {}
-        for name in os.listdir(commit_dir):
-            if name.startswith(f"{BUCKET_COL}="):
-                out[name.split("=", 1)[1]] = os.path.join(commit_dir, name)
+    @staticmethod
+    def _replace(entries: dict[str, str], dropped, written: dict[str, str],
+                 ) -> dict[str, str]:
+        """``entries`` without ``dropped``, plus ``written``. A written
+        label that is still live means the children-partition
+        invariant broke (cdc/specs.py: a coarse entry dies the first
+        time one of its finer buckets is written) — refuse loudly
+        rather than shadow live data."""
+        out = {label: d for label, d in entries.items() if label not in dropped}
+        clash = sorted(out.keys() & written.keys())
+        if clash:
+            raise RuntimeError(
+                f"spec-migration invariant violated: rewrite produced "
+                f"{clash} but live entries exist")
+        out.update(written)
         return out
 
     def _empty(self, schema_json: str) -> DataFrame:
@@ -289,12 +329,15 @@ class SnapshotMirror(PreparingMirror):
     # --- public API ---
 
     def init(self, snapshot: DataFrame) -> int:
-        """Commit v0. Refuses (CommitConflictError) if the ledger
-        already has snapshots — re-initializing a live mirror is the
-        double-CREATE-TABLE race, not an apply."""
-        buckets = self._write_commit_data(snapshot, 0)
-        return self._commit(buckets, snapshot.schema.json(),
-                            parent=-1, linear=True)
+        """Commit v0 in the constructor's bucket count, or in
+        ``sized_bucket_count(snapshot)`` buckets, recorded as the
+        manifest's ``spec``. Refuses (CommitConflictError) if the
+        ledger already has snapshots — re-initializing a live mirror is
+        the double-CREATE-TABLE race, not an apply."""
+        n = self.n_buckets or sized_bucket_count(snapshot)
+        return self._commit(self._write_commit_data(snapshot, 0, n),
+                            snapshot.schema.json(), parent=-1, linear=True,
+                            spec=n)
 
     def read(self, version: int | None = None) -> DataFrame:
         """The mirror as of ``version`` (default: latest) — time travel."""
@@ -353,43 +396,57 @@ class SnapshotMirror(PreparingMirror):
     def _merge_batch(self, batch: PreparedBatch, op_col: str = "op",
                      base_version: int | None = None,
                      max_retries: int = 5) -> int:
-        """apply()'s merge-and-commit loop over a prepared batch."""
+        """apply()'s merge-and-commit loop over a prepared batch: a
+        touched-only COW merge (``merge_staged``, staged straight into
+        the commit's data dir) under the base manifest's spec, across
+        however many specs its live entries span (cdc/specs.py).
+        Affected entries rewrite under the base's spec (lazy
+        migration); the others carry over verbatim (file reuse). The
+        touched set is derived per retry, because the spec may move
+        between attempts.
+
+        A pinned ``base_version`` is the branch-commit shape: version
+        numbers may interleave with other writers, so the commit
+        allocates the next free version instead of demanding parent+1,
+        and a conflict is the caller's to retry (ref CAS)."""
         if max_retries < 1:
             raise ValueError("max_retries must be >= 1")
-        latest = batch.latest
-        touched = {str(b) for b in self._rows(batch, self.n_buckets)}
-        pinned = base_version is not None
+        linear = base_version is None
         last_conflict: CommitConflictError | None = None
         for _ in range(max_retries):
-            base = base_version if pinned else self.current_version()
+            base = self.current_version() if linear else base_version
             m = self._load_manifest(base)
+            spec = m["spec"]
+            rows = self._rows(batch, spec)
+            entries = self._entries(m)
+            # A key in bucket t under ``spec`` lives in bucket t % n of
+            # an n-bucket entry (specs grow by multiples): one
+            # candidate entry per (touched bucket, live spec).
+            touched_mod: dict[int, set[int]] = {}
+            affected = {}
+            for label, d in entries.items():
+                n_e, b_e = _parse_label(label)
+                if n_e not in touched_mod:
+                    touched_mod[n_e] = {t % n_e for t in rows}
+                if b_e in touched_mod[n_e]:
+                    affected[label] = d
+            written: dict[str, str] = {}
+            if rows:
+                commit_dir = self._commit_dir(self.current_version() + 1)
+                subset = self._read_dirs(sorted(affected.values()),
+                                         m["schema"])
+                bucket = bucket_expr(self.keys, spec)
+                leaves = merge_staged(
+                    subset.withColumn(BUCKET_COL, bucket),
+                    batch.latest.withColumn(BUCKET_COL, bucket),
+                    batch.latest, sum(rows.values()), self.keys,
+                    [BUCKET_COL], commit_dir, op_col)
+                written = self._labelled(commit_dir, leaves, spec)
             try:
-                if not touched:
-                    return self._commit(dict(m["buckets"]), m["schema"],
-                                        parent=base, linear=not pinned)
-                subset_dirs = [d for b, d in m["buckets"].items() if b in touched]
-                subset = self._read_dirs(subset_dirs, m["schema"]).drop(BUCKET_COL)
-                # r20 (guide §2.4/§8): survivors stay in their scan
-                # tasks (broadcast anti-join is narrow); only the
-                # BATCH leg is routed by bucket — a batch-sized
-                # exchange — so the staged write needs no full-table
-                # shuffle (cluster=False). The batch arrives already
-                # compacted and persisted (prepare), so the old
-                # second compaction window inside apply_changes is
-                # gone too (upsert_compacted).
-                routed = latest.repartition(
-                    bucket_expr(self.keys, self.n_buckets))
-                merged = upsert_compacted(subset, latest, self.keys,
-                                          op_col=op_col, routed=routed)
-                written = self._write_commit_data(
-                    merged, self.current_version() + 1, cluster=False)
-                buckets = {b: d for b, d in m["buckets"].items()
-                           if b not in touched}
-                buckets.update(written)  # touched-but-now-empty buckets drop
-                return self._commit(buckets, m["schema"],
-                                    parent=base, linear=not pinned)
+                return self._commit(self._replace(entries, affected, written),
+                                    m["schema"], parent=base, linear=linear)
             except CommitConflictError as e:
-                if pinned:
+                if not linear:
                     raise  # branch caller owns the retry (ref CAS)
                 last_conflict = e  # head moved: re-merge from new head
         raise last_conflict

@@ -57,6 +57,23 @@ def test_cache_state_stamp_fields(tmp_path):
     assert "loadavg_1m" in state
 
 
+def test_box_stamp_fields(spark):
+    """The env block names the box and session: Spark's local[] core
+    count, the usable cores, the pyspark version and a host
+    fingerprint; main() merges them into the artifact."""
+    import inspect
+
+    import pyspark
+
+    stamp = bench._box_stamp(spark)
+    assert stamp["cpus"] == spark.sparkContext.defaultParallelism
+    assert stamp["nproc"] == len(os.sched_getaffinity(0))
+    assert stamp["pyspark"] == pyspark.__version__
+    assert len(stamp["host"]) == 12 and stamp == bench._box_stamp(spark)
+    assert "cache_state.update(_box_stamp(spark))" in inspect.getsource(
+        bench.main)
+
+
 def test_cache_state_uses_real_marker_paths(tmp_path):
     # The stamp must flip warm the moment the REAL dedup marker files
     # exist — proving it probes ext/dedup.py's exported paths rather

@@ -11,57 +11,7 @@ from __future__ import annotations
 
 from pyspark.sql import functions as F
 
-from proof_of_concept___cdc_w_iceberg_spark.cdc.apply import (
-    apply_changes,
-    compact_latest,
-    mirror_diff,
-    upsert_compacted,
-)
-from proof_of_concept___cdc_w_iceberg_spark.cdc.bucketed import bucket_expr
-
-
-def _target(spark):
-    rows = [(i, f"n{i}", float(i)) for i in range(40)]
-    rows.append((None, "null_key", -1.0))  # NULL-key row must be droppable
-    return spark.createDataFrame(rows, "k long, name string, bal double")
-
-
-def _changes(spark):
-    return spark.createDataFrame(
-        [
-            (3, "x", 9.9, "u", 100, 1),
-            (3, "x2", 8.8, "u", 200, 2),   # later stamp wins in-compaction
-            (200, "new", 1.0, "c", 100, 3),
-            (7, None, None, "d", 100, 4),
-            (None, None, None, "d", 100, 5),  # NULL-key delete must land
-        ],
-        "k long, name string, bal double, op string, ts_ms long, off long",
-    )
-
-
-def test_upsert_compacted_matches_apply_changes(spark):
-    """upsert_compacted over a pre-compacted batch == apply_changes over
-    the raw batch — the identity the mirror apply paths rely on after
-    dropping the second in-merge compaction window (wave 6)."""
-    target = _target(spark)
-    changes = _changes(spark)
-    expected = apply_changes(target, changes, keys=["k"])
-    latest = compact_latest(changes, ["k"])
-    got = upsert_compacted(target, latest, ["k"])
-    assert mirror_diff(got, expected).count() == 0
-
-
-def test_upsert_compacted_routed_leg_same_rows(spark):
-    """The routed= re-layout (batch repartitioned by bucket for the
-    staged write) must change layout only, never content — including
-    the NULL-key delete whose bucket expression is itself NULL-safe."""
-    target = _target(spark)
-    changes = _changes(spark)
-    latest = compact_latest(changes, ["k"])
-    routed = latest.repartition(bucket_expr(["k"], 8))
-    got = upsert_compacted(target, latest, ["k"], routed=routed)
-    expected = apply_changes(target, changes, keys=["k"])
-    assert mirror_diff(got, expected).count() == 0
+from proof_of_concept___cdc_w_iceberg_spark.cdc.apply import mirror_diff
 
 
 def test_basket_pair_explode_matches_self_join(spark):

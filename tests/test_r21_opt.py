@@ -84,72 +84,3 @@ def test_substr_state_build_materialize_hook_row_preserving(spark):
     assert sorted(map(tuple, g0.collect())) == sorted(map(tuple, g1.collect()))
     assert sorted(map(tuple, h0.collect())) == sorted(map(tuple, h1.collect()))
     assert sorted(map(tuple, r0.collect())) == sorted(map(tuple, r1.collect()))
-
-
-def test_concurrent_commits_same_process_allocate_distinct_versions(spark, tmp_path):
-    """r21 fix: _commit's staging tmp name was pid-only, so two driver
-    THREADS committing concurrently (the wap_race / overlapped
-    wap_publish shape) staged the same file — the winner's
-    link-and-unlink made the loser's os.link die with
-    FileNotFoundError instead of the FileExistsError the allocation
-    loop retries on. With the writer-unique tmp name, N concurrent
-    commits must serialize to N distinct versions with no error."""
-    import threading
-    from concurrent.futures import ThreadPoolExecutor
-
-    from proof_of_concept___cdc_w_iceberg_spark.cdc.versioned import (
-        SnapshotMirror,
-    )
-
-    m = SnapshotMirror(spark, str(tmp_path / "mirror"), keys=["k"])
-    df = spark.createDataFrame([(1, "a")], "k long, v string")
-    m.init(df)
-
-    barrier = threading.Barrier(8)
-
-    def commit(i):
-        barrier.wait()
-        return m._commit({}, df.schema.json(), parent=0, linear=False)
-
-    with ThreadPoolExecutor(max_workers=8) as pool:
-        versions = list(pool.map(commit, range(8)))
-    assert sorted(versions) == list(range(1, 9))
-
-
-def test_prepare_then_apply_matches_plain_apply(spark, tmp_path):
-    """apply takes a raw batch or a prepare() handle as its one batch
-    argument: applying a pre-materialized handle must commit exactly
-    what the one-call apply commits, on main and on a branch."""
-    from proof_of_concept___cdc_w_iceberg_spark.cdc.branches import (
-        BranchedMirror,
-    )
-
-    base = spark.createDataFrame(
-        [(i, f"n{i}", float(i)) for i in range(30)],
-        "k long, name string, bal double",
-    )
-    changes = spark.createDataFrame(
-        [(3, "x", 9.9, "u", 100, 1), (200, "new", 1.0, "c", 100, 2),
-         (7, None, None, "d", 100, 3)],
-        "k long, name string, bal double, op string, ts_ms long, off long",
-    )
-
-    m1 = BranchedMirror(spark, str(tmp_path / "plain"), keys=["k"])
-    m1.init(base)
-    m1.apply(changes)
-    plain = sorted(map(tuple, m1.read_ref("main").drop("__bucket").collect()))
-
-    m2 = BranchedMirror(spark, str(tmp_path / "prepped"), keys=["k"])
-    m2.init(base)
-    m2.apply(m2.prepare(changes))
-    prepped = sorted(
-        map(tuple, m2.read_ref("main").drop("__bucket").collect()))
-    assert plain == prepped
-
-    m3 = BranchedMirror(spark, str(tmp_path / "branch"), keys=["k"])
-    m3.init(base)
-    m3.branch_create("audit")
-    m3.apply_to_branch("audit", m3.prepare(changes))
-    branched = sorted(
-        map(tuple, m3.read_ref("audit").drop("__bucket").collect()))
-    assert plain == branched

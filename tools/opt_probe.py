@@ -126,65 +126,6 @@ def probe_wap_publish():
     toc("final read+count")
 
 
-def probe_mirror_apply_ab(rounds: int = 3):
-    """Interleaved A/B of the staged-commit write (wave 6): OLD shape
-    (apply_changes re-compaction + full-relation repartition(BUCKET))
-    vs NEW shape (upsert_compacted + batch-only routing, cluster
-    skipped). Both stage to a throwaway dir on the SAME initialized
-    mirror; no publish, so rounds are independent."""
-    import shutil
-    import tempfile
-    from proof_of_concept___cdc_w_iceberg_spark.cdc import queries as cq
-    from proof_of_concept___cdc_w_iceberg_spark.cdc.apply import (
-        apply_changes, compact_latest, upsert_compacted)
-    from proof_of_concept___cdc_w_iceberg_spark.cdc.bucketed import (
-        BUCKET_COL, BucketedMirror)
-    print("== mirror staged-write A/B ==")
-    li, changes = cq._scale_mirror_and_changes(spark, SF)
-    keys = ["l_orderkey", "l_linenumber"]
-    path = os.path.join(tempfile.mkdtemp(prefix="probe_ab_"), "mirror")
-    m = BucketedMirror(spark, path, keys=keys, n_buckets=16)
-    m.init(li)
-
-    def stage_old():
-        latest = compact_latest(changes, m.keys, m.order_cols).persist()
-        try:
-            touched = m.touched_buckets(latest)
-            mirror = m.spark.read.parquet(m.path)
-            subset = (mirror.filter(F.col(BUCKET_COL).isin(touched))
-                      .drop(BUCKET_COL))
-            merged = apply_changes(subset, latest, m.keys)
-            staged = f"{m.path}_ab_old"
-            (m._with_bucket(merged).repartition(BUCKET_COL)
-             .write.mode("overwrite").partitionBy(BUCKET_COL).parquet(staged))
-            return staged
-        finally:
-            latest.unpersist()
-
-    def stage_new():
-        latest = compact_latest(changes, m.keys, m.order_cols).persist()
-        try:
-            touched = m.touched_buckets(latest)
-            mirror = m.spark.read.parquet(m.path)
-            subset = mirror.filter(F.col(BUCKET_COL).isin(touched))
-            routed = m._with_bucket(latest).repartition(BUCKET_COL)
-            merged = upsert_compacted(subset, m._with_bucket(latest), m.keys,
-                                      routed=routed)
-            staged = f"{m.path}_ab_new"
-            (merged.write.mode("overwrite")
-             .partitionBy(BUCKET_COL).parquet(staged))
-            return staged
-        finally:
-            latest.unpersist()
-
-    for i in range(rounds):
-        for label, fn in (("old", stage_old), ("new", stage_new)):
-            tic()
-            staged = fn()
-            toc(f"round {i} {label}")
-            shutil.rmtree(staged, ignore_errors=True)
-
-
 def probe_multiprobe_ab(rounds: int = 3):
     """Interleaved A/B of the multiprobe pair relation (wave 7): OLD
     shape (_cell_blocked_pairs candidate distinct + two embedding
@@ -227,7 +168,6 @@ PROBES = {
     "sim_pq": probe_sim_pq,
     "stream_cms": probe_stream_cms,
     "wap_publish": probe_wap_publish,
-    "mirror_ab": probe_mirror_apply_ab,
     "multiprobe_ab": probe_multiprobe_ab,
 }
 
