@@ -1,4 +1,5 @@
-"""Partition-scoped CDC merge — the scale path for the no-Iceberg fallback.
+"""Partition-scoped, merge-on-read CDC mirror — the scale path for the
+no-Iceberg fallback.
 
 The plain fallback (`iceberg.py` merge_into, `streaming/pipeline.py`)
 rewrites the WHOLE mirror per batch: correct, but at 100 TB with a 10 s
@@ -7,24 +8,43 @@ that cost because the Iceberg sink commits equality deletes + new data
 files per snapshot (`connect-iceberg-sink.json:30-33`) — only touched
 data moves.
 
-This module restores that property without Iceberg: the mirror is laid
-out as a parquet table partitioned by a key-hash bucket column, and a
-change batch rewrites ONLY the bucket partitions its keys land in,
-by swapping in freshly written bucket directories. Cost per batch
-becomes O(touched buckets × bucket size), not O(|mirror|):
+This module restores that property without Iceberg. The mirror is a
+BASE parquet table partitioned by a key-hash bucket column plus at most
+one pending DELTA (``_delta/v<gen>``): the latest image of every key
+changed since the last fold, deletes kept as ``__deleted`` tombstones.
+Cost model:
+
+- A commit rewrites only the delta: it compacts (delta ∪ batch)
+  latest-wins, the batch winning, into the next generation and
+  publishes it with one directory rename. It writes O(batch + delta)
+  rows, never the base, and runs two Spark jobs (the compaction's
+  shuffle and the write).
+- ``read()`` is base ⋉̸ (delta keys) ∪ the delta's live rows, with the
+  delta's keys broadcast: one extra job per read while a delta is
+  pending.
+- A FOLD rewrites the base: once the delta holds more than
+  1/``FOLD_DIVISOR`` of the base's rows, or its keys no longer fit a
+  broadcast (``_fits_broadcast``), the commit feeds the delta as a
+  compacted batch through the copy-on-write merge (``merge_staged``),
+  which rewrites ONLY the bucket partitions the delta's keys land in,
+  by swapping in freshly written bucket directories: O(touched buckets
+  × bucket size), not O(|mirror|). An empty or small base (relative to
+  the batch) folds on every commit, and ``compact()`` folds first.
+
+Layout rules:
 
 - Bucket count (``n_buckets=None``): sized at ``init`` to one scan
   split of data per bucket, ``ceil(estimated snapshot bytes /
   spark.sql.files.maxPartitionBytes)``, and recorded in the mirror's
-  sidecar. A bucket smaller than a split buys no read parallelism but
-  still costs one file (and its fixed write cost) per commit that
-  touches it; a bucket larger than a split makes every touched-bucket
-  rewrite move more bytes. So the write amplification of a commit is
-  bounded by one split per touched bucket: a 1 MB mirror is one
-  bucket and each commit rewrites it whole, while a 1 TB mirror is
-  8 192 buckets of 128 MB and a batch touching 100 keys rewrites at
-  most 100 of them. The count is fixed at ``init``; a mirror that
-  outgrows it keeps its buckets and they grow.
+  sidecar with the base's row count. A bucket smaller than a split
+  buys no read parallelism but still costs one file (and its fixed
+  write cost) per fold that touches it; a bucket larger than a split
+  makes every touched-bucket rewrite move more bytes. So the write
+  amplification of a fold is bounded by one split per touched bucket:
+  a 1 MB mirror is one bucket and each fold rewrites it whole, while a
+  1 TB mirror is 8 192 buckets of 128 MB and a delta touching 100 keys
+  rewrites at most 100 of them. The count is fixed at ``init``; a
+  mirror that outgrows it keeps its buckets and they grow.
 - The bucket column is ``pmod(hash(keys), n)`` — deterministic, so
   change rows co-locate with the mirror rows they replace, and the
   per-bucket merge join never sees foreign keys.
@@ -35,7 +55,7 @@ becomes O(touched buckets × bucket size), not O(|mirror|):
 
 At even larger scale the same layout extends to date × bucket
 (``TwoLevelMirror``): the outer date level gives retention drops,
-time-pruned reads, and batch-date pruning on apply; the inner hash
+time-pruned reads, and batch-date pruning on a fold; the inner hash
 bucket keeps the merge partition-scoped. ``compact()`` on either
 layout is the parquet analogue of Iceberg's ``rewrite_data_files``
 small-file maintenance (`connect-iceberg-sink.json:19-29`). On a real
@@ -49,7 +69,8 @@ import json
 import os
 import shutil
 
-from pyspark.sql import DataFrame, SparkSession
+import pyarrow.parquet as pq
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
@@ -59,6 +80,21 @@ BUCKET_COL = "__bucket"
 # Bucket count for a snapshot whose size the planner cannot estimate
 # (e.g. a DataFrame built from a Python list, whose plan is an RDD scan).
 UNSIZED_BUCKETS = 16
+# The pending delta lives in one generation dir, <mirror>/_delta/v<gen>;
+# its rows carry the tombstone flag, and DELTA_META holds its row count.
+DELTA_DIR = "_delta"
+DELETED_COL = "__deleted"
+DELTA_META = "_delta.json"
+# A commit folds the delta into the base once the delta holds more than
+# 1/FOLD_DIVISOR of the base's rows. Picked from the commit times
+# measured against delta size (see CHANGES.md): a delta commit costs a
+# fixed part plus ~5 us per delta row, a fold ~1.3 s at 100k base rows
+# and ~2.7 s at 1M, and 1/16 minimises their mean per commit at 100k.
+FOLD_DIVISOR = 16
+# Helper columns of a delta commit: which side of (delta ∪ batch) a row
+# came from, and the op column a delta carries as a compacted batch.
+_SRC = "__src"
+_FOLD_OP = "__op"
 
 
 def bucket_expr(keys: list[str], n_buckets: int):
@@ -100,11 +136,26 @@ def _fits_broadcast(df: DataFrame, rows: int) -> bool:
 
 def _leaf_files(root: str):
     """(leaf partition dir relative to ``root``, its parquet file names)
-    for every leaf holding data, at any partition depth."""
-    for d, _dirs, files in os.walk(root):
+    for every leaf holding data, at any partition depth. Like Spark's
+    file index, it skips ``_``-prefixed dirs that are not partition
+    dirs (the pending delta)."""
+    for d, dirs, files in os.walk(root):
+        dirs[:] = [x for x in dirs if not x.startswith("_") or "=" in x]
         pq = {f for f in files if f.endswith(".parquet")}
         if pq and d != root and "=" in os.path.basename(d):
             yield os.path.relpath(d, root), pq
+
+
+def _parquet_rows(root: str, leaves) -> int:
+    """Rows in the parquet files of ``leaves`` (dirs relative to
+    ``root``; missing ones count 0), read from the file footers."""
+    n = 0
+    for rel in leaves:
+        d = os.path.join(root, rel)
+        if os.path.isdir(d):
+            n += sum(pq.read_metadata(os.path.join(d, f)).num_rows
+                     for f in os.listdir(d) if f.endswith(".parquet"))
+    return n
 
 
 def merge_staged(subset: DataFrame, latest: DataFrame, key_rows: DataFrame,
@@ -139,6 +190,12 @@ def merge_staged(subset: DataFrame, latest: DataFrame, key_rows: DataFrame,
     (merged.hint("rebalance", *part_cols).write.mode("overwrite")
      .partitionBy(*part_cols).parquet(staged))
     return {rel for rel, _ in _leaf_files(staged)}
+
+
+def _part_value(v):
+    """A ``_partition_key`` value as a ``_partition_rows`` key: a
+    (date, bucket) struct comes back as a Row, i.e. a tuple."""
+    return tuple(v) if isinstance(v, tuple) else v
 
 
 class PreparedBatch:
@@ -214,12 +271,13 @@ class PreparingMirror:
 
 
 class BucketedMirror(PreparingMirror):
-    """A parquet mirror partitioned by key-hash bucket with
-    partition-scoped CDC apply.
+    """A parquet mirror partitioned by key-hash bucket with merge-on-read
+    CDC apply (module docstring: the delta, the fold, the cost model).
 
-    ``init(snapshot)`` lays the table out; ``apply(changes)`` merges a
-    change batch rewriting only touched bucket partitions;
-    ``read()`` returns the logical table (bucket column dropped).
+    ``init(snapshot)`` lays the table out; ``apply(changes)`` commits a
+    change batch to the pending delta, folding it into the touched
+    bucket partitions past the size threshold; ``read()`` returns the
+    logical table (base merged with the delta, bucket column dropped).
 
     ``n_buckets=None`` sizes the bucket count to the snapshot at
     ``init`` (``sized_bucket_count``). Either way ``init`` records the
@@ -267,14 +325,21 @@ class BucketedMirror(PreparingMirror):
         return os.path.join(self.path, "_schema.json")
 
     def _sidecar(self) -> dict | None:
-        """``{"schema": ..., "n_buckets": ...}`` from ``init``; None for
-        a mirror laid out without one (hand-built layouts). A sidecar
-        holding only a schema records no bucket count."""
+        """``{"schema": ..., "n_buckets": ..., "rows": ...}`` from
+        ``init`` (``rows``: the base's row count, kept by every fold);
+        None for a mirror laid out without one (hand-built layouts). A
+        sidecar holding only a schema records no bucket or row count."""
         if not os.path.exists(self._schema_path()):
             return None
         with open(self._schema_path()) as f:
             meta = json.load(f)
         return meta if "schema" in meta else {"schema": meta}
+
+    def _write_sidecar(self, meta: dict) -> None:
+        tmp = self._schema_path() + ".tmp"
+        with open(tmp, "w") as f:
+            json.dump(meta, f)
+        os.replace(tmp, self._schema_path())
 
     def _schema(self) -> T.StructType | None:
         """The row schema from the sidecar; None without one."""
@@ -324,63 +389,207 @@ class BucketedMirror(PreparingMirror):
             raise ValueError(f"writers must be >= 1, got {writers!r}")
         n = self._n_buckets or sized_bucket_count(snapshot)
         cols = self._partition_cols()
-        bucketed = snapshot.withColumn(BUCKET_COL, bucket_expr(self.keys, n))
+        counted = Observation()
+        bucketed = snapshot.withColumn(
+            BUCKET_COL, bucket_expr(self.keys, n)).observe(
+                counted, F.count(F.lit(1)).alias("rows"))
         part = (bucketed.repartition(
                     writers, F.xxhash64(*[F.col(k) for k in self.keys]))
                 if writers is not None else bucketed.repartition(*cols))
         part.write.mode("overwrite").partitionBy(*cols).parquet(self.path)
-        # Written after the data (the overwrite clears the directory).
-        # A zero-row partitioned write leaves no data files to infer
-        # from, so an empty (or fully-deleted) mirror must still know
-        # its row shape. (An Iceberg/catalog table carries both in
-        # table metadata.)
-        with open(self._schema_path(), "w") as f:
-            json.dump({"schema": snapshot.schema.jsonValue(),
-                       "n_buckets": n}, f)
+        # Written after the data (the overwrite clears the directory,
+        # pending delta included). A zero-row partitioned write leaves
+        # no data files to infer from, so an empty (or fully-deleted)
+        # mirror must still know its row shape. (An Iceberg/catalog
+        # table carries both in table metadata.)
+        self._write_sidecar({"schema": snapshot.schema.jsonValue(),
+                             "n_buckets": n, "rows": counted.get["rows"]})
+
+    # --- the pending delta ------------------------------------------------
+
+    def _pending(self) -> tuple[str, int] | None:
+        """(dir, row count) of the newest published delta generation;
+        None when no delta is pending. An older generation left by an
+        interrupted commit is shadowed by the newer one."""
+        root = os.path.join(self.path, DELTA_DIR)
+        gens = ([int(d[1:]) for d in os.listdir(root)
+                 if d[:1] == "v" and d[1:].isdigit()]
+                if os.path.isdir(root) else [])
+        if not gens:
+            return None
+        d = os.path.join(root, f"v{max(gens)}")
+        with open(os.path.join(d, DELTA_META)) as f:
+            return d, json.load(f)["rows"]
+
+    @property
+    def delta_rows(self) -> int:
+        """Rows of the pending delta (tombstones included); 0 when every
+        commit has been folded into the base."""
+        pending = self._pending()
+        return pending[1] if pending else 0
+
+    def _delta_scan(self, d: str) -> DataFrame:
+        """The delta rows in ``d``: the row columns plus the tombstone
+        flag. Scanned with the sidecar schema, so building it runs no
+        job."""
+        schema = self._schema().add(DELETED_COL, T.BooleanType())
+        return self.spark.read.schema(schema).parquet(d)
+
+    def _delta_latest(self, d: str) -> DataFrame:
+        """The delta in ``d`` as a compacted batch: one row per key with
+        ``_FOLD_OP`` 'd' on tombstones."""
+        return (self._delta_scan(d)
+                .withColumn(_FOLD_OP, F.when(F.col(DELETED_COL), F.lit("d"))
+                            .otherwise(F.lit("u")))
+                .drop(DELETED_COL))
+
+    def _fold_due(self, delta: DataFrame, rows: int) -> bool:
+        """Whether a delta of ``rows`` rows (of ``delta``, which carries
+        the key columns) belongs in the base: past 1/FOLD_DIVISOR of the
+        base's recorded rows, too big to broadcast its keys, or on a
+        mirror that records no row count."""
+        base = (self._sidecar() or {}).get("rows")
+        return (base is None or rows * FOLD_DIVISOR > base
+                or not _fits_broadcast(delta.select(*self.keys), rows))
 
     def read(self) -> DataFrame:
-        if self._has_buckets():
-            return self._scan().drop(BUCKET_COL)
-        return self._empty()
+        """The logical table: the base with every delta key anti-joined
+        away, plus the delta's live rows. Building it runs no job; a
+        read with a pending delta runs one extra job (the broadcast of
+        the delta's keys)."""
+        base = (self._scan().drop(BUCKET_COL) if self._has_buckets()
+                else self._empty())
+        pending = self._pending()
+        if pending is None:
+            return base
+        d, rows = pending
+        latest = self._delta_latest(d)
+        keys = latest.select(*self.keys)
+        if _fits_broadcast(keys, rows):
+            keys = F.broadcast(keys)
+        return upsert_compacted(base, latest, self.keys, op_col=_FOLD_OP,
+                                key_rows=keys)
 
     def apply(self, changes: DataFrame | PreparedBatch, op_col: str = "op",
               tag: str = "batch") -> list:
-        """Merge a change batch, rewriting only touched partitions.
-        Returns the touched partitions (``_partition_rows`` keys:
-        buckets, or (date, bucket) pairs), sorted.
+        """Commit a change batch. Returns the partitions its keys land
+        in (``_partition_rows`` keys: buckets, or (date, bucket) pairs),
+        sorted; ``[]`` for an empty batch, which commits nothing.
 
-        Plan shape: one collect of the batch's rows per partition, then
-        a single write job chain (``merge_staged``): compact (1 shuffle
-        on keys) → partition-pruned scan of touched partitions only →
-        anti-join + union → rebalance on the partition columns → staged
-        write, swapped in leaf by leaf (``_publish``).
+        Plan shape: one write job chain compacts (pending delta ∪ batch)
+        latest-wins — one shuffle on the keys, the batch winning — into
+        the next delta generation, published by one rename; the batch's
+        partitions and the delta's size come from an ``observe`` on that
+        write, not from a job of their own. When the new delta is due
+        (``_fold_due``) the commit folds it (``_fold``).
 
-        The collect reads the raw batch, not its compaction: the
-        latest-wins compaction keeps a row per key, so both land in
-        the same partitions, and the compaction is then planned once,
-        inline in the write, instead of being persisted for the
-        collect. The anti-join reads its keys from the raw batch too,
-        and the collected row count gates their broadcast.
-
-        ``changes`` may also be a ``prepare`` handle: its compaction and
-        collect already ran, the merge reads them, and apply releases
-        the handle.
+        ``changes`` may also be a ``prepare`` handle, which apply
+        releases. Its rows per partition are known before any write, so
+        when no delta is pending and the batch alone is due to fold, it
+        goes straight to the copy-on-write merge instead of through a
+        delta that would be folded at once; the same holds for a raw
+        batch on a mirror that records no row count.
         """
         n = self.n_buckets
         if isinstance(changes, PreparedBatch):
             with changes:
-                return self._merge(changes.latest, changes.latest,
-                                   self._rows(changes, n), op_col, tag)
-        return self._merge(
-            compact_latest(changes, self.keys, self.order_cols), changes,
-            self._partition_rows(changes, n), op_col, tag)
+                rows = self._rows(changes, n)
+                n_rows = sum(rows.values())
+                if (self._pending() is None
+                        and self._fold_due(changes.latest, n_rows)):
+                    return self._merge(changes.latest, changes.latest,
+                                       sorted(rows), n_rows, op_col, tag)
+                return self._commit_delta(changes.latest, op_col, tag)
+        if "rows" not in (self._sidecar() or {}):
+            rows = self._partition_rows(changes, n)
+            return self._merge(
+                compact_latest(changes, self.keys, self.order_cols), changes,
+                sorted(rows), sum(rows.values()), op_col, tag)
+        return self._commit_delta(changes, op_col, tag)
 
-    def _merge(self, latest: DataFrame, batch: DataFrame,
-               rows: dict, op_col: str, tag: str) -> list:
-        """apply() over the compacted batch ``latest``, the relation
-        ``batch`` it was compacted from, and ``batch``'s rows per
-        partition."""
-        touched = sorted(rows)
+    def _commit_delta(self, batch: DataFrame, op_col: str, tag: str) -> list:
+        """apply() through the delta: write (pending delta ∪ ``batch``)
+        compacted latest-wins as the next generation, publish it, and
+        fold it when due."""
+        n = self.n_buckets
+        schema = self._schema()
+        cols = [F.col(f.name).cast(f.dataType).alias(f.name)
+                for f in schema.fields]
+        order = [F.col(c) for c in self.order_cols]
+        new = batch.select(
+            *cols, *order, F.lit(1).alias(_SRC),
+            ((F.col(op_col) == "d") | F.col(op_col).isNull())
+            .alias(DELETED_COL))
+        pending = self._pending()
+        if pending is not None:
+            # The batch on the left: the union, and so the write, runs
+            # in the batch's session (a foreachBatch frame's own), where
+            # an observe the caller put on the batch is registered.
+            new = new.unionByName(self._delta_scan(pending[0]).select(
+                *schema.fieldNames(),
+                *[F.lit(None).cast(batch.schema[c].dataType).alias(c)
+                  for c in self.order_cols],
+                F.lit(0).alias(_SRC), DELETED_COL))
+        part = self._partition_key(n)
+        seen = Observation()
+        delta = compact_latest(new, self.keys, [_SRC, *self.order_cols]).observe(
+            seen, F.count(F.lit(1)).alias("rows"),
+            F.collect_set(part).alias("parts"),
+            F.collect_set(F.when(F.col(_SRC) == 1, part)).alias("touched"))
+        staged = f"{self.path}_{tag}_delta_staged"
+        (delta.select(*schema.fieldNames(), DELETED_COL)
+         .write.mode("overwrite").parquet(staged))
+        got = seen.get
+        touched = sorted(_part_value(p) for p in got["touched"])
+        if not touched:
+            shutil.rmtree(staged, ignore_errors=True)
+            return []
+        with open(os.path.join(staged, DELTA_META), "w") as f:
+            json.dump({"rows": got["rows"]}, f)
+        root = os.path.join(self.path, DELTA_DIR)
+        gen = int(os.path.basename(pending[0])[1:]) + 1 if pending else 1
+        os.makedirs(root, exist_ok=True)
+        os.rename(staged, os.path.join(root, f"v{gen}"))
+        for d in os.listdir(root):
+            if d != f"v{gen}":
+                shutil.rmtree(os.path.join(root, d), ignore_errors=True)
+        if self._fold_due(delta, got["rows"]):
+            self._fold(tag, sorted(_part_value(p) for p in got["parts"]))
+        return touched
+
+    def _fold(self, tag: str, parts: list | None = None) -> None:
+        """Fold the pending delta into the base: the delta, as a
+        compacted batch, goes through the copy-on-write merge
+        (``_merge``), then the delta dir is removed. ``parts``: the
+        delta's partitions when known, else one collect counts them.
+        Interrupted after the leaves swap in and before the delta is
+        removed, ``read()`` is unchanged: the base already holds the
+        delta's images, and merging them again is a no-op."""
+        pending = self._pending()
+        if pending is None:
+            return
+        d, rows = pending
+        latest = self._delta_latest(d)
+        if parts is None:
+            parts = sorted(self._partition_rows(latest, self.n_buckets))
+        self._merge(latest, latest, parts, rows, _FOLD_OP, tag)
+        shutil.rmtree(os.path.dirname(d), ignore_errors=True)
+
+    def _partition_key(self, n: int):
+        """The partition a row lands in under ``n`` buckets, as one
+        column (``_part_value`` turns its values into
+        ``_partition_rows`` keys)."""
+        return bucket_expr(self.keys, n)
+
+    # --- the copy-on-write merge (every fold) -------------------------------
+
+    def _merge(self, latest: DataFrame, batch: DataFrame, touched: list,
+               n_rows: int, op_col: str, tag: str) -> list:
+        """Merge the compacted batch ``latest`` into the base, rewriting
+        only the ``touched`` partitions; the anti-join reads its keys
+        from ``batch`` (``latest`` or the relation it was compacted
+        from), ``n_rows`` rows of it. Keeps the base's recorded row
+        count."""
         if not touched:
             return []
         if self._has_buckets():
@@ -394,9 +603,16 @@ class BucketedMirror(PreparingMirror):
         # commit.
         staged = f"{self.path}_{tag}_staged"
         written = merge_staged(
-            subset, self._with_bucket(latest), batch, sum(rows.values()),
+            subset, self._with_bucket(latest), batch, n_rows,
             self.keys, self._partition_cols(), staged, op_col)
-        self._publish(staged, written, {self._leaf(p) for p in touched})
+        leaves = {self._leaf(p) for p in touched}
+        meta = self._sidecar()
+        if meta is not None and "rows" in meta:
+            meta["rows"] += (_parquet_rows(staged, written)
+                             - _parquet_rows(self.path, written | leaves))
+        self._publish(staged, written, leaves)
+        if meta is not None and "rows" in meta:
+            self._write_sidecar(meta)
         return touched
 
     def _touched_filter(self, touched: list):
@@ -462,7 +678,11 @@ class BucketedMirror(PreparingMirror):
         read→coalesce→write of ONE partition dir (a bucket is ~25 GB
         at the 100 TB/4096-bucket layout) — embarrassingly parallel
         across partitions, and a no-op scan-skip for compacted ones.
+
+        A pending delta is folded first, so the compacted base holds
+        every commit.
         """
+        self._fold("compact")
         frag = {rel: files for rel, files in self._leaf_partitions().items()
                 if len(files) > max_files}
         if not frag:
@@ -539,6 +759,9 @@ class TwoLevelMirror(BucketedMirror):
 
     def _partition_cols(self) -> list[str]:
         return [self.date_col, BUCKET_COL]
+
+    def _partition_key(self, n: int):
+        return F.struct(F.col(self.date_col), bucket_expr(self.keys, n))
 
     def _partition_rows(self, df: DataFrame, n: int) -> dict:
         """Rows of ``df`` per (date, bucket) pair under ``n`` buckets —

@@ -200,13 +200,16 @@ def q_cdc_apply_scale(spark, sf_dir):
 def q_cdc_apply_bucketed(spark, sf_dir):
     """The SAME apply-gate semantics through the partition-scoped
     merge (cdc/bucketed.py): mirror laid out as a key-hash-bucketed
-    parquet table, the batch rewriting only touched bucket partitions
-    via dynamic partition overwrite — the no-Iceberg analogue of the
-    sink's equality-delete snapshot commit
-    (`connect-iceberg-sink.json:30-33`). Hash-checked against the
-    identical oracle as q_cdc_apply_scale, so the driver verifies the
-    partition-scoped path is semantically indistinguishable from the
-    full rewrite."""
+    parquet table. The batch (~20 % of the mirror's rows) is far past
+    the merge-on-read fold threshold, and its prepared row counts say
+    so before any write, so the commit is the FOLD: a copy-on-write
+    merge rewriting only touched bucket partitions, swapped in by
+    directory rename, with no delta left pending — the no-Iceberg
+    analogue of the sink's equality-delete snapshot commit
+    (`connect-iceberg-sink.json:30-33`) after its compaction.
+    Hash-checked against the identical oracle as q_cdc_apply_scale, so
+    the driver verifies the partition-scoped path is semantically
+    indistinguishable from the full rewrite."""
     from .bucketed import BucketedMirror
 
     li, changes = _scale_mirror_and_changes(spark, sf_dir)
@@ -1028,80 +1031,38 @@ def q_cdc_drift_psi(spark, sf_dir):
     )
 
 
-def _mor_paths(spark, sf_dir):
-    """Merge-on-read layout fixture, written once per sf_dir: a BASE
-    data file set (the snapshot), an equality-DELETE file (changed
-    keys), and an insert DELTA file (latest post-images) — the three
-    file classes of an Iceberg v2 MOR table."""
-    import hashlib
-
-    tag = hashlib.md5(os.path.abspath(sf_dir).encode()).hexdigest()[:10]
-    root = os.path.join(tempfile.gettempdir(), f"cdc_mor_{tag}")
-    base, dels, delta = (os.path.join(root, d) for d in ("base", "deletes", "delta"))
-    if not all(os.path.exists(os.path.join(d, "_SUCCESS")) for d in (base, dels, delta)):
-        # Stage under a process-unique dir, then atomically rename into
-        # place — concurrent first-callers (parallel test sessions)
-        # must never overwrite each other mid-write. Loser of the race
-        # discards its staging copy.
-        stage = tempfile.mkdtemp(prefix=f"cdc_mor_stage_{tag}_")
-        ch = changelog(spark, sf_dir)
-        ch.filter(F.col("op") == "r").select("k", "name", "bal").write.mode(
-            "overwrite"
-        ).parquet(os.path.join(stage, "base"))
-        changed = ch.filter(F.col("ts_ms") > 1000).select("k").distinct()
-        changed.write.mode("overwrite").parquet(os.path.join(stage, "deletes"))
-        w = Window.partitionBy("k").orderBy(F.col("ts_ms").desc(), F.col("off").desc())
-        latest = (
-            ch.filter(F.col("ts_ms") > 1000)
-            .withColumn("rn", F.row_number().over(w))
-            .filter((F.col("rn") == 1) & (F.col("op") != "d"))
-            .select("k", "name", "bal")
-        )
-        latest.write.mode("overwrite").parquet(os.path.join(stage, "delta"))
-        import shutil
-
-        os.makedirs(root, exist_ok=True)
-        for d in ("base", "deletes", "delta"):
-            dst = os.path.join(root, d)
-            try:
-                os.rename(os.path.join(stage, d), dst)
-            except OSError:
-                # Rename failed: either another session already
-                # published a COMPLETE dir (has _SUCCESS — fine, lose
-                # the race) or a prior crash left a TORN dir with no
-                # _SUCCESS. A torn publish must self-heal, not be
-                # silently consumed forever (round-4 advice): move the
-                # stale dir aside and retry the rename once.
-                if not os.path.exists(os.path.join(dst, "_SUCCESS")):
-                    shutil.move(dst, tempfile.mkdtemp(prefix=f"cdc_mor_torn_{tag}_"))
-                    os.rename(os.path.join(stage, d), dst)
-        shutil.rmtree(stage, ignore_errors=True)
-    return base, dels, delta
-
-
 @query("q_cdc_merge_on_read", oracle=MIRROR_SQL)
 def q_cdc_merge_on_read(spark, sf_dir):
-    """Iceberg v2 MERGE-ON-READ apply — the write-cheap half of the
+    """Iceberg v2 MERGE-ON-READ apply through the streaming mirror
+    (cdc/bucketed.py BucketedMirror) — the write-cheap half of the
     reference's upsert story (`connect-iceberg-sink.json:30-33` with
-    `write.delete.mode=merge-on-read`): instead of rewriting the base
-    (copy-on-write, q_cdc_apply/q_cdc_apply_bucketed), a batch
-    appends only an equality-DELETE file (the changed keys) and a
-    DELTA file (the latest post-images) — O(changes) write amplification,
-    zero base rewrite.
+    `write.delete.mode=merge-on-read`): a commit rewrites only the
+    mirror's pending delta (the latest post-image of every changed key,
+    deletes as tombstones), never the base — O(changes) write
+    amplification.
 
-    The read-side merge this query returns is the price: base
-    ANTI-JOIN delete-keys (broadcast — delete files are small by
-    construction) UNION the delta. Reads pay that merge until a
-    compaction (q_cdc_expire_snapshots / BucketedMirror.compact)
-    folds deletes into a new base. Both paths end at the identical
-    latest-wins mirror, which is exactly what the oracle checks."""
-    base, dels, delta = _mor_paths(spark, sf_dir)
-    base_df = spark.read.parquet(base)
-    del_keys = spark.read.parquet(dels)
-    delta_df = spark.read.parquet(delta)
-    return base_df.join(
-        F.broadcast(del_keys), "k", "left_anti"
-    ).unionByName(delta_df)
+    The mirror is initialised from the snapshot (op='r') and the
+    change events are committed per ``ts_ms`` group, the changelog's
+    own commit order: the whole changelog at once is past the fold
+    threshold and would fold straight into the base. The per-group
+    commits fold whenever the delta outgrows it and end with a delta
+    pending, so the returned read is the merge-on-read shape: base
+    ANTI-JOIN the delta's keys (broadcast — a pending delta fits a
+    broadcast by construction) UNION the delta's live rows. Reads pay
+    that merge until a fold or ``compact()`` rewrites the touched
+    buckets; both paths end at the identical latest-wins mirror, which
+    is exactly what the oracle checks."""
+    from .bucketed import BucketedMirror
+
+    ch = changelog(spark, sf_dir)
+    path = os.path.join(tempfile.mkdtemp(prefix="cdc_mor_"), "mirror")
+    m = BucketedMirror(spark, path, keys=["k"])
+    m.init(ch.filter(F.col("op") == "r").select("k", "name", "bal"))
+    changes = ch.filter(F.col("op") != "r")
+    for (ts,) in changes.select("ts_ms").distinct().orderBy("ts_ms").collect():
+        m.apply(changes.filter(F.col("ts_ms") == ts), tag=f"ts{ts}")
+    assert m.delta_rows > 0, "the last commit folded: no delta to read"
+    return m.read()
 
 
 WAP_BAL_LO, WAP_BAL_HI = -1000.0, 11000.0
@@ -1588,9 +1549,11 @@ def q_cdc_compact_files(spark, sf_dir):
        files in every bucket dir, exactly what a 1000-task snapshot
        copy produces at 100 TB;
     2. one partition-scoped CDC apply (the q_cdc_apply_bucketed
-       batch) — touched buckets rewrite, untouched buckets keep their
+       batch, past the fold threshold, so it folds straight into the
+       base) — touched buckets rewrite, untouched buckets keep their
        ingest fragmentation;
-    3. ``BucketedMirror.compact(max_files=1)`` — per-partition
+    3. ``BucketedMirror.compact(max_files=1)`` — folds a pending delta
+       first (none is left here), then per-partition
        read→coalesce→write of ONLY still-fragmented leaves
        (embarrassingly parallel across partitions; compacted leaves
        are a scan-skip).

@@ -21,7 +21,7 @@ import json
 import os
 import tempfile
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
@@ -41,6 +41,19 @@ def parse_envelopes(batch_df: DataFrame,
     parses to a NULL ``op``)."""
     return batch_df.withColumn(
         ENV_COL, F.from_json(F.col("value"), envelope_schema(row)))
+
+
+def commit_description(spark: SparkSession, batch_id: int, commit) -> None:
+    """Run ``commit()`` with every Spark job it launches described as
+    ``cdc commit batch <batch_id>``, so a traced job maps to its
+    micro-batch; the previous description is restored afterwards."""
+    sc = spark.sparkContext
+    prev = sc.getLocalProperty("spark.job.description")
+    sc.setJobDescription(f"cdc commit batch {batch_id}")
+    try:
+        commit()
+    finally:
+        sc.setJobDescription(prev)
 
 
 def envelope_changes(parsed: DataFrame, keys: list[str],
@@ -64,16 +77,19 @@ def envelope_changes(parsed: DataFrame, keys: list[str],
 
 
 class StreamingCdcPipeline:
-    """File-source streaming CDC apply with a bucket-partitioned
-    parquet mirror table.
+    """File-source streaming CDC apply with a bucket-partitioned,
+    merge-on-read parquet mirror table.
 
     The mirror is a ``BucketedMirror`` (cdc/bucketed.py): each
-    micro-batch rewrites only the key-hash bucket partitions it
-    touches, not the whole table — per-batch cost stays O(touched
-    buckets), which is what makes a 10 s trigger viable against a
-    100 TB mirror without Iceberg. ``n_buckets=None`` sizes the bucket
-    count to the snapshot at ``init_mirror`` (one scan split per
-    bucket), so a small mirror is one file per commit.
+    micro-batch rewrites only the mirror's one pending delta, O(batch +
+    delta) rows in two Spark jobs, never the base — which is what makes
+    a 10 s trigger viable against a 100 TB mirror without Iceberg. Once
+    the delta outgrows a fixed fraction of the base, the commit folds
+    it into the key-hash bucket partitions it touches (O(touched
+    buckets)). ``n_buckets=None`` sizes the bucket count to the
+    snapshot at ``init_mirror`` (one scan split per bucket), so a small
+    mirror is one file per fold. Every job of a commit is described as
+    ``cdc commit batch <batch_id>``.
     """
 
     def __init__(self, spark: SparkSession, workdir: str | None = None,
@@ -104,14 +120,18 @@ class StreamingCdcPipeline:
         self._mirror.init(snapshot)
 
     def _apply_batch(self, batch_df: DataFrame, batch_id: int) -> None:
-        """foreachBatch: decode → DLQ-split → compact → partition-scoped
-        merge (only touched buckets rewritten).
+        """foreachBatch: decode → DLQ-split → mirror commit (the batch
+        compacted into the pending delta, folded when due).
 
         Malformed envelopes (mandatory ``op`` null after PERMISSIVE
         from_json) are written raw to the dead-letter table instead of
         flowing into the merge as null-key rows — the streaming twin of
         q_cdc_dead_letter (Kafka Connect ``errors.tolerance: all`` +
-        DLQ topic). The DLQ write is idempotent like the mirror path:
+        DLQ topic). They are counted by an ``observe`` on the parsed
+        batch, which the mirror commit's write materializes, so no
+        probe job looks for them; the DLQ partition is written only
+        when the count is positive. The DLQ write is idempotent like
+        the mirror path:
         partitioned by batch_id with dynamic partition overwrite, so a
         micro-batch replayed after failure/restart replaces its own
         DLQ partition rather than appending duplicate dead letters
@@ -124,18 +144,30 @@ class StreamingCdcPipeline:
         (`connect-standalone.properties:13`). An empty batch is a no-op
         inside ``apply``, which returns no touched buckets for it.
         """
-        parsed = parse_envelopes(batch_df)
+        commit_description(self.spark, batch_id,
+                           lambda: self._commit(batch_df, batch_id))
+
+    def _commit(self, batch_df: DataFrame, batch_id: int) -> None:
+        # A batch the optimizer proves empty (a ``limit(0)`` frame)
+        # commits nothing, and the observe below would be pruned with
+        # it, leaving its observation without metrics.
+        max_rows = batch_df._jdf.queryExecution().optimizedPlan().maxRows()
+        if max_rows.isDefined() and max_rows.get() == 0:
+            return
         is_bad = F.col(f"{ENV_COL}.op").isNull()
-        bad = parsed.filter(is_bad).select("key", "value")
-        if not bad.isEmpty():
-            (bad.withColumn("batch_id", F.lit(batch_id).cast("long"))
+        malformed = Observation()
+        parsed = parse_envelopes(batch_df).observe(
+            malformed, F.count_if(is_bad).alias("rows"))
+        changes = envelope_changes(parsed.filter(~is_bad), keys=["k"])
+        if self._mirror.apply(changes, tag=f"b{batch_id}"):
+            self.batches_applied += 1
+        if malformed.get["rows"]:
+            (parse_envelopes(batch_df).filter(is_bad).select("key", "value")
+             .withColumn("batch_id", F.lit(batch_id).cast("long"))
              .write.mode("overwrite")
              .option("partitionOverwriteMode", "dynamic")
              .partitionBy("batch_id")
              .parquet(self.dlq_path))
-        changes = envelope_changes(parsed.filter(~is_bad), keys=["k"])
-        if self._mirror.apply(changes, tag=f"b{batch_id}"):
-            self.batches_applied += 1
 
     def start(self, trigger_once: bool = True):
         stream = (

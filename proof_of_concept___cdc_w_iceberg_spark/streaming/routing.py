@@ -24,7 +24,7 @@ from pyspark.sql import types as T
 
 from ..cdc.bucketed import BucketedMirror
 from ..cdc.envelope import ROW_SCHEMA
-from .pipeline import envelope_changes, parse_envelopes
+from .pipeline import commit_description, envelope_changes, parse_envelopes
 
 
 class RoutedStreamingCdcPipeline:
@@ -73,6 +73,10 @@ class RoutedStreamingCdcPipeline:
         os.rename(path + ".tmp", path)
 
     def _apply_batch(self, batch_df: DataFrame, batch_id: int) -> None:
+        commit_description(self.spark, batch_id,
+                           lambda: self._commit(batch_df, batch_id))
+
+    def _commit(self, batch_df: DataFrame, batch_id: int) -> None:
         # Route on the raw JSON (schema-independent), THEN decode each
         # target's slice with its own typed envelope schema — targets
         # may have entirely different row shapes.

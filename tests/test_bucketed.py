@@ -9,15 +9,20 @@ from __future__ import annotations
 
 import json
 import os
+import shutil
 import tempfile
 
 import pytest
 from pyspark.sql import functions as F
 
 from proof_of_concept___cdc_w_iceberg_spark.cdc.apply import apply_changes, mirror_diff
+from proof_of_concept___cdc_w_iceberg_spark.cdc import bucketed
 from proof_of_concept___cdc_w_iceberg_spark.cdc.bucketed import (
     BUCKET_COL,
+    DELTA_DIR,
+    FOLD_DIVISOR,
     BucketedMirror,
+    TwoLevelMirror,
     bucket_expr,
     sized_bucket_count,
 )
@@ -65,6 +70,11 @@ def test_apply_rewrites_only_touched_buckets(spark):
         (k_del, None, None, "d", 10, 2),
     ]))
     assert touched == [target_bucket]
+    # Two keys of a 100-row base are a delta commit: no bucket moves
+    # until the fold, which rewrites only the touched one.
+    assert m.partition_files() == before and m.delta_rows == 2
+    m.compact()
+    assert m.delta_rows == 0
 
     after = m.partition_files()
     for b in range(N_BUCKETS):
@@ -198,6 +208,9 @@ def test_two_level_apply_prunes_both_levels(spark, tmp_path):
     )
     touched = m.apply(batch)
     assert touched == [(2024, b)]
+    # A one-key delta commit rewrites no cell; the fold rewrites one.
+    assert m.partition_files() == before and m.delta_rows == 1
+    m.compact()
     after = m.partition_files()
     for part in before:
         if part == ("2024", b):
@@ -230,6 +243,9 @@ def test_two_level_delete_clears_emptied_cell(spark, tmp_path):
         "k long, name string, bal double, yr int, op string, ts_ms long, off long",
     )
     m.apply(batch)
+    got = m.read()
+    assert got.filter(F.col("k").isin(cell_keys)).count() == 0
+    m.compact()  # the fold clears the cell the delta emptied
     assert ("2025", b0) not in m.partition_files()
     got = m.read()
     assert got.filter(F.col("k").isin(cell_keys)).count() == 0
@@ -297,9 +313,9 @@ def test_snapshot_mirror_delete_and_expire(spark, tmp_path):
 
 def test_mirror_reads_build_without_spark_jobs(spark, tmp_path, jobs_in_group):
     """Building a read runs no footer-reading (schema inference) job:
-    BucketedMirror takes its schema from the init sidecar,
-    SnapshotMirror from the manifest. Without a sidecar the bucketed
-    read still works, by inference."""
+    BucketedMirror takes its schema from the init sidecar, for the
+    pending delta too, SnapshotMirror from the manifest. Without a
+    sidecar the bucketed read still works, by inference."""
     from proof_of_concept___cdc_w_iceberg_spark.cdc.versioned import SnapshotMirror
 
     snap = _snapshot(spark)
@@ -310,9 +326,15 @@ def test_mirror_reads_build_without_spark_jobs(spark, tmp_path, jobs_in_group):
                         n_buckets=N_BUCKETS)
     sm.init(snap)
     sm.apply(_changes(spark, [(3, "x", 9.9, "u", 100, 1)]))
+    dm = BucketedMirror(spark, str(tmp_path / "d"), keys=["k"],
+                        n_buckets=N_BUCKETS)
+    dm.init(snap)
+    dm.apply(_changes(spark, [(3, "x", 9.9, "u", 100, 1)]))
+    assert dm.delta_rows == 1
     for name, build in (("bucketed", bm.read), ("snapshot", sm.read),
                         ("travel", lambda: sm.read(0)),
-                        ("diff", lambda: sm.diff(0, 1))):
+                        ("diff", lambda: sm.diff(0, 1)),
+                        ("delta", dm.read)):
         df, n_jobs = jobs_in_group(build)
         assert n_jobs == 0, f"{name} read ran {n_jobs} jobs while building"
     def shape(df):
@@ -322,6 +344,7 @@ def test_mirror_reads_build_without_spark_jobs(spark, tmp_path, jobs_in_group):
     assert sorted(map(tuple, bm.read().collect())) == \
         sorted(map(tuple, snap.collect()))
     assert sm.diff(0, 1).count() == 1
+    assert {r["k"]: r["name"] for r in dm.read().collect()}[3] == "x"
 
     os.remove(os.path.join(bm.path, "_schema.json"))
     assert shape(bm.read()) == shape(snap)
@@ -502,3 +525,257 @@ def test_conflicting_bucket_count_is_refused(spark, tmp_path):
         got = make(16).read()
         assert got.count() == 200, name
         assert got.filter(F.col("name") != "upd").count() == 0, name
+
+
+# --- merge-on-read commits: the pending delta and its fold -------------
+
+MOR_BASE = 20_000
+LAYOUTS = ["bucketed", "two_level"]
+
+
+def _mor_mirror(spark, path, layout):
+    """A ``MOR_BASE``-row mirror: big enough that small batches stay in
+    the delta. The two-level layout places each key in year 2024 + k % 3."""
+    snap = spark.range(MOR_BASE).select(
+        F.col("id").alias("k"),
+        F.concat(F.lit("name_"), F.col("id")).alias("name"),
+        (F.col("id") * 1.5).alias("bal"))
+    if layout == "two_level":
+        m = TwoLevelMirror(spark, path, keys=["k"], date_col="yr",
+                           n_buckets=4)
+        snap = snap.withColumn("yr", (F.lit(2024) + F.col("k") % 3)
+                               .cast("int"))
+    else:
+        m = BucketedMirror(spark, path, keys=["k"], n_buckets=4)
+    m.init(snap)
+    return m, {k: (f"name_{k}", k * 1.5) for k in range(MOR_BASE)}
+
+
+def _commit(spark, m, state, rows, tag):
+    """Apply ``rows`` (k, name, bal, op, ts_ms, off) to mirror ``m`` and
+    to ``state``, the latest-wins rebuild (k -> (name, bal)); returns
+    apply's result."""
+    df = _changes(spark, rows)
+    if isinstance(m, TwoLevelMirror):
+        df = df.withColumn("yr", (F.lit(2024) + F.col("k") % 3).cast("int"))
+    touched = m.apply(df, tag=tag)
+    latest = {}
+    for r in sorted(rows, key=lambda r: (r[4], r[5])):
+        latest[r[0]] = r
+    for k, name, bal, op, _ts, _off in latest.values():
+        if op == "d":
+            state.pop(k, None)
+        else:
+            state[k] = (name, bal)
+    return touched
+
+
+def _rows(m):
+    return sorted((r["k"], r["name"], r["bal"])
+                  for r in m.read().select("k", "name", "bal").collect())
+
+
+def _want(state):
+    return sorted((k, *v) for k, v in state.items())
+
+
+@pytest.mark.parametrize("layout", LAYOUTS)
+def test_merge_on_read_equals_latest_wins_rebuild(spark, tmp_path, layout):
+    """Delta commits leave every base file in place, and the
+    merge-on-read read equals a latest-wins rebuild after inserts,
+    updates and deletes; a delete then a reinsert of one key (across
+    commits and inside one batch); a replayed and an empty batch; and a
+    fold by ``compact()``, twice."""
+    m, state = _mor_mirror(spark, str(tmp_path / "m"), layout)
+    base = m.partition_files()
+    b1 = ([(k, f"u{k}", 0.5, "u", 10, k) for k in range(0, 60, 2)]
+          + [(k, None, None, "d", 10, 100 + k) for k in range(1, 60, 5)]
+          + [(MOR_BASE + j, f"new{j}", 1.0, "c", 10, 200 + j)
+             for j in range(10)])
+    assert _commit(spark, m, state, b1, "b1")
+    assert m.delta_rows == len({r[0] for r in b1})
+    assert m.partition_files() == base
+    assert _rows(m) == _want(state)
+
+    b2 = [(1, "back", 2.0, "c", 20, 1),                  # reinsert of b1's delete
+          (MOR_BASE, None, None, "d", 20, 2),            # delete of b1's insert
+          (3, None, None, "d", 20, 3), (3, "re3", 3.0, "c", 21, 4),
+          (4, "u4", 4.0, "u", 20, 5), (4, "u4b", 4.5, "u", 20, 6)]
+    assert _commit(spark, m, state, b2, "b2")
+    assert _rows(m) == _want(state)
+    delta_rows = m.delta_rows
+    assert _commit(spark, m, state, b2, "b2_replay")
+    assert m.delta_rows == delta_rows
+    assert _rows(m) == _want(state)
+    assert m.apply(_changes(spark, []).withColumn("yr", F.lit(2024))
+                   if layout == "two_level" else _changes(spark, []),
+                   tag="empty") == []
+    assert m.delta_rows == delta_rows
+    assert m.partition_files() == base
+    assert _rows(m) == _want(state)
+
+    m.compact()
+    assert m.delta_rows == 0
+    assert not os.path.exists(os.path.join(m.path, DELTA_DIR))
+    assert m.partition_files() != base
+    assert _rows(m) == _want(state)
+    _commit(spark, m, state, [(7, None, None, "d", 30, 1),
+                              (7, "seven", 7.0, "c", 31, 2),
+                              (9, None, None, "d", 30, 3)], "b3")
+    assert m.delta_rows == 2
+    assert _rows(m) == _want(state)
+    m.compact()
+    assert m.delta_rows == 0
+    assert _rows(m) == _want(state)
+    assert m._sidecar()["rows"] == len(state)
+
+
+def test_delta_commit_and_read_job_counts(spark, tmp_path, jobs_in_group):
+    """A delta commit runs at most 2 Spark jobs (the compaction's
+    shuffle and the write). A point read runs 1 job with no delta
+    pending and 2 with one (the broadcast of its keys); building either
+    read runs none."""
+    m, _ = _mor_mirror(spark, str(tmp_path / "m"), "bucketed")
+
+    def point():
+        return m.read().filter(F.col("k").isin([1, 2, 3])).collect()
+
+    assert jobs_in_group(m.read)[1] == 0
+    assert jobs_in_group(point)[1] == 1
+    batch = _changes(spark, [(k, f"u{k}", 0.5, "u", 10, k)
+                             for k in range(0, 300, 3)])
+    _, n_jobs = jobs_in_group(lambda: m.apply(batch))
+    assert n_jobs <= 2, f"a delta commit ran {n_jobs} jobs"
+    assert m.delta_rows == 100
+    assert jobs_in_group(m.read)[1] == 0
+    rows, n_jobs = jobs_in_group(point)
+    assert n_jobs == 2
+    assert sorted((r.k, r.name) for r in rows) == [
+        (1, "name_1"), (2, "name_2"), (3, "u3")]
+
+
+def test_commit_folds_past_fold_fraction(spark, tmp_path):
+    """A delta of at most 1/FOLD_DIVISOR of the base's rows stays
+    pending; the commit that takes it past that folds it into the base,
+    which then records its new row count."""
+    m, state = _mor_mirror(spark, str(tmp_path / "m"), "bucketed")
+    base = m.partition_files()
+    step = MOR_BASE // FOLD_DIVISOR // 2 + 1
+    _commit(spark, m, state, [(k, "a", 1.0, "u", 10, k)
+                              for k in range(step)], "b1")
+    assert m.delta_rows == step
+    assert m.partition_files() == base
+    _commit(spark, m, state, [(k, "b", 2.0, "u", 20, k)
+                              for k in range(step, 2 * step)]
+            + [(MOR_BASE + 1, "new", 3.0, "c", 20, 0)], "b2")
+    assert m.delta_rows == 0
+    assert m.partition_files() != base
+    assert _rows(m) == _want(state)
+    assert m._sidecar()["rows"] == MOR_BASE + 1
+
+
+def _with_threshold(spark, value, fn):
+    return _with_conf(spark, {"spark.sql.autoBroadcastJoinThreshold": value},
+                      fn)
+
+
+def test_commits_fold_when_broadcast_is_off(spark, tmp_path):
+    """Forced fallback: with spark.sql.autoBroadcastJoinThreshold=-1 no
+    delta's keys can be broadcast, so every commit folds — no delta
+    remains, the read plan has no BroadcastExchange — and the mirror
+    equals a latest-wins rebuild."""
+    m, state = _mor_mirror(spark, str(tmp_path / "m"), "bucketed")
+
+    def commits():
+        for i in range(3):
+            _commit(spark, m, state,
+                    [(k, f"v{i}", float(i), "u", 10 + i, k)
+                     for k in range(i, 40, 3)]
+                    + [(k, None, None, "d", 10 + i, 100 + k)
+                       for k in range(50 + i, 90, 7)], f"b{i}")
+            assert m.delta_rows == 0
+            assert not os.path.exists(os.path.join(m.path, DELTA_DIR))
+        return m.read()._jdf.queryExecution().executedPlan().toString()
+
+    plan = _with_threshold(spark, "-1", commits)
+    assert "BroadcastExchange" not in plan
+    assert _rows(m) == _want(state)
+
+
+def test_commit_folds_when_delta_keys_outgrow_broadcast(spark, tmp_path):
+    """Forced fallback: with the broadcast threshold just below the key
+    bytes of a 20-row delta (8 bytes of row overhead + 8 per LONG key),
+    a 10-row delta stays pending and the commit that makes it 20 rows
+    folds; the mirror equals a latest-wins rebuild throughout."""
+    m, state = _mor_mirror(spark, str(tmp_path / "m"), "bucketed")
+
+    def commits():
+        _commit(spark, m, state, [(MOR_BASE + j, "a", 1.0, "c", 10, j)
+                                  for j in range(10)], "b1")
+        assert m.delta_rows == 10
+        assert _rows(m) == _want(state)
+        _commit(spark, m, state, [(MOR_BASE + j, "b", 2.0, "c", 20, j)
+                                  for j in range(10, 20)], "b2")
+        assert m.delta_rows == 0
+
+    _with_threshold(spark, str(20 * 16 - 1), commits)
+    assert _rows(m) == _want(state)
+
+
+def test_commit_interrupted_before_delta_rename_leaves_read_unchanged(
+        spark, tmp_path, monkeypatch):
+    """A commit that fails after writing its delta generation but
+    before renaming it into place leaves ``read()`` as it was; the next
+    commit of the same batch lands."""
+    m, state = _mor_mirror(spark, str(tmp_path / "m"), "bucketed")
+    _commit(spark, m, state, [(k, "a", 1.0, "u", 10, k)
+                              for k in range(0, 30, 3)], "b1")
+    before, delta_rows = _rows(m), m.delta_rows
+    rows = [(k, "b", 2.0, "u", 20, k) for k in range(1, 30, 3)]
+    real = os.rename
+
+    def crash(src, dst):
+        if os.sep + DELTA_DIR + os.sep in dst:
+            raise OSError("crash before the delta rename")
+        return real(src, dst)
+
+    monkeypatch.setattr(bucketed.os, "rename", crash)
+    with pytest.raises(OSError, match="crash"):
+        m.apply(_changes(spark, rows), tag="b2")
+    monkeypatch.undo()
+    assert m.delta_rows == delta_rows
+    assert _rows(m) == before == _want(state)
+    _commit(spark, m, state, rows, "b2")
+    assert _rows(m) == _want(state)
+
+
+def test_fold_interrupted_before_delta_removal_reads_same_rows(
+        spark, tmp_path, monkeypatch):
+    """A fold interrupted after its leaves swapped in but before the
+    delta is removed still reads the same rows (the delta re-applies
+    onto a base that already holds it); the next fold finishes."""
+    m, state = _mor_mirror(spark, str(tmp_path / "m"), "bucketed")
+    _commit(spark, m, state,
+            [(k, "a", 1.0, "u", 10, k) for k in range(0, 30, 3)]
+            + [(k, None, None, "d", 10, 100 + k) for k in range(1, 30, 3)],
+            "b1")
+    base = m.partition_files()
+    real = shutil.rmtree
+    delta_root = os.path.join(m.path, DELTA_DIR)
+
+    def crash(path, *args, **kwargs):
+        if path == delta_root:
+            raise OSError("crash before the delta removal")
+        return real(path, *args, **kwargs)
+
+    monkeypatch.setattr(bucketed.shutil, "rmtree", crash)
+    with pytest.raises(OSError, match="crash"):
+        m.compact()
+    monkeypatch.undo()
+    assert m.partition_files() != base
+    assert m.delta_rows == 20
+    assert _rows(m) == _want(state)
+    m.compact()
+    assert m.delta_rows == 0
+    assert _rows(m) == _want(state)
+    assert m._sidecar()["rows"] == len(state)

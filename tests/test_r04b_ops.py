@@ -406,20 +406,30 @@ def test_wap_gate_passes_on_the_clean_fixture(spark, sf_dir):
     assert rows["published_rows"]["passed"]
 
 
-def test_merge_on_read_write_amplification_is_o_changes(spark, sf_dir):
-    """MOR's point: the batch writes only delete-keys + delta rows
-    (O(changes)), never a base rewrite — and the read-side merge
-    still equals the copy-on-write mirror."""
-    from proof_of_concept___cdc_w_iceberg_spark.cdc.queries import _mor_paths
+def test_merge_on_read_write_amplification_is_o_changes(spark, sf_dir,
+                                                        tmp_path):
+    """MOR's point: a commit writes only the mirror's delta, at most one
+    row per changed key (O(changes)), never a base file — and the
+    merge-on-read read still equals the copy-on-write mirror, for one
+    commit and for the registered query's whole changelog."""
+    from proof_of_concept___cdc_w_iceberg_spark.cdc.apply import (
+        apply_changes,
+        mirror_diff,
+    )
+    from proof_of_concept___cdc_w_iceberg_spark.cdc.bucketed import BucketedMirror
 
-    base, dels, delta = _mor_paths(spark, sf_dir)
-    n_base = spark.read.parquet(base).count()
-    n_dels = spark.read.parquet(dels).count()
-    n_delta = spark.read.parquet(delta).count()
     ch = changelog(spark, sf_dir)
-    n_changes = ch.filter(F.col("ts_ms") > 1000).count()
-    assert n_dels <= n_changes and n_delta <= n_changes, "writes bounded by batch"
-    assert n_base == ch.filter(F.col("op") == "r").count(), "base untouched"
+    snap = ch.filter(F.col("op") == "r").select("k", "name", "bal")
+    m = BucketedMirror(spark, str(tmp_path / "mirror"), keys=["k"])
+    m.init(snap)
+    base = m.partition_files()
+    batch = ch.filter(F.col("ts_ms") == 3000)  # 5 % of the keys: no fold
+    n_changes = batch.count()
+    m.apply(batch)
+    assert 0 < m.delta_rows <= n_changes, "writes bounded by batch"
+    assert m.partition_files() == base, "base untouched"
+    assert mirror_diff(m.read(), apply_changes(snap, batch, keys=["k"])
+                       ).count() == 0
     mor = QS["q_cdc_merge_on_read"](spark, sf_dir)
     cow = QS["q_cdc_apply"](spark, sf_dir)
     assert mor.exceptAll(cow).count() == 0

@@ -1,5 +1,5 @@
 """Round-6 regression tests: the q_herfindahl representation fix
-class, the MOR torn-publish self-heal, and plan laziness."""
+class, the merge-on-read torn-publish self-heal, and plan laziness."""
 
 from __future__ import annotations
 
@@ -21,26 +21,48 @@ def test_herfindahl_emits_double(spark, sf_dir):
     assert dict(df.dtypes)["hhi"] == "double"
 
 
-def test_mor_torn_publish_self_heals(spark, sf_dir):
-    """A crash between a dir rename and its _SUCCESS marker leaves a
-    TORN published dir; the next caller must move it aside and
-    republish instead of consuming the torn copy forever."""
-    from proof_of_concept___cdc_w_iceberg_spark.cdc.queries import _mor_paths
-
-    base, dels, delta = _mor_paths(spark, sf_dir)
-    n_delta = spark.read.parquet(delta).count()
-    # Plant the torn state: published delta loses its _SUCCESS marker
-    # AND its data files (a half-written dir), base/deletes stay whole.
-    os.remove(os.path.join(delta, "_SUCCESS"))
-    for f in os.listdir(delta):
-        os.remove(os.path.join(delta, f))
-    base2, dels2, delta2 = _mor_paths(spark, sf_dir)
-    assert (base2, dels2, delta2) == (base, dels, delta)
-    assert os.path.exists(os.path.join(delta2, "_SUCCESS")), (
-        "torn delta dir was not republished"
+def test_mor_torn_publish_self_heals(spark, sf_dir, tmp_path):
+    """The torn states a crash can leave around a merge-on-read commit —
+    an older delta generation beside the newest (crash after the rename,
+    before the old one's removal) and a staged generation never renamed
+    into place — do not leak into ``read()``, and the next commit
+    clears them."""
+    from proof_of_concept___cdc_w_iceberg_spark.cdc.apply import (
+        apply_changes,
+        mirror_diff,
     )
-    assert spark.read.parquet(delta2).count() == n_delta
-    # And the read-side merge built on the healed fixture still runs.
+    from proof_of_concept___cdc_w_iceberg_spark.cdc.bucketed import (
+        DELTA_DIR,
+        BucketedMirror,
+    )
+
+    snap = spark.range(2000).select(
+        F.col("id").alias("k"), F.concat(F.lit("n"), F.col("id")).alias("name"),
+        (F.col("id") * 1.0).alias("bal"))
+    m = BucketedMirror(spark, str(tmp_path / "mirror"), keys=["k"])
+    m.init(snap)
+    schema = "k long, name string, bal double, op string, ts_ms long, off long"
+    batches = [spark.createDataFrame(
+        [(k, f"b{i}", float(i), "u", 10 * (i + 1), k)
+         for k in range(i, 60, 3)], schema) for i in range(3)]
+    root = os.path.join(m.path, DELTA_DIR)
+    m.apply(batches[0], tag="b0")
+    shutil.copytree(os.path.join(root, "v1"), str(tmp_path / "v1"))
+    m.apply(batches[1], tag="b1")
+    assert os.listdir(root) == ["v2"]
+    # Plant the torn states.
+    shutil.copytree(str(tmp_path / "v1"), os.path.join(root, "v1"))
+    staged = f"{m.path}_b2_delta_staged"
+    shutil.copytree(str(tmp_path / "v1"), staged)
+    expected = apply_changes(apply_changes(snap, batches[0], keys=["k"]),
+                             batches[1], keys=["k"])
+    assert mirror_diff(m.read(), expected).count() == 0
+    m.apply(batches[2], tag="b2")
+    assert os.listdir(root) == ["v3"]
+    assert not os.path.exists(staged)
+    expected = apply_changes(expected, batches[2], keys=["k"])
+    assert mirror_diff(m.read(), expected).count() == 0
+    # And the registered merge-on-read query still runs.
     assert QS["q_cdc_merge_on_read"](spark, sf_dir).count() > 0
 
 

@@ -687,13 +687,14 @@ def test_sessionizer_overdue_timeout_closes_inline():
 
 def test_apply_batch_job_budget_and_replay_collapse(spark, tmp_path,
                                                    jobs_in_group):
-    """One micro-batch commit runs at most 7 Spark jobs: the dead-letter
-    probe, the collect of the touched buckets over the raw batch, then
-    the rebalanced write with the compaction inline — no separate dedup
-    shuffle or persisted compaction. Duplicate (key, offset) deliveries
-    inside the batch collapse in the latest-wins compaction, an empty
-    batch is not counted as applied, and a batch whose keys land in
-    some of the mirror's buckets rewrites only those."""
+    """A micro-batch commit that folds runs at most 7 Spark jobs: the
+    delta write with the compaction inline, then the fold's merge — no
+    dead-letter probe, separate dedup shuffle or persisted compaction.
+    A delta commit runs at most 2: the compaction's shuffle and the
+    write. Duplicate (key, offset) deliveries inside the batch collapse
+    in the latest-wins compaction, an empty batch is not counted as
+    applied, and the fold of a delta whose keys land in some of the
+    mirror's buckets rewrites only those."""
     snap = spark.range(200).select(
         F.col("id").alias("k"),
         F.concat(F.lit("n"), F.col("id")).alias("name"),
@@ -710,8 +711,9 @@ def test_apply_batch_job_budget_and_replay_collapse(spark, tmp_path,
     batch = batch.unionByName(batch)  # every event delivered twice
 
     _, n_jobs = jobs_in_group(lambda: pipe._apply_batch(batch, 0))
-    assert n_jobs <= 7, f"one commit ran {n_jobs} Spark jobs"
+    assert n_jobs <= 7, f"one folding commit ran {n_jobs} Spark jobs"
     assert pipe.batches_applied == 1
+    assert pipe._mirror.delta_rows == 0, "48 keys of 200 must fold"
 
     expected = compact_latest(
         snap.select("k", "name", "bal", F.lit("r").alias("op"),
@@ -735,7 +737,12 @@ def test_apply_batch_job_budget_and_replay_collapse(spark, tmp_path,
     assert len(hit) == 2
     before = pipe._mirror.partition_files()
     assert len(before) == 8
-    pipe._apply_batch(encode_envelope(few), 2)
+    _, n_jobs = jobs_in_group(
+        lambda: pipe._apply_batch(encode_envelope(few), 2))
+    assert n_jobs <= 2, f"one delta commit ran {n_jobs} Spark jobs"
+    assert pipe._mirror.delta_rows == 2
+    assert pipe._mirror.partition_files() == before
+    pipe._mirror.compact()
     after = pipe._mirror.partition_files()
     assert {b for b in before if before[b] != after.get(b)} == hit
     expected = compact_latest(
@@ -768,3 +775,36 @@ def test_dead_letters_build_without_spark_jobs(spark, tmp_path,
         "struct<key:bigint,value:string,batch_id:bigint>"
     assert [tuple(r) for r in dlq.collect()] == [(99, "{not json", 3)]
     assert pipe.batches_applied == 1
+
+
+def test_apply_batch_jobs_carry_commit_description(spark, tmp_path,
+                                                   jobs_in_group):
+    """Every Spark job one ``_apply_batch`` launches — the delta write,
+    the fold and the dead-letter write — is described as
+    ``cdc commit batch <batch_id>``, and the caller's description is
+    restored afterwards."""
+    sc = spark.sparkContext
+    pipe = StreamingCdcPipeline(spark, workdir=str(tmp_path / "pipe"))
+    pipe.init_mirror(spark.range(10).select(
+        F.col("id").alias("k"), F.lit("n").alias("name"),
+        F.lit(1.0).alias("bal")))
+    events = spark.createDataFrame(
+        [(k, f"u{k}", 2.0, "u", 2000, k) for k in range(5)],
+        "k long, name string, bal double, op string, ts_ms long, off long")
+    batch = encode_envelope(events).unionByName(
+        spark.createDataFrame([(99, "{not json")], "key long, value string"))
+    group = "commit-description-probe"
+    _, n_jobs = jobs_in_group(lambda: pipe._apply_batch(batch, 7),
+                              group=group)
+    assert n_jobs > 0
+    store = sc._jsc.sc().statusStore()
+    descriptions = {store.job(j).description().get()
+                    for j in sc.statusTracker().getJobIdsForGroup(group)}
+    assert descriptions == {"cdc commit batch 7"}
+    assert pipe.dead_letters().count() == 1
+    sc.setJobDescription("outer")
+    try:
+        pipe._apply_batch(batch, 8)
+        assert sc.getLocalProperty("spark.job.description") == "outer"
+    finally:
+        sc.setJobDescription(None)
