@@ -1,12 +1,12 @@
 """Partition-scoped, merge-on-read CDC mirror — the scale path for the
 no-Iceberg fallback.
 
-The plain fallback (`iceberg.py` merge_into, `streaming/pipeline.py`)
-rewrites the WHOLE mirror per batch: correct, but at 100 TB with a 10 s
-trigger it is a full-table write per commit. The reference never pays
-that cost because the Iceberg sink commits equality deletes + new data
-files per snapshot (`connect-iceberg-sink.json:30-33`) — only touched
-data moves.
+The plain fallback (`iceberg.py` merge_into without Iceberg, i.e.
+`apply.py` apply_changes) rewrites the WHOLE mirror per batch: correct,
+but at 100 TB with a 10 s trigger it is a full-table write per commit.
+The reference never pays that cost because the Iceberg sink commits
+equality deletes + new data files per snapshot
+(`connect-iceberg-sink.json:30-33`) — only touched data moves.
 
 This module restores that property without Iceberg. The mirror is a
 BASE parquet table partitioned by a key-hash bucket column plus at most
@@ -325,15 +325,13 @@ class BucketedMirror(PreparingMirror):
         return os.path.join(self.path, "_schema.json")
 
     def _sidecar(self) -> dict | None:
-        """``{"schema": ..., "n_buckets": ..., "rows": ...}`` from
-        ``init`` (``rows``: the base's row count, kept by every fold);
-        None for a mirror laid out without one (hand-built layouts). A
-        sidecar holding only a schema records no bucket or row count."""
+        """``{"schema": ..., "n_buckets": ..., "rows": ...}`` as ``init``
+        wrote it (``rows``: the base's row count, kept by every fold);
+        None before ``init``."""
         if not os.path.exists(self._schema_path()):
             return None
         with open(self._schema_path()) as f:
-            meta = json.load(f)
-        return meta if "schema" in meta else {"schema": meta}
+            return json.load(f)
 
     def _write_sidecar(self, meta: dict) -> None:
         tmp = self._schema_path() + ".tmp"
@@ -341,23 +339,21 @@ class BucketedMirror(PreparingMirror):
             json.dump(meta, f)
         os.replace(tmp, self._schema_path())
 
-    def _schema(self) -> T.StructType | None:
-        """The row schema from the sidecar; None without one."""
-        meta = self._sidecar()
-        return T.StructType.fromJson(meta["schema"]) if meta else None
+    def _schema(self) -> T.StructType:
+        """The row schema from the sidecar."""
+        return T.StructType.fromJson(self._sidecar()["schema"])
 
     def _empty(self) -> DataFrame:
+        """Zero rows of the sidecar schema, nullability kept."""
         return self.spark.createDataFrame([], self._schema())
 
     def _scan(self) -> DataFrame:
         """Every data file, partition columns included. The schema comes
         from the sidecar, so building the scan runs no footer-reading
-        job; only a mirror without a sidecar falls back to inference."""
-        schema = self._schema()
-        reader = self.spark.read
-        if schema is not None:
-            reader = reader.schema(schema.add(BUCKET_COL, T.IntegerType()))
-        return reader.parquet(self.path)
+        job, and a layout with no data files reads as zero rows (its
+        columns nullable, as a file scan makes them)."""
+        schema = self._schema().add(BUCKET_COL, T.IntegerType())
+        return self.spark.read.schema(schema).parquet(self.path)
 
     def _has_buckets(self) -> bool:
         return any(_leaf_files(self.path))
@@ -389,10 +385,7 @@ class BucketedMirror(PreparingMirror):
             raise ValueError(f"writers must be >= 1, got {writers!r}")
         n = self._n_buckets or sized_bucket_count(snapshot)
         cols = self._partition_cols()
-        counted = Observation()
-        bucketed = snapshot.withColumn(
-            BUCKET_COL, bucket_expr(self.keys, n)).observe(
-                counted, F.count(F.lit(1)).alias("rows"))
+        bucketed = snapshot.withColumn(BUCKET_COL, bucket_expr(self.keys, n))
         part = (bucketed.repartition(
                     writers, F.xxhash64(*[F.col(k) for k in self.keys]))
                 if writers is not None else bucketed.repartition(*cols))
@@ -401,9 +394,11 @@ class BucketedMirror(PreparingMirror):
         # pending delta included). A zero-row partitioned write leaves
         # no data files to infer from, so an empty (or fully-deleted)
         # mirror must still know its row shape. (An Iceberg/catalog
-        # table carries both in table metadata.)
-        self._write_sidecar({"schema": snapshot.schema.jsonValue(),
-                             "n_buckets": n, "rows": counted.get["rows"]})
+        # table carries both in table metadata.) The row count comes
+        # from the written files' footers, as a fold keeps it.
+        self._write_sidecar({
+            "schema": snapshot.schema.jsonValue(), "n_buckets": n,
+            "rows": _parquet_rows(self.path, dict(_leaf_files(self.path)))})
 
     # --- the pending delta ------------------------------------------------
 
@@ -446,10 +441,8 @@ class BucketedMirror(PreparingMirror):
     def _fold_due(self, delta: DataFrame, rows: int) -> bool:
         """Whether a delta of ``rows`` rows (of ``delta``, which carries
         the key columns) belongs in the base: past 1/FOLD_DIVISOR of the
-        base's recorded rows, too big to broadcast its keys, or on a
-        mirror that records no row count."""
-        base = (self._sidecar() or {}).get("rows")
-        return (base is None or rows * FOLD_DIVISOR > base
+        base's recorded rows, or too big to broadcast its keys."""
+        return (rows * FOLD_DIVISOR > self._sidecar()["rows"]
                 or not _fits_broadcast(delta.select(*self.keys), rows))
 
     def read(self) -> DataFrame:
@@ -487,24 +480,17 @@ class BucketedMirror(PreparingMirror):
         releases. Its rows per partition are known before any write, so
         when no delta is pending and the batch alone is due to fold, it
         goes straight to the copy-on-write merge instead of through a
-        delta that would be folded at once; the same holds for a raw
-        batch on a mirror that records no row count.
+        delta that would be folded at once.
         """
-        n = self.n_buckets
         if isinstance(changes, PreparedBatch):
             with changes:
-                rows = self._rows(changes, n)
+                rows = self._rows(changes, self.n_buckets)
                 n_rows = sum(rows.values())
                 if (self._pending() is None
                         and self._fold_due(changes.latest, n_rows)):
                     return self._merge(changes.latest, changes.latest,
                                        sorted(rows), n_rows, op_col, tag)
                 return self._commit_delta(changes.latest, op_col, tag)
-        if "rows" not in (self._sidecar() or {}):
-            rows = self._partition_rows(changes, n)
-            return self._merge(
-                compact_latest(changes, self.keys, self.order_cols), changes,
-                sorted(rows), sum(rows.values()), op_col, tag)
         return self._commit_delta(changes, op_col, tag)
 
     def _commit_delta(self, batch: DataFrame, op_col: str, tag: str) -> list:
@@ -592,12 +578,9 @@ class BucketedMirror(PreparingMirror):
         count."""
         if not touched:
             return []
-        if self._has_buckets():
-            # Partition columns kept: the merged relation is written
-            # partitioned by them.
-            subset = self._scan().filter(self._touched_filter(touched))
-        else:
-            subset = self._with_bucket(self._empty())
+        # Partition columns kept: the merged relation is written
+        # partitioned by them.
+        subset = self._scan().filter(self._touched_filter(touched))
         # Stage before overwriting partitions we are also reading
         # from — the parquet-table analogue of Iceberg's snapshot
         # commit.
@@ -607,12 +590,10 @@ class BucketedMirror(PreparingMirror):
             self.keys, self._partition_cols(), staged, op_col)
         leaves = {self._leaf(p) for p in touched}
         meta = self._sidecar()
-        if meta is not None and "rows" in meta:
-            meta["rows"] += (_parquet_rows(staged, written)
-                             - _parquet_rows(self.path, written | leaves))
+        meta["rows"] += (_parquet_rows(staged, written)
+                         - _parquet_rows(self.path, written | leaves))
         self._publish(staged, written, leaves)
-        if meta is not None and "rows" in meta:
-            self._write_sidecar(meta)
+        self._write_sidecar(meta)
         return touched
 
     def _touched_filter(self, touched: list):
@@ -660,81 +641,37 @@ class BucketedMirror(PreparingMirror):
             out[(*outer, int(bucket)) if outer else int(bucket)] = files
         return out
 
-    def _leaf_partitions(self) -> dict[str, set[str]]:
-        """Relative leaf partition dir -> parquet file names, for any
-        partition depth (bucket, or date/bucket)."""
-        return dict(_leaf_files(self.path))
-
-    def compact(self, max_files: int = 1) -> dict[str, tuple[int, int]]:
+    def compact(self) -> dict[str, tuple[int, int]]:
         """Small-file maintenance: rewrite every leaf partition holding
-        more than ``max_files`` parquet files down to ``max_files`` —
-        the parquet analogue of Iceberg ``rewrite_data_files``
-        (`connect-iceberg-sink.json:19-29`). Content is untouched
-        (``read()`` identical before/after); only the file count per
-        fragmented partition drops. Returns {partition: (before,
-        after)} for the partitions rewritten.
+        more than one parquet file as one file — the parquet analogue of
+        Iceberg ``rewrite_data_files`` (`connect-iceberg-sink.json:19-29`).
+        Content is untouched (``read()`` identical before/after); only
+        the file count per fragmented leaf drops. Returns {leaf dir:
+        (files before, files after)} for the leaves rewritten.
 
-        Scale shape: each fragmented partition is an independent
-        read→coalesce→write of ONE partition dir (a bucket is ~25 GB
-        at the 100 TB/4096-bucket layout) — embarrassingly parallel
-        across partitions, and a no-op scan-skip for compacted ones.
-
+        One Spark job rewrites every fragmented leaf: the scan (sidecar
+        schema, ``basePath``) keeps the partition columns, and
+        repartitioning by them writes one file per leaf dir, which
+        ``_publish`` swaps in by rename. Compacted leaves are not read.
         A pending delta is folded first, so the compacted base holds
         every commit.
         """
         self._fold("compact")
-        frag = {rel: files for rel, files in self._leaf_partitions().items()
-                if len(files) > max_files}
+        frag = {rel: files for rel, files in _leaf_files(self.path)
+                if len(files) > 1}
         if not frag:
             return {}
-        if max_files == 1:
-            # r20 (guide §2.6/§1.2): ONE Spark job over every
-            # fragmented leaf instead of a read→coalesce→write job PER
-            # leaf (the per-job fixed cost dominated — 16 sequential
-            # jobs for a freshly-ingested 16-bucket mirror). basePath
-            # keeps the partition columns; repartitioning by them gives
-            # exactly one file per leaf dir, which then swaps in by
-            # rename. Content is untouched either way (read() identical
-            # before/after — the law test).
-            part_cols = [p.split("=", 1)[0]
-                         for p in next(iter(frag)).split(os.sep)]
-            staged = os.path.join(
-                os.path.dirname(self.path.rstrip(os.sep)),
-                os.path.basename(self.path.rstrip(os.sep)) + "__compact_staged")
-            (self.spark.read.option("basePath", self.path)
-             .parquet(*[os.path.join(self.path, rel) for rel in sorted(frag)])
-             .repartition(*part_cols)
-             .write.mode("overwrite").partitionBy(*part_cols).parquet(staged))
-            done: dict[str, tuple[int, int]] = {}
-            for rel, files in sorted(frag.items()):
-                src = os.path.join(staged, rel)
-                new_files = ([f for f in os.listdir(src)
-                              if f.endswith(".parquet")]
-                             if os.path.isdir(src) else [])
-                full = os.path.join(self.path, rel)
-                for f in files:
-                    os.remove(os.path.join(full, f))
-                for f in new_files:
-                    os.rename(os.path.join(src, f), os.path.join(full, f))
-                done[rel] = (len(files), len(new_files))
-            shutil.rmtree(staged, ignore_errors=True)
-            return done
-        done = {}
-        for rel, files in sorted(frag.items()):
-            full = os.path.join(self.path, rel)
-            staged = f"{full}__compact_staged"
-            # Leaf-dir read: partition values live in the dir name, not
-            # the files, so the rewritten files drop straight back in.
-            (self.spark.read.parquet(full).coalesce(max_files)
-             .write.mode("overwrite").parquet(staged))
-            new_files = [f for f in os.listdir(staged) if f.endswith(".parquet")]
-            for f in files:
-                os.remove(os.path.join(full, f))
-            for f in new_files:
-                os.rename(os.path.join(staged, f), os.path.join(full, f))
-            shutil.rmtree(staged, ignore_errors=True)
-            done[rel] = (len(files), len(new_files))
-        return done
+        cols = self._partition_cols()
+        staged = f"{self.path}__compact_staged"
+        schema = self._schema().add(BUCKET_COL, T.IntegerType())
+        (self.spark.read.schema(schema).option("basePath", self.path)
+         .parquet(*[os.path.join(self.path, rel) for rel in sorted(frag)])
+         .repartition(*cols)
+         .write.mode("overwrite").partitionBy(*cols).parquet(staged))
+        new = dict(_leaf_files(staged))
+        self._publish(staged, set(new), set(frag))
+        return {rel: (len(files), len(new.get(rel, ())))
+                for rel, files in sorted(frag.items())}
 
 
 class TwoLevelMirror(BucketedMirror):

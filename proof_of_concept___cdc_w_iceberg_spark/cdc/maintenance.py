@@ -8,8 +8,10 @@ expire_snapshots actions; this is the parquet-mirror equivalent:
 
 - ``compact_small_files``: rewrite a parquet dir to size-targeted
   files (one coalesced pass; reads once, writes once),
-- ``cleanup_staging``: drop the staged ``_b{N}`` swap dirs the
-  streaming pipeline leaves behind (snapshot-expiration analogue).
+- ``cleanup_staging``: drop the staged swap dirs an interrupted
+  commit leaves next to a mirror (``{mirror}_b{N}_staged`` from a
+  streaming commit's fold, ``{mirror}_b{N}_delta_staged`` from its
+  delta write; snapshot-expiration analogue).
 """
 
 from __future__ import annotations

@@ -1552,11 +1552,10 @@ def q_cdc_compact_files(spark, sf_dir):
        batch, past the fold threshold, so it folds straight into the
        base) — touched buckets rewrite, untouched buckets keep their
        ingest fragmentation;
-    3. ``BucketedMirror.compact(max_files=1)`` — folds a pending delta
-       first (none is left here), then per-partition
-       read→coalesce→write of ONLY still-fragmented leaves
-       (embarrassingly parallel across partitions; compacted leaves
-       are a scan-skip).
+    3. ``BucketedMirror.compact()`` — folds a pending delta first
+       (none is left here), then rewrites ONLY the still-fragmented
+       leaves, one file each, in one Spark job, swapped in by
+       directory rename (compacted leaves are not read).
 
     Laws asserted in-query: the table ends at ≤ 1 file per non-empty
     bucket with the total file count at most half the post-ingest
@@ -1578,7 +1577,7 @@ def q_cdc_compact_files(spark, sf_dir):
     with batch:
         ingest_files = sum(len(fs) for fs in m.partition_files().values())
         m.apply(batch)
-    m.compact(max_files=1)
+    m.compact()
     after = m.partition_files()
     n_after = sum(len(fs) for fs in after.values())
     assert all(len(fs) <= 1 for fs in after.values()), "leaf not bin-packed"
@@ -1586,7 +1585,7 @@ def q_cdc_compact_files(spark, sf_dir):
         f"compaction must at least halve the ingest file count "
         f"({ingest_files} -> {n_after})"
     )
-    assert m.compact(max_files=1) == {}, "second pass must be a no-op"
+    assert m.compact() == {}, "second pass must be a no-op"
     return m.read()
 
 

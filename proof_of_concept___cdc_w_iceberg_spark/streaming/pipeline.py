@@ -9,9 +9,12 @@ Spark mapping:
   CI; swap ``format("kafka")`` + ``subscribePattern`` for the real
   broker — the downstream plan is identical),
 - decode: ``from_json`` envelope schema (cdc/envelope.py),
-- apply: ``foreachBatch`` → latest-wins compaction + MERGE fallback
-  (cdc/apply.py), i.e. streaming upsert with exactly-once table state
-  (checkpoint dir ↔ the reference's offsets file),
+- apply: ``foreachBatch`` → a merge-on-read ``BucketedMirror`` commit
+  (cdc/bucketed.py): the batch compacted latest-wins into the mirror's
+  pending delta, folded into the touched buckets once the delta
+  outgrows a fraction of the base, i.e. streaming upsert with
+  exactly-once table state (checkpoint dir ↔ the reference's offsets
+  file); malformed envelopes go raw to a dead-letter table,
 - cadence: ``trigger(processingTime="10 seconds")`` ↔ commit.interval-ms.
 """
 
@@ -21,7 +24,7 @@ import json
 import os
 import tempfile
 
-from pyspark.sql import DataFrame, Observation, SparkSession
+from pyspark.sql import Column, DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
@@ -41,6 +44,13 @@ def parse_envelopes(batch_df: DataFrame,
     parses to a NULL ``op``)."""
     return batch_df.withColumn(
         ENV_COL, F.from_json(F.col("value"), envelope_schema(row)))
+
+
+def is_malformed(row: T.StructType = ROW_SCHEMA) -> Column:
+    """True for a raw stream record whose envelope, parsed with ``row``
+    as ``parse_envelopes`` parses it, has a NULL ``op``."""
+    return F.from_json(F.col("value"), envelope_schema(row)).getField(
+        "op").isNull()
 
 
 def commit_description(spark: SparkSession, batch_id: int, commit) -> None:
@@ -76,35 +86,26 @@ def envelope_changes(parsed: DataFrame, keys: list[str],
     )
 
 
-class StreamingCdcPipeline:
-    """File-source streaming CDC apply with a bucket-partitioned,
-    merge-on-read parquet mirror table.
+class CdcStreamSink:
+    """The streaming CDC sink: a file-source stream of Debezium
+    envelopes committed by ``foreachBatch`` to ``BucketedMirror``
+    tables. It owns the workdir layout (``input/`` the stream reads,
+    ``checkpoint/``, ``dlq/`` the dead-letter table), the commit step
+    every mirror's slice of a micro-batch goes through
+    (``_commit_target``) and the dead-letter write; a subclass maps a
+    micro-batch to its mirrors in ``_commit``. ``batches_applied``
+    counts the mirror commits that changed a mirror."""
 
-    The mirror is a ``BucketedMirror`` (cdc/bucketed.py): each
-    micro-batch rewrites only the mirror's one pending delta, O(batch +
-    delta) rows in two Spark jobs, never the base — which is what makes
-    a 10 s trigger viable against a 100 TB mirror without Iceberg. Once
-    the delta outgrows a fixed fraction of the base, the commit folds
-    it into the key-hash bucket partitions it touches (O(touched
-    buckets)). ``n_buckets=None`` sizes the bucket count to the
-    snapshot at ``init_mirror`` (one scan split per bucket), so a small
-    mirror is one file per fold. Every job of a commit is described as
-    ``cdc commit batch <batch_id>``.
-    """
-
-    def __init__(self, spark: SparkSession, workdir: str | None = None,
-                 trigger_seconds: int = 10, n_buckets: int | None = None):
+    def __init__(self, spark: SparkSession, workdir: str | None,
+                 trigger_seconds: int):
         self.spark = spark
         self.workdir = workdir or tempfile.mkdtemp(prefix="stream_cdc_")
         self.input_dir = os.path.join(self.workdir, "input")
-        self.mirror_path = os.path.join(self.workdir, "mirror")
         self.checkpoint = os.path.join(self.workdir, "checkpoint")
-        self.trigger_seconds = trigger_seconds
-        os.makedirs(self.input_dir, exist_ok=True)
         self.dlq_path = os.path.join(self.workdir, "dlq")
+        self.trigger_seconds = trigger_seconds
         self.batches_applied = 0
-        self._mirror = BucketedMirror(spark, self.mirror_path, keys=["k"],
-                                      n_buckets=n_buckets)
+        os.makedirs(self.input_dir, exist_ok=True)
 
     def feed(self, enveloped: DataFrame, name: str) -> None:
         """Drop a file of envelope JSON into the stream input (stands in
@@ -116,26 +117,24 @@ class StreamingCdcPipeline:
                 f.write(json.dumps(r) + "\n")
         os.rename(path + ".tmp", path)
 
-    def init_mirror(self, snapshot: DataFrame) -> None:
-        self._mirror.init(snapshot)
-
     def _apply_batch(self, batch_df: DataFrame, batch_id: int) -> None:
         """foreachBatch: decode → DLQ-split → mirror commit (the batch
-        compacted into the pending delta, folded when due).
+        compacted into the pending delta, folded when due), every job
+        described as ``cdc commit batch <batch_id>``.
 
         Malformed envelopes (mandatory ``op`` null after PERMISSIVE
         from_json) are written raw to the dead-letter table instead of
-        flowing into the merge as null-key rows — the streaming twin of
-        q_cdc_dead_letter (Kafka Connect ``errors.tolerance: all`` +
-        DLQ topic). They are counted by an ``observe`` on the parsed
-        batch, which the mirror commit's write materializes, so no
-        probe job looks for them; the DLQ partition is written only
-        when the count is positive. The DLQ write is idempotent like
-        the mirror path:
-        partitioned by batch_id with dynamic partition overwrite, so a
-        micro-batch replayed after failure/restart replaces its own
-        DLQ partition rather than appending duplicate dead letters
-        (foreachBatch is at-least-once).
+        flowing into the merge as null-key rows or tombstones — the
+        streaming twin of q_cdc_dead_letter (Kafka Connect
+        ``errors.tolerance: all`` + DLQ topic). They are counted by an
+        ``observe`` on the parsed batch, which the mirror commit's write
+        materializes, so no probe job looks for them; the DLQ partition
+        is written only when a batch has a dead letter. The DLQ write is
+        idempotent like the mirror path: partitioned by batch_id with
+        dynamic partition overwrite, so a micro-batch replayed after
+        failure/restart replaces its own DLQ partition rather than
+        appending duplicate dead letters (foreachBatch is
+        at-least-once).
 
         Idempotent apply (`q_stream_dedup`): duplicate (key, offset)
         deliveries are the same event, so the mirror's latest-wins
@@ -144,30 +143,41 @@ class StreamingCdcPipeline:
         (`connect-standalone.properties:13`). An empty batch is a no-op
         inside ``apply``, which returns no touched buckets for it.
         """
-        commit_description(self.spark, batch_id,
-                           lambda: self._commit(batch_df, batch_id))
-
-    def _commit(self, batch_df: DataFrame, batch_id: int) -> None:
         # A batch the optimizer proves empty (a ``limit(0)`` frame)
-        # commits nothing, and the observe below would be pruned with
-        # it, leaving its observation without metrics.
+        # commits nothing, and the commit step's observe would be
+        # pruned with it, leaving its observation without metrics.
         max_rows = batch_df._jdf.queryExecution().optimizedPlan().maxRows()
-        if max_rows.isDefined() and max_rows.get() == 0:
-            return
+        if not (max_rows.isDefined() and max_rows.get() == 0):
+            commit_description(self.spark, batch_id,
+                               lambda: self._commit(batch_df, batch_id))
+
+    def _commit_target(self, mirror: BucketedMirror, records: DataFrame,
+                       row: T.StructType, batch_id: int) -> int:
+        """Commit one mirror's records of a micro-batch: parse them
+        once, count the malformed ones with an ``observe`` and commit
+        the rest (``envelope_changes`` → ``mirror.apply``). Returns the
+        malformed count. The observation completes only if the commit's
+        write runs in the session of ``records`` (a foreachBatch frame's
+        own), which is why the mirror keeps the batch on the left of its
+        (batch ∪ delta) union."""
         is_bad = F.col(f"{ENV_COL}.op").isNull()
         malformed = Observation()
-        parsed = parse_envelopes(batch_df).observe(
+        parsed = parse_envelopes(records, row).observe(
             malformed, F.count_if(is_bad).alias("rows"))
-        changes = envelope_changes(parsed.filter(~is_bad), keys=["k"])
-        if self._mirror.apply(changes, tag=f"b{batch_id}"):
+        changes = envelope_changes(parsed.filter(~is_bad), mirror.keys, row)
+        if mirror.apply(changes, tag=f"b{batch_id}"):
             self.batches_applied += 1
-        if malformed.get["rows"]:
-            (parse_envelopes(batch_df).filter(is_bad).select("key", "value")
-             .withColumn("batch_id", F.lit(batch_id).cast("long"))
-             .write.mode("overwrite")
-             .option("partitionOverwriteMode", "dynamic")
-             .partitionBy("batch_id")
-             .parquet(self.dlq_path))
+        return malformed.get["rows"]
+
+    def _dead_letter(self, records: DataFrame, batch_id: int) -> None:
+        """Write ``records`` raw as micro-batch ``batch_id``'s DLQ
+        partition, replacing it on a replay."""
+        (records.select("key", "value")
+         .withColumn("batch_id", F.lit(batch_id).cast("long"))
+         .write.mode("overwrite")
+         .option("partitionOverwriteMode", "dynamic")
+         .partitionBy("batch_id")
+         .parquet(self.dlq_path))
 
     def start(self, trigger_once: bool = True):
         stream = (
@@ -184,17 +194,47 @@ class StreamingCdcPipeline:
             writer = writer.trigger(processingTime=f"{self.trigger_seconds} seconds")
         return writer.start()
 
-    def mirror(self) -> DataFrame:
-        return self._mirror.read()
-
     def dead_letters(self) -> DataFrame:
-        """Raw records that failed envelope decode (empty if none)."""
+        """Raw records the sink could not commit (empty if none)."""
         if not os.path.isdir(self.dlq_path):
             return self.spark.createDataFrame([], DLQ_SCHEMA)
         # The declared schema types the batch_id partition column
         # (inference would read INT for small ids) and spares the
         # footer-reading inference job.
         return self.spark.read.schema(DLQ_SCHEMA).parquet(self.dlq_path)
+
+
+class StreamingCdcPipeline(CdcStreamSink):
+    """File-source streaming CDC apply with a bucket-partitioned,
+    merge-on-read parquet mirror table.
+
+    The mirror is a ``BucketedMirror`` (cdc/bucketed.py): each
+    micro-batch rewrites only the mirror's one pending delta, O(batch +
+    delta) rows in two Spark jobs, never the base — which is what makes
+    a 10 s trigger viable against a 100 TB mirror without Iceberg. Once
+    the delta outgrows a fixed fraction of the base, the commit folds
+    it into the key-hash bucket partitions it touches (O(touched
+    buckets)). ``n_buckets=None`` sizes the bucket count to the
+    snapshot at ``init_mirror`` (one scan split per bucket), so a small
+    mirror is one file per fold.
+    """
+
+    def __init__(self, spark: SparkSession, workdir: str | None = None,
+                 trigger_seconds: int = 10, n_buckets: int | None = None):
+        super().__init__(spark, workdir, trigger_seconds)
+        self.mirror_path = os.path.join(self.workdir, "mirror")
+        self._mirror = BucketedMirror(spark, self.mirror_path, keys=["k"],
+                                      n_buckets=n_buckets)
+
+    def init_mirror(self, snapshot: DataFrame) -> None:
+        self._mirror.init(snapshot)
+
+    def _commit(self, batch_df: DataFrame, batch_id: int) -> None:
+        if self._commit_target(self._mirror, batch_df, ROW_SCHEMA, batch_id):
+            self._dead_letter(batch_df.filter(is_malformed()), batch_id)
+
+    def mirror(self) -> DataFrame:
+        return self._mirror.read()
 
 
 def kafka_available(spark: SparkSession) -> bool:

@@ -157,14 +157,13 @@ def test_compaction_halves_files_content_unchanged(spark, tmp_path):
     snap = _snapshot(spark)
     # Fragment deliberately: 8 writer tasks × each holding rows of
     # every bucket → ~8 files per partition dir.
-    (m._with_bucket(snap).repartition(8)
-     .write.partitionBy(BUCKET_COL).parquet(path))
+    m.init(snap, writers=8)
     before_files = m.partition_files()
     frag = {b for b, fs in before_files.items() if len(fs) > 1}
     assert frag, "fixture should produce fragmented partitions"
     before_rows = sorted(map(tuple, m.read().collect()))
 
-    done = m.compact(max_files=1)
+    done = m.compact()
     assert set(done) == {f"{BUCKET_COL}={b}" for b in frag}
     after_files = m.partition_files()
     for b in frag:
@@ -174,7 +173,7 @@ def test_compaction_halves_files_content_unchanged(spark, tmp_path):
         )
     assert sorted(map(tuple, m.read().collect())) == before_rows
     # Idempotent: a second pass finds nothing to do.
-    assert m.compact(max_files=1) == {}
+    assert m.compact() == {}
 
 
 def _dated_snapshot(spark):
@@ -314,8 +313,7 @@ def test_snapshot_mirror_delete_and_expire(spark, tmp_path):
 def test_mirror_reads_build_without_spark_jobs(spark, tmp_path, jobs_in_group):
     """Building a read runs no footer-reading (schema inference) job:
     BucketedMirror takes its schema from the init sidecar, for the
-    pending delta too, SnapshotMirror from the manifest. Without a
-    sidecar the bucketed read still works, by inference."""
+    pending delta too, SnapshotMirror from the manifest."""
     from proof_of_concept___cdc_w_iceberg_spark.cdc.versioned import SnapshotMirror
 
     snap = _snapshot(spark)
@@ -345,10 +343,6 @@ def test_mirror_reads_build_without_spark_jobs(spark, tmp_path, jobs_in_group):
         sorted(map(tuple, snap.collect()))
     assert sm.diff(0, 1).count() == 1
     assert {r["k"]: r["name"] for r in dm.read().collect()}[3] == "x"
-
-    os.remove(os.path.join(bm.path, "_schema.json"))
-    assert shape(bm.read()) == shape(snap)
-    assert bm.read().count() == 100
 
 
 def test_apply_writes_one_file_per_touched_bucket(spark, tmp_path):
@@ -399,6 +393,38 @@ def test_apply_splits_oversized_bucket_across_writers(spark, tmp_path):
     assert max(len(fs) for fs in m.partition_files().values()) > 1
     expected = apply_changes(snap, batch, keys=["k"])
     assert mirror_diff(m.read(), expected).count() == 0
+
+
+@pytest.mark.parametrize("shape", ["local_relation", "filtered_scan"])
+def test_init_on_zero_row_snapshot(spark, tmp_path, shape):
+    """A zero-row snapshot inits an empty mirror whatever its plan: a
+    local relation, or a parquet scan whose filter matches no row. The
+    sidecar records 0 rows, ``read()`` returns 0 rows of the snapshot's
+    schema, and a later apply equals a latest-wins rebuild."""
+    schema = "k long, name string, bal double"
+    if shape == "local_relation":
+        snap = spark.createDataFrame([], schema)
+    else:
+        src = str(tmp_path / "src")
+        _snapshot(spark).write.parquet(src)
+        snap = spark.read.schema(schema).parquet(src).filter(F.col("k") < 0)
+    m = BucketedMirror(spark, str(tmp_path / "mirror"), keys=["k"],
+                       n_buckets=N_BUCKETS)
+    m.init(snap)
+    assert m._sidecar()["rows"] == 0
+    empty = m.read()
+    assert empty.schema.simpleString() == \
+        "struct<k:bigint,name:string,bal:double>"
+    assert empty.count() == 0
+    batch = _changes(spark, [(1, "a", 1.0, "c", 100, 1),
+                             (2, "b", 2.0, "c", 100, 2),
+                             (1, "a2", 3.0, "u", 200, 3),
+                             (2, None, None, "d", 300, 4),
+                             (3, "c", 4.0, "c", 300, 5)])
+    m.apply(batch)
+    expected = apply_changes(snap, batch, keys=["k"])
+    assert mirror_diff(m.read(), expected).count() == 0
+    assert m._sidecar()["rows"] == 2
 
 
 def _sidecar_buckets(m):

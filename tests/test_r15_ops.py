@@ -52,7 +52,7 @@ def test_compact_files_content_invisible_and_ledger(spark, sf_dir):
     )
     m.apply(changes)
     before_rows = sorted(map(tuple, m.read().collect()))
-    done = m.compact(max_files=1)
+    done = m.compact()
     after_rows = sorted(map(tuple, m.read().collect()))
     assert after_rows == before_rows, "compaction changed table content"
     after = m.partition_files()
@@ -61,7 +61,7 @@ def test_compact_files_content_invisible_and_ledger(spark, sf_dir):
     assert n_after * 2 <= n_ingest, (n_ingest, n_after)
     # Only still-fragmented leaves were rewritten (scan-skip law).
     assert all(rel.startswith("__bucket=") for rel in done)
-    assert m.compact(max_files=1) == {}
+    assert m.compact() == {}
 
 
 def test_compact_files_query_idempotent_rerun(spark, sf_dir):
@@ -531,6 +531,7 @@ def test_two_level_compact_binpacks_fragmented_cells(spark, tmp_path):
     from proof_of_concept___cdc_w_iceberg_spark.cdc.bucketed import (
         BUCKET_COL,
         TwoLevelMirror,
+        _leaf_files,
     )
 
     path = str(tmp_path / "mirror")
@@ -543,14 +544,14 @@ def test_two_level_compact_binpacks_fragmented_cells(spark, tmp_path):
     # Fragment via the cheap-ingest path: 6 writer tasks each holding
     # rows of every (year, bucket) cell.
     m.init(snap, writers=6)
-    before = m._leaf_partitions()
+    before = dict(_leaf_files(m.path))
     frag = {rel for rel, fs in before.items() if len(fs) > 1}
     assert frag, "fixture should fragment two-level leaves"
     before_rows = sorted(map(tuple, m.read().collect()))
 
-    done = m.compact(max_files=1)
+    done = m.compact()
     assert set(done) == frag
-    after = m._leaf_partitions()
+    after = dict(_leaf_files(m.path))
     assert all(len(fs) == 1 for rel, fs in after.items() if rel in frag)
     # Leaves at year/bucket depth, never intermediate dirs.
     assert all(
@@ -559,7 +560,7 @@ def test_two_level_compact_binpacks_fragmented_cells(spark, tmp_path):
         for rel in done
     )
     assert sorted(map(tuple, m.read().collect())) == before_rows
-    assert m.compact(max_files=1) == {}
+    assert m.compact() == {}
 
 
 def test_upsert_apply_changes_replay_idempotent(spark, sf_dir):

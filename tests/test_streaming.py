@@ -6,9 +6,11 @@ listener (heartbeat parity, `connect-sqlserver-source.json:13`).
 
 from __future__ import annotations
 
+import os
 import tempfile
 import time
 
+import pytest
 from pyspark.sql import functions as F
 
 from proof_of_concept___cdc_w_iceberg_spark.cdc.apply import compact_latest, mirror_diff
@@ -19,6 +21,12 @@ from proof_of_concept___cdc_w_iceberg_spark.sources.tables import load
 from proof_of_concept___cdc_w_iceberg_spark.streaming.pipeline import (
     StreamingCdcPipeline,
 )
+from proof_of_concept___cdc_w_iceberg_spark.streaming.routing import (
+    RoutedStreamingCdcPipeline,
+)
+
+EVENTS = "k long, name string, bal double, op string, ts_ms long, off long"
+ACCOUNT, PRODUCT = "cdc.commerce_account", "cdc.commerce_product"
 
 
 def test_streaming_cdc_apply_matches_batch(spark, sf_dir):
@@ -226,10 +234,6 @@ def test_routed_pipeline_fans_out_to_two_mirrors(spark, sf_dir):
     """The reference's full topology: one stream of mixed account +
     product envelopes, routed by _cdc.target to two auto-created
     mirrors, each upserted independently."""
-    from proof_of_concept___cdc_w_iceberg_spark.streaming.routing import (
-        RoutedStreamingCdcPipeline,
-    )
-
     ch = changelog(spark, sf_dir)
     account = encode_envelope(ch, schema_name="commerce", table="account")
     # product stream: same change shapes, shifted keys, other table
@@ -259,6 +263,131 @@ def test_routed_pipeline_fans_out_to_two_mirrors(spark, sf_dir):
     ).count() == 0
     # routing isolation: no key bleed between tables
     assert acc.join(prod, "k", "inner").count() == 0
+
+
+def _latest(*batches):
+    """Latest-wins mirror rows ``(k, name, bal)``, sorted, of the
+    change rows in ``batches``."""
+    state = {}
+    for k, name, bal, op, _, _ in sorted(
+            (r for b in batches for r in b), key=lambda r: (r[4], r[5])):
+        if op == "d":
+            state.pop(k, None)
+        else:
+            state[k] = (k, name, bal)
+    return sorted(state.values())
+
+
+def _rows(df):
+    return sorted(map(tuple, df.collect()))
+
+
+def _run(pipe):
+    assert pipe.start().awaitTermination(300), "stream did not finish"
+
+
+def _events(spark, rows, table="account"):
+    return encode_envelope(spark.createDataFrame(rows, EVENTS), table=table)
+
+
+def test_routed_pipeline_dead_letters_and_restart(spark, tmp_path):
+    """One routed micro-batch mixing two declared targets, an
+    undeclared target, an unparseable line and an op-less envelope for
+    an existing key: the op-less key stays in its mirror, the DLQ holds
+    exactly the raw bad and unrouted records (a replay does not grow
+    it), each mirror equals a latest-wins rebuild of its good records,
+    and a declared target with no records reads as an empty frame of
+    its row schema. A new pipeline on the same workdir opens those
+    mirrors: its first batch adds to them instead of re-creating them
+    empty."""
+    idle = "cdc.commerce_idle"
+    declared = {ACCOUNT: ["k"], PRODUCT: ["k"], idle: ["k"]}
+    workdir = str(tmp_path / "pipe")
+    pipe = RoutedStreamingCdcPipeline(spark, declared, workdir=workdir)
+    acc0 = [(1, "a", 1.0, "c", 1000, 1), (2, "b", 1.0, "c", 1000, 2)]
+    pipe.feed(_events(spark, acc0), "b0")
+    _run(pipe)
+
+    acc1 = [(2, "b2", 2.0, "u", 2000, 3), (3, "c", 1.0, "c", 2000, 4)]
+    prod1 = [(10, "p", 5.0, "c", 2000, 5), (11, "q", 6.0, "c", 2000, 6),
+             (10, None, None, "d", 2100, 7)]
+    opless = ('{"after":{"k":1,"name":"z","bal":9.0},"source":{"schema":'
+              '"commerce","table":"account","lsn":8,"ts_ms":2000},'
+              '"ts_ms":2000}')
+    bad = (spark.createDataFrame([(1, opless), (99, "{not json")],
+                                 "key long, value string")
+           .unionByName(_events(spark, [(20, "g", 1.0, "c", 2000, 9)],
+                                table="ghost")))
+    pipe.feed(_events(spark, acc1)
+              .unionByName(_events(spark, prod1, table="product"))
+              .unionByName(bad), "b1")
+    _run(pipe)
+
+    dead = _rows(bad)
+    assert _rows(pipe.dead_letters()) == [(*r, 1) for r in dead]
+    assert _rows(pipe.mirror(ACCOUNT)) == _latest(acc0, acc1)
+    assert _rows(pipe.mirror(PRODUCT)) == _latest(prod1)
+    empty = pipe.mirror(idle)
+    assert empty.schema.simpleString() == \
+        "struct<k:bigint,name:string,bal:double>"
+    assert empty.collect() == []
+
+    # foreachBatch is at-least-once: a replay of batch 1 neither grows
+    # the DLQ nor changes a mirror.
+    raw = spark.read.schema("key long, value string").json(
+        os.path.join(pipe.input_dir, "b1.json"))
+    pipe._apply_batch(raw, 1)
+    assert _rows(pipe.dead_letters()) == [(*r, 1) for r in dead]
+    assert _rows(pipe.mirror(ACCOUNT)) == _latest(acc0, acc1)
+    assert _rows(pipe.mirror(PRODUCT)) == _latest(prod1)
+
+    again = RoutedStreamingCdcPipeline(spark, declared, workdir=workdir)
+    assert _rows(again.mirror(ACCOUNT)) == _latest(acc0, acc1)
+    acc2 = [(4, "d", 1.0, "c", 3000, 10), (1, "a2", 2.0, "u", 3000, 11)]
+    again.feed(_events(spark, acc2), "b2")
+    _run(again)
+    assert _rows(again.mirror(ACCOUNT)) == _latest(acc0, acc1, acc2)
+    assert _rows(again.mirror(PRODUCT)) == _latest(prod1)
+
+
+@pytest.mark.parametrize("routed", [False, True], ids=["single", "routed"])
+def test_malformed_batch_commits_onto_pending_delta(spark, tmp_path, routed):
+    """A streamed micro-batch with malformed records, committed while
+    the mirror has a pending delta, finishes: the batch stays on the
+    left of the (batch ∪ delta) union, so the write runs in the
+    foreachBatch session where the commit step's malformed-count
+    observe is registered (with the delta on the left the observation
+    never completes and the stream hangs). The DLQ holds the bad
+    records and the mirror the good ones."""
+    base = [(k, f"n{k}", 1.0, "c", 1000, k) for k in range(200)]
+    delta = [(1, "d1", 2.0, "u", 2000, 1001)]
+    if routed:
+        pipe = RoutedStreamingCdcPipeline(spark, {ACCOUNT: ["k"]},
+                                          workdir=str(tmp_path / "pipe"))
+        pipe.feed(_events(spark, base), "b0")
+        read = lambda: pipe.mirror(ACCOUNT)  # noqa: E731
+        mirror = lambda: pipe.mirrors[ACCOUNT]  # noqa: E731
+    else:
+        pipe = StreamingCdcPipeline(spark, workdir=str(tmp_path / "pipe"),
+                                    n_buckets=8)
+        pipe.init_mirror(spark.createDataFrame(base, EVENTS)
+                         .select("k", "name", "bal"))
+        read, mirror = pipe.mirror, lambda: pipe._mirror
+    pipe.feed(_events(spark, delta), "b1")
+    _run(pipe)
+    assert mirror().delta_rows > 0
+
+    good = [(2, "g2", 3.0, "u", 3000, 2002), (3, None, None, "d", 3000, 2003)]
+    bad = spark.createDataFrame([(98, "{not json"), (99, '{"ts_ms":1}')],
+                                "key long, value string")
+    pipe.feed(_events(spark, good).unionByName(bad), "b2")
+    q = pipe.start()
+    try:
+        assert q.awaitTermination(120), "the malformed batch never committed"
+    finally:
+        q.stop()
+    assert _rows(pipe.dead_letters().select("key", "value")) == _rows(bad)
+    assert _rows(read()) == _latest(base, delta, good)
 
 
 def test_kafka_gate_reports_cleanly(spark):
