@@ -120,24 +120,6 @@ def mirror_diff(mirror: DataFrame, expected: DataFrame) -> DataFrame:
     return mirror.exceptAll(expected).unionByName(expected.exceptAll(mirror))
 
 
-def evolve_schema(target: DataFrame, changes: DataFrame) -> DataFrame:
-    """Widen ``target`` with any data column ``changes`` carries that
-    the target lacks (typed NULLs for existing rows) — the parquet
-    fallback for Iceberg sink schema evolution, where a drifted source
-    payload adds columns and the sink table follows
-    (`connect-iceberg-sink.json:15-16` upsert mode with evolving
-    Debezium payloads). Column ORDER follows the target (new columns
-    append), matching Iceberg's add-column-at-end semantics; dropped
-    source columns are NOT removed (Iceberg keeps them, readers see
-    NULL)."""
-    have = set(target.columns)
-    out = target
-    for f in changes.schema.fields:
-        if f.name not in have:
-            out = out.withColumn(f.name, F.lit(None).cast(f.dataType))
-    return out
-
-
 # NOTE: the keyed snapshot diff lives in cdc/diff.py (table_changes) —
 # one definition, null-safe keys, property-tested round-trip law; pass
 # images="both" for the Delta-CDF before/after shape.

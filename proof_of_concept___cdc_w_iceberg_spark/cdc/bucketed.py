@@ -67,6 +67,7 @@ from __future__ import annotations
 
 import json
 import os
+import re
 import shutil
 
 import pyarrow.parquet as pq
@@ -75,6 +76,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from .apply import compact_latest, upsert_compacted
+from .evolve import evolved_schema
 
 BUCKET_COL = "__bucket"
 # Bucket count for a snapshot whose size the planner cannot estimate
@@ -95,6 +97,24 @@ FOLD_DIVISOR = 16
 # came from, and the op column a delta carries as a compacted batch.
 _SRC = "__src"
 _FOLD_OP = "__op"
+# A mirror stages each write in a swap dir next to it: a delta commit's
+# next generation, a fold's merged leaves, compact()'s rewritten leaves.
+STAGED_KINDS = ("delta", "merge", "rewrite")
+
+
+def staged_path(path: str, tag: str, kind: str) -> str:
+    """The swap dir a ``kind`` write of the mirror at ``path`` stages
+    in: ``<mirror>_<tag>_<kind>_staged``. Underscores in ``tag`` become
+    hyphens, so the name parses back to exactly one mirror
+    (``is_staged_of``): cleaning ``<m>`` never takes ``<m>_x``'s dirs."""
+    return f"{path}_{tag.replace('_', '-')}_{kind}_staged"
+
+
+def is_staged_of(path: str, name: str) -> bool:
+    """Whether sibling dir ``name`` is a ``staged_path`` of ``path``."""
+    return re.fullmatch(
+        rf"{re.escape(os.path.basename(path))}_[^_]+_({'|'.join(STAGED_KINDS)})_staged",
+        name) is not None
 
 
 def bucket_expr(keys: list[str], n_buckets: int):
@@ -343,6 +363,19 @@ class BucketedMirror(PreparingMirror):
         """The row schema from the sidecar."""
         return T.StructType.fromJson(self._sidecar()["schema"])
 
+    def add_columns(self, row: T.StructType) -> T.StructType:
+        """Append ``row``'s columns the mirror lacks, nullable, to the
+        sidecar schema (``evolved_schema``) and return the new schema:
+        Iceberg ADD COLUMNS, metadata only. Base and delta files written
+        before read NULL for them, as every scan reads with the sidecar
+        schema."""
+        meta = self._sidecar()
+        schema = evolved_schema(self._schema(), row)
+        if len(schema) > len(meta["schema"]["fields"]):
+            meta["schema"] = schema.jsonValue()
+            self._write_sidecar(meta)
+        return schema
+
     def _empty(self) -> DataFrame:
         """Zero rows of the sidecar schema, nullability kept."""
         return self.spark.createDataFrame([], self._schema())
@@ -522,7 +555,7 @@ class BucketedMirror(PreparingMirror):
             seen, F.count(F.lit(1)).alias("rows"),
             F.collect_set(part).alias("parts"),
             F.collect_set(F.when(F.col(_SRC) == 1, part)).alias("touched"))
-        staged = f"{self.path}_{tag}_delta_staged"
+        staged = staged_path(self.path, tag, "delta")
         (delta.select(*schema.fieldNames(), DELETED_COL)
          .write.mode("overwrite").parquet(staged))
         got = seen.get
@@ -584,7 +617,7 @@ class BucketedMirror(PreparingMirror):
         # Stage before overwriting partitions we are also reading
         # from — the parquet-table analogue of Iceberg's snapshot
         # commit.
-        staged = f"{self.path}_{tag}_staged"
+        staged = staged_path(self.path, tag, "merge")
         written = merge_staged(
             subset, self._with_bucket(latest), batch, n_rows,
             self.keys, self._partition_cols(), staged, op_col)
@@ -662,7 +695,7 @@ class BucketedMirror(PreparingMirror):
         if not frag:
             return {}
         cols = self._partition_cols()
-        staged = f"{self.path}__compact_staged"
+        staged = staged_path(self.path, "compact", "rewrite")
         schema = self._schema().add(BUCKET_COL, T.IntegerType())
         (self.spark.read.schema(schema).option("basePath", self.path)
          .parquet(*[os.path.join(self.path, rel) for rel in sorted(frag)])

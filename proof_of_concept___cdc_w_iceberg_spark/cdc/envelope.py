@@ -1,4 +1,4 @@
-"""Debezium change-event envelope: schema, encode, decode.
+"""Debezium change-event envelope: the one encoder and decoder.
 
 The reference transports JSON-with-schema Debezium envelopes
 (`kafka/config/connect-standalone.properties:2-5`; envelope produced
@@ -8,9 +8,15 @@ The sink's DebeziumTransform flattens them and adds a ``_cdc`` struct
 with routing target ``cdc.{schema}_{table}``
 (`connect-iceberg-sink.json:10-13`).
 
-Spark-first mapping: the envelope is a nested ``StructType``; decode is
-``from_json`` + ``select("after.*", ...)`` — all JVM-side, codegen'd,
-no Python in the hot path.
+Spark-first mapping: the envelope is a nested ``StructType``. Every
+consumer (both stream sinks, the schema-evolving apply, the batch
+``decode_envelope`` and the CDC queries) parses a record's ``value``
+once with ``parse_envelopes`` (PERMISSIVE ``from_json``: a malformed
+record parses to a NULL ``op``, which ``is_malformed`` tests on a raw
+record) and flattens it with ``envelope_changes``; ``cdc_target`` is
+the one routing-target formula. A JSON-with-schema record goes through
+the same parse: the caller passes its ``$.payload`` half as ``value``.
+All of it is JVM-side and codegen'd, with no Python in the hot path.
 """
 
 from __future__ import annotations
@@ -24,23 +30,21 @@ def row_schema(fields: list[tuple[str, T.DataType]]) -> T.StructType:
     return T.StructType([T.StructField(n, t, True) for n, t in fields])
 
 
+SOURCE_SCHEMA = row_schema([
+    ("db", T.StringType()), ("schema", T.StringType()), ("table", T.StringType()),
+    ("lsn", T.LongType()), ("ts_ms", T.LongType()), ("snapshot", T.StringType()),
+])
+# The parsed envelope struct column ``parse_envelopes`` adds.
+ENV_COL = "__env"
+
+
 def envelope_schema(row: T.StructType) -> T.StructType:
     """Envelope for a given row schema (before/after images + source)."""
-    source = T.StructType(
-        [
-            T.StructField("db", T.StringType(), True),
-            T.StructField("schema", T.StringType(), True),
-            T.StructField("table", T.StringType(), True),
-            T.StructField("lsn", T.LongType(), True),
-            T.StructField("ts_ms", T.LongType(), True),
-            T.StructField("snapshot", T.StringType(), True),
-        ]
-    )
     return T.StructType(
         [
             T.StructField("before", row, True),
             T.StructField("after", row, True),
-            T.StructField("source", source, True),
+            T.StructField("source", SOURCE_SCHEMA, True),
             T.StructField("op", T.StringType(), True),
             T.StructField("ts_ms", T.LongType(), True),
         ]
@@ -86,33 +90,61 @@ class MalformedEnvelopeError(ValueError):
     (`connect-sqlserver-source.json:19`, `connect-iceberg-sink.json:7`)."""
 
 
-def decode_envelope(df: DataFrame, schema: T.StructType = ENVELOPE_SCHEMA,
-                    value_col: str = "value", strict: bool = False) -> DataFrame:
-    """``from_json`` decode + flatten: after-image columns, op, ordering
-    keys — the Spark equivalent of the sink's DebeziumTransform
-    (`connect-iceberg-sink.json:10-12`).
+def parse_envelopes(df: DataFrame, row: T.StructType = ROW_SCHEMA) -> DataFrame:
+    """``df`` plus its ``value`` envelope JSON parsed ONCE with ``row``
+    as the before/after image into ``ENV_COL`` (PERMISSIVE
+    ``from_json``: a malformed record parses to a NULL ``op``)."""
+    return df.withColumn(ENV_COL, F.from_json(F.col("value"), envelope_schema(row)))
 
-    ``strict=True`` reproduces ``errors.tolerance: none``: any record
-    that doesn't parse (op comes back NULL) aborts the batch instead of
-    flowing through as nulls. One extra pass over the batch — use
-    inside foreachBatch where the batch is already small/cached."""
-    env = F.from_json(F.col(value_col), schema)
-    if strict:
-        bad = df.filter(env.getField("op").isNull()).limit(1).collect()
-        if bad:
-            raw = bad[0][value_col]  # may be NULL (op parses NULL too)
-            raise MalformedEnvelopeError(
-                f"unparseable change event (errors.tolerance=none): "
-                f"{raw[:200] if raw is not None else None!r}"
-            )
-    return df.select(
-        env.getField("after").alias("after"),
-        env.getField("before").alias("before"),
+
+def is_malformed(row: T.StructType = ROW_SCHEMA) -> Column:
+    """True for a raw record whose envelope, parsed with ``row`` as
+    ``parse_envelopes`` parses it, has a NULL ``op``."""
+    return F.from_json(F.col("value"), envelope_schema(row)).getField("op").isNull()
+
+
+def envelope_changes(parsed: DataFrame, keys: list[str],
+                     row: T.StructType = ROW_SCHEMA) -> DataFrame:
+    """Flat change rows from ``parse_envelopes`` output: each key from
+    the after-image (the before-image for deletes), the other row
+    columns from the after-image, then ``op``, ``ts_ms``, the source
+    LSN as ``off`` and the routing target as ``_cdc_target`` — the
+    sink's DebeziumTransform flatten (`connect-iceberg-sink.json:10-12`)."""
+    env = F.col(ENV_COL)
+    return parsed.select(
+        *[F.coalesce(env.getField("after").getField(k),
+                     env.getField("before").getField(k)).alias(k)
+          for k in keys],
+        *[env.getField("after").getField(f.name).alias(f.name)
+          for f in row.fields if f.name not in keys],
         env.getField("op").alias("op"),
         env.getField("ts_ms").alias("ts_ms"),
         env.getField("source").getField("lsn").alias("off"),
         cdc_target(env.getField("source")).alias("_cdc_target"),
     )
+
+
+def decode_envelope(df: DataFrame, keys: list[str] = ("k",),
+                    row: T.StructType = ROW_SCHEMA,
+                    strict: bool = False) -> DataFrame:
+    """Batch decode: ``envelope_changes`` over ``parse_envelopes``
+    (``keys`` default to the canonical fixture row's id-column).
+
+    ``strict=True`` reproduces ``errors.tolerance: none``: any record
+    that doesn't parse (op comes back NULL) aborts the batch instead of
+    flowing through as nulls. One extra pass over the batch — use
+    inside foreachBatch where the batch is already small/cached."""
+    parsed = parse_envelopes(df, row)
+    if strict:
+        bad = (parsed.filter(F.col(ENV_COL).getField("op").isNull())
+               .select("value").limit(1).collect())
+        if bad:
+            raw = bad[0][0]  # may be NULL (op parses NULL too)
+            raise MalformedEnvelopeError(
+                f"unparseable change event (errors.tolerance=none): "
+                f"{raw[:200] if raw is not None else None!r}"
+            )
+    return envelope_changes(parsed, list(keys), row)
 
 
 def cdc_target(source: Column) -> Column:
@@ -122,23 +154,31 @@ def cdc_target(source: Column) -> Column:
     )
 
 
+def record_target() -> Column:
+    """``cdc_target`` of a raw record, parsed from its ``value``'s
+    source struct alone, so it does not depend on the record's row
+    shape; NULL for a record that does not parse."""
+    source = T.StructType([T.StructField("source", SOURCE_SCHEMA, True)])
+    return cdc_target(F.from_json(F.col("value"), source).getField("source"))
+
+
 # --- JSON-with-schema transport (connect-standalone.properties:2-5) ---
 #
 # With schemas.enable=true every Kafka record is
 # ``{"schema": <connect type>, "payload": <envelope>}`` — a dynamic,
 # self-describing schema PER RECORD. The schema half is what feeds the
-# sink's evolve-schema behavior.
+# sink's evolve-schema behavior (streaming/evolving.py).
 
-_CONNECT_TYPES = {
-    "long": "int64",
-    "bigint": "int64",
-    "int": "int32",
-    "integer": "int32",
-    "double": "float64",
-    "float": "float32",
-    "string": "string",
-    "boolean": "boolean",
-    "binary": "bytes",
+# Spark type -> Kafka Connect schema type; streaming/evolving.py reads
+# it the other way round.
+CONNECT_TYPES = {
+    T.LongType(): "int64",
+    T.IntegerType(): "int32",
+    T.DoubleType(): "float64",
+    T.FloatType(): "float32",
+    T.StringType(): "string",
+    T.BooleanType(): "boolean",
+    T.BinaryType(): "bytes",
 }
 
 
@@ -149,7 +189,7 @@ def connect_schema_json(row: T.StructType, name: str = "Value") -> str:
 
     fields = [
         {
-            "type": _CONNECT_TYPES.get(f.dataType.simpleString(), "string"),
+            "type": CONNECT_TYPES.get(f.dataType, "string"),
             "optional": f.nullable,
             "field": f.name,
         }
@@ -175,23 +215,4 @@ def encode_envelope_with_schema(df: DataFrame, row: T.StructType = ROW_SCHEMA,
             F.lit('{"schema":'), F.lit(schema_lit),
             F.lit(',"payload":'), F.col("value"), F.lit("}"),
         ).alias("value"),
-    )
-
-
-def decode_envelope_with_schema(df: DataFrame,
-                                schema: T.StructType = ENVELOPE_SCHEMA,
-                                value_col: str = "value") -> DataFrame:
-    """Decode JSON-with-schema records: payload through the typed
-    ``from_json`` path, the per-record schema string surfaced as
-    ``_record_schema`` (input to schema-drift detection — compare
-    against the table schema to trigger cdc/evolve.py)."""
-    env = F.from_json(F.get_json_object(F.col(value_col), "$.payload"), schema)
-    return df.select(
-        env.getField("after").alias("after"),
-        env.getField("before").alias("before"),
-        env.getField("op").alias("op"),
-        env.getField("ts_ms").alias("ts_ms"),
-        env.getField("source").getField("lsn").alias("off"),
-        cdc_target(env.getField("source")).alias("_cdc_target"),
-        F.get_json_object(F.col(value_col), "$.schema").alias("_record_schema"),
     )

@@ -3,10 +3,13 @@
 The reference auto-evolves sink tables when new source columns appear
 (`connect-iceberg-sink.json:16` + the schema-history topic,
 `connect-sqlserver-source.json:16-17`). Spark-native equivalent:
-diff the incoming batch schema against the table schema, align both
-sides (new columns added as NULLs), and rely on parquet
-``mergeSchema`` on read. With an Iceberg catalog this would be
-``ALTER TABLE ... ADD COLUMNS`` instead — same driver-side diff.
+diff the incoming batch schema against the table schema
+(``schema_diff``), append the new columns nullable (``evolved_schema``)
+and project each side onto the result (``align_to``, new columns as
+typed NULLs). A ``BucketedMirror`` records the evolved schema in its
+sidecar (``add_columns``), which every scan of its files reads with.
+With an Iceberg catalog this would be ``ALTER TABLE ... ADD COLUMNS``
+instead — same driver-side diff.
 """
 
 from __future__ import annotations
@@ -34,7 +37,10 @@ def align_to(df: DataFrame, schema: T.StructType) -> DataFrame:
 
 
 def evolved_schema(table: T.StructType, batch: T.StructType) -> T.StructType:
-    return T.StructType(list(table.fields) + schema_diff(table, batch))
+    """``table`` with the fields of ``batch`` it lacks appended,
+    nullable — Iceberg ADD COLUMNS: rows written before read NULL."""
+    return T.StructType(list(table.fields) + [
+        T.StructField(f.name, f.dataType, True) for f in schema_diff(table, batch)])
 
 
 def evolve_and_union(table_df: DataFrame, batch_df: DataFrame) -> DataFrame:

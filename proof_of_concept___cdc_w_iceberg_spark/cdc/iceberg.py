@@ -83,12 +83,9 @@ def merge_into(spark: SparkSession, target_table: str, source: DataFrame,
     target = spark.table(target_table)
     merged = apply_changes(target, source, keys, op_col=op_col,
                            order_cols=list(order_cols))
-    # Stage through a temp view to break the self-dependency before
+    # Stage through a table to break the self-dependency before
     # overwriting the source-of-truth table.
-    merged.cache()
-    merged.count()
     merged.write.mode("overwrite").saveAsTable(f"{target_table}__staged")
     spark.table(f"{target_table}__staged").write.mode("overwrite") \
         .saveAsTable(target_table)
     spark.sql(f"DROP TABLE IF EXISTS {target_table}__staged")
-    merged.unpersist()

@@ -18,8 +18,9 @@ from ..operators._util import overlap
 from ..registry import query
 from ..sources.cdc_fixtures import CHANGELOG_SQL, MIRROR_SQL, changelog, mirror_cte
 from ..sources.tables import load
-from .apply import apply_changes, compact_latest, evolve_schema, merge_upsert, mirror_diff
-from .envelope import decode_envelope, encode_envelope
+from .apply import apply_changes, compact_latest, merge_upsert, mirror_diff
+from .envelope import ENV_COL, decode_envelope, encode_envelope, parse_envelopes
+from .evolve import align_to, evolved_schema
 
 
 @query("q_source_changelog", oracle=CHANGELOG_SQL)
@@ -41,19 +42,13 @@ def q_source_changelog(spark, sf_dir):
 )
 def q_envelope_decode(spark, sf_dir):
     """Encode the changelog into Debezium JSON envelopes, then decode
-    with ``from_json`` and flatten (`connect-standalone.properties:2-5`
+    and flatten them (``decode_envelope``: ``parse_envelopes`` +
+    ``envelope_changes``; `connect-standalone.properties:2-5`
     + DebeziumTransform `connect-iceberg-sink.json:10-12`). The oracle
     checks the round-trip is lossless."""
     enveloped = encode_envelope(changelog(spark, sf_dir))
-    decoded = decode_envelope(enveloped)
-    return decoded.select(
-        F.coalesce(F.col("after.k"), F.col("before.k")).alias("k"),
-        F.col("after.name").alias("name"),
-        "op",
-        "ts_ms",
-        "off",
-        "_cdc_target",
-    )
+    return decode_envelope(enveloped).select(
+        "k", "name", "op", "ts_ms", "off", "_cdc_target")
 
 
 @query(
@@ -586,15 +581,13 @@ def q_cdc_dead_letter(spark, sf_dir):
     value truncated mid-string) so the oracle can replicate the
     routing decision without parsing JSON.
 
-    The decode is ``from_json`` in PERMISSIVE mode — a malformed
+    The decode is ``parse_envelopes`` (PERMISSIVE ``from_json``) — a malformed
     record yields an envelope whose mandatory ``op`` field is null
     (Debezium always sets op), which IS the routing predicate: no
     Python, no exception path, no second parse. Scale:
     narrow per-row codec + one map-side-combinable count; the DLQ in
     production is a partitioned append sink fed by the same
     ``when(parsed.isNull())`` split."""
-    from .envelope import ENVELOPE_SCHEMA
-
     enveloped = encode_envelope(changelog(spark, sf_dir))
     # Truncate the JSON payload for planted keys -> guaranteed parse
     # failure that still carries bytes to preserve in the DLQ.
@@ -604,15 +597,13 @@ def q_cdc_dead_letter(spark, sf_dir):
             F.col("key") % DLQ_MOD == 0, F.substring("value", 1, 10)
         ).otherwise(F.col("value")).alias("value"),
     )
-    parsed = corrupted.withColumn(
-        "env", F.from_json("value", ENVELOPE_SCHEMA)
-    )
+    op = F.col(ENV_COL).getField("op")
     return (
-        parsed.select(
-            F.when(F.col("env.op").isNull(), F.lit("dlq"))
+        parse_envelopes(corrupted).select(
+            F.when(op.isNull(), F.lit("dlq"))
             .otherwise(F.lit("cdc.commerce_account"))
             .alias("route"),
-            F.col("env.op").alias("op"),
+            op.alias("op"),
         )
         .groupBy("route", "op")
         .agg(F.count("*").cast("long").alias("n"))
@@ -734,9 +725,9 @@ def q_cdc_apply_evolve(spark, sf_dir):
     the mirror schema (add-column-at-end, existing rows read NULL) and
     keep upserting — Iceberg sink behavior for evolving Debezium
     payloads (`connect-iceberg-sink.json:15-16`; Iceberg spec schema
-    evolution). Fallback = evolve_schema (typed-NULL widen, zero data
-    rewrite — a metadata-only operation on a real Iceberg table) + the
-    standard latest-wins apply.
+    evolution). Fallback = ``align_to`` the ``evolved_schema`` (typed-NULL
+    widen, zero data rewrite — a metadata-only operation on a real
+    Iceberg table) + the standard latest-wins apply.
 
     Scale: identical to q_cdc_apply — the widen adds a NULL literal to
     the projection, no extra shuffle, no rewrite of unmatched rows."""
@@ -772,7 +763,8 @@ def q_cdc_apply_evolve(spark, sf_dir):
         F.lit(None), F.lit(None), F.lit(None),
     )
     changes = upd.unionByName(ins).unionByName(dele)
-    evolved = evolve_schema(snapshot, changes.drop("op", "ts_ms", "off"))
+    evolved = align_to(snapshot, evolved_schema(
+        snapshot.schema, changes.drop("op", "ts_ms", "off").schema))
     return apply_changes(evolved, changes, keys=["k"])
 
 

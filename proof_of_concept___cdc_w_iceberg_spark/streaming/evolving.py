@@ -1,15 +1,22 @@
-"""Schema-evolving streaming CDC apply — the reference sink's
-auto-create + evolve loop (`connect-iceberg-sink.json:15-16`) driven
-by the per-record schemas of the JSON-with-schema transport (the
-schema-history-topic semantics, `connect-sqlserver-source.json:16-17`).
+"""Schema-evolving CDC apply — the reference sink's evolve loop
+(`connect-iceberg-sink.json:15-16`) driven by the per-record schemas of
+the JSON-with-schema transport (the schema-history-topic semantics,
+`connect-sqlserver-source.json:16-17`), committed to a
+``BucketedMirror``.
 
-Flow per micro-batch:
-1. read the distinct ``schema`` halves of the batch's records,
-2. build the union row schema (drift = fields not yet on the mirror),
-3. decode payloads against the batch schema (``from_json``),
-4. align mirror and batch to the evolved schema (new columns surface
-   as typed NULLs on old rows — what Iceberg ADD COLUMNS does),
-5. latest-wins compaction + merge as usual.
+Flow per batch:
+1. collect the distinct ``schema`` halves of the batch's records and
+   union them into one row schema (``union_row_schema``),
+2. widen the mirror: the columns it lacks are appended, nullable, to
+   its sidecar schema (``BucketedMirror.add_columns``, what Iceberg ADD
+   COLUMNS does). Metadata only: base and delta files written before
+   read NULL for them,
+3. parse the ``payload`` halves with the batch's row schema and flatten
+   them (``parse_envelopes`` + ``envelope_changes``, cdc/envelope.py),
+4. align the changes with the mirror schema (``align_to``: a column
+   the batch's records lack writes NULL) and commit them with
+   ``mirror.apply``: one O(batch + delta) delta commit, folded when due
+   like any other.
 
 No pipeline restart on DDL — exactly the reference's behavior.
 """
@@ -18,23 +25,15 @@ from __future__ import annotations
 
 import json
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from ..cdc.apply import apply_changes
-from ..cdc.envelope import cdc_target, envelope_schema
+from ..cdc.bucketed import BucketedMirror
+from ..cdc.envelope import CONNECT_TYPES, envelope_changes, parse_envelopes
 from ..cdc.evolve import align_to, evolved_schema
 
-_SPARK_TYPES = {
-    "int64": T.LongType(),
-    "int32": T.IntegerType(),
-    "float64": T.DoubleType(),
-    "float32": T.FloatType(),
-    "string": T.StringType(),
-    "boolean": T.BooleanType(),
-    "bytes": T.BinaryType(),
-}
+_SPARK_TYPES = {c: t for t, c in CONNECT_TYPES.items()}
 
 
 def row_schema_from_connect(schema_json: str) -> T.StructType:
@@ -57,70 +56,22 @@ def union_row_schema(schema_jsons: list[str]) -> T.StructType:
     return out
 
 
-def decode_dynamic(batch: DataFrame, value_col: str = "value") -> tuple[DataFrame, T.StructType]:
-    """Decode a JSON-with-schema batch using the schemas carried BY the
-    records (no pre-declared row schema). Returns (flat changes, row
-    schema seen in this batch).
+def apply_evolving(mirror: BucketedMirror, batch: DataFrame) -> list:
+    """Commit one JSON-with-schema batch to ``mirror``, widening it
+    first (module docstring: the flow). Returns ``mirror.apply``'s
+    touched partitions; ``[]`` for an empty batch. With Iceberg this is
+    ALTER TABLE ADD COLUMNS + MERGE INTO (cdc/iceberg.py).
 
     The distinct-schema collect is tiny (one row per DDL version seen
     in the batch — in steady state, one)."""
-    schema_strs = [
-        r[0]
-        for r in batch.select(
-            F.get_json_object(F.col(value_col), "$.schema")
-        ).distinct().collect()
-    ]
-    row = union_row_schema(schema_strs)
-    env = F.from_json(F.get_json_object(F.col(value_col), "$.payload"),
-                      envelope_schema(row))
-    key_col = row.fields[0].name  # id-column leads the sink schema
-    flat = batch.select(
-        F.coalesce(
-            env.getField("after").getField(key_col),
-            env.getField("before").getField(key_col),
-        ).alias(key_col),
-        *[
-            env.getField("after").getField(f.name).alias(f.name)
-            for f in row.fields[1:]
-        ],
-        env.getField("op").alias("op"),
-        env.getField("ts_ms").alias("ts_ms"),
-        env.getField("source").getField("lsn").alias("off"),
-        cdc_target(env.getField("source")).alias("_cdc_target"),
-    )
-    return flat, row
-
-
-def apply_evolving(spark: SparkSession, mirror_path: str, batch: DataFrame,
-                   keys: list[str]) -> None:
-    """One evolving micro-batch apply onto a parquet mirror: schema
-    drift widens the mirror (typed NULLs backfill), then the normal
-    compact+merge runs. With Iceberg this is ALTER TABLE ADD COLUMNS +
-    MERGE INTO (cdc/iceberg.py)."""
-    changes, _row = decode_dynamic(batch)
-    changes = changes.drop("_cdc_target").dropDuplicates([*keys, "off"])
-    target = spark.read.parquet(mirror_path)
-    evolved = evolved_schema(
-        target.schema,
-        changes.drop("op", "ts_ms", "off").schema,
-    )
-    target = align_to(target, evolved)
-    # Changes align to the evolved schema too: a column absent from the
-    # batch's (newer) source schema writes NULL, the reference's
-    # dropped-column behavior.
-    changes = align_to(
-        changes,
-        T.StructType(
-            list(evolved.fields)
-            + [T.StructField("op", T.StringType()),
-               T.StructField("ts_ms", T.LongType()),
-               T.StructField("off", T.LongType())]
-        ),
-    )
-    merged = apply_changes(target, changes, keys=keys)
-    staged = mirror_path + "_staged"
-    merged.write.mode("overwrite").parquet(staged)
-    spark.read.parquet(staged).write.mode("overwrite").parquet(mirror_path)
-    from ..cdc.maintenance import cleanup_staging
-
-    cleanup_staging(mirror_path)
+    schemas = [r[0] for r in batch.select(
+        F.get_json_object(F.col("value"), "$.schema")).distinct().collect()]
+    if not schemas:
+        return []
+    row = union_row_schema(schemas)
+    schema = mirror.add_columns(row)
+    payloads = batch.withColumn(
+        "value", F.get_json_object(F.col("value"), "$.payload"))
+    changes = envelope_changes(parse_envelopes(payloads, row), mirror.keys, row)
+    return mirror.apply(align_to(changes, T.StructType(
+        [*schema.fields, *(changes.schema[c] for c in ("op", "ts_ms", "off"))])))

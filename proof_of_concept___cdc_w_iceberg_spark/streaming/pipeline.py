@@ -8,7 +8,8 @@ Spark mapping:
 - transport: ``readStream`` file source over envelope JSON (hermetic in
   CI; swap ``format("kafka")`` + ``subscribePattern`` for the real
   broker — the downstream plan is identical),
-- decode: ``from_json`` envelope schema (cdc/envelope.py),
+- decode: ``parse_envelopes`` + ``envelope_changes`` (cdc/envelope.py),
+  the one Debezium decoder,
 - apply: ``foreachBatch`` → a merge-on-read ``BucketedMirror`` commit
   (cdc/bucketed.py): the batch compacted latest-wins into the mirror's
   pending delta, folded into the touched buckets once the delta
@@ -24,33 +25,21 @@ import json
 import os
 import tempfile
 
-from pyspark.sql import Column, DataFrame, Observation, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from ..cdc.bucketed import BucketedMirror
-from ..cdc.envelope import ROW_SCHEMA, envelope_schema
+from ..cdc.envelope import (
+    ENV_COL,
+    ROW_SCHEMA,
+    envelope_changes,
+    is_malformed,
+    parse_envelopes,
+)
 
-# The parsed envelope struct column ``parse_envelopes`` adds.
-ENV_COL = "__env"
 # Dead-letter rows: the raw stream record and the micro-batch it came in.
 DLQ_SCHEMA = "key LONG, value STRING, batch_id LONG"
-
-
-def parse_envelopes(batch_df: DataFrame,
-                    row: T.StructType = ROW_SCHEMA) -> DataFrame:
-    """Raw ``(key, value)`` stream rows plus the envelope parsed ONCE
-    into ``ENV_COL`` (PERMISSIVE ``from_json``: a malformed record
-    parses to a NULL ``op``)."""
-    return batch_df.withColumn(
-        ENV_COL, F.from_json(F.col("value"), envelope_schema(row)))
-
-
-def is_malformed(row: T.StructType = ROW_SCHEMA) -> Column:
-    """True for a raw stream record whose envelope, parsed with ``row``
-    as ``parse_envelopes`` parses it, has a NULL ``op``."""
-    return F.from_json(F.col("value"), envelope_schema(row)).getField(
-        "op").isNull()
 
 
 def commit_description(spark: SparkSession, batch_id: int, commit) -> None:
@@ -64,26 +53,6 @@ def commit_description(spark: SparkSession, batch_id: int, commit) -> None:
         commit()
     finally:
         sc.setJobDescription(prev)
-
-
-def envelope_changes(parsed: DataFrame, keys: list[str],
-                     row: T.StructType = ROW_SCHEMA) -> DataFrame:
-    """Flat change rows from ``parse_envelopes`` output: the keys from
-    the after-image (the before-image for deletes), the other row
-    columns from the after-image, then ``op``, ``ts_ms`` and the source
-    LSN as ``off`` — the sink's DebeziumTransform flatten
-    (`connect-iceberg-sink.json:10-12`)."""
-    env = F.col(ENV_COL)
-    return parsed.select(
-        *[F.coalesce(env.getField("after").getField(k),
-                     env.getField("before").getField(k)).alias(k)
-          for k in keys],
-        *[env.getField("after").getField(f.name).alias(f.name)
-          for f in row.fields if f.name not in keys],
-        env.getField("op").alias("op"),
-        env.getField("ts_ms").alias("ts_ms"),
-        env.getField("source").getField("lsn").alias("off"),
-    )
 
 
 class CdcStreamSink:

@@ -6,7 +6,8 @@ each record's ``_cdc.target`` — computed ``cdc.{schema}_{table}`` —
 routes it to its own mirror table (`connect-iceberg-sink.json:12-14`),
 auto-creating on first sight (`:15`).
 
-Spark shape: a single ``foreachBatch`` tags the batch with its target,
+Spark shape: a single ``foreachBatch`` tags each record with its
+target (``record_target``, i.e. ``cdc_target`` of its source struct),
 collects the distinct targets and commits each declared target's slice
 (one filter over the persisted batch; targets are few) through the
 single-table commit step (``CdcStreamSink._commit_target``). Every
@@ -22,8 +23,8 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from ..cdc.bucketed import BucketedMirror
-from ..cdc.envelope import ROW_SCHEMA
-from .pipeline import CdcStreamSink, is_malformed
+from ..cdc.envelope import ROW_SCHEMA, is_malformed, record_target
+from .pipeline import CdcStreamSink
 
 TARGET_COL = "__target"
 
@@ -73,16 +74,10 @@ class RoutedStreamingCdcPipeline(CdcStreamSink):
         return self.mirrors[target]
 
     def _commit(self, batch_df: DataFrame, batch_id: int) -> None:
-        # Route on the raw JSON (schema-independent), THEN decode each
-        # target's slice with its own typed envelope schema — targets
-        # may have entirely different row shapes.
-        target_col = F.concat(
-            F.lit("cdc."),
-            F.get_json_object(F.col("value"), "$.source.schema"),
-            F.lit("_"),
-            F.get_json_object(F.col("value"), "$.source.table"),
-        )
-        tagged = batch_df.withColumn(TARGET_COL, target_col).persist()
+        # Route on the records' source struct (schema-independent),
+        # THEN decode each target's slice with its own typed envelope
+        # schema — targets may have entirely different row shapes.
+        tagged = batch_df.withColumn(TARGET_COL, record_target()).persist()
         try:
             targets = [r[0] for r in
                        tagged.select(TARGET_COL).distinct().collect()]

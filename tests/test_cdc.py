@@ -77,14 +77,7 @@ def test_delete_then_reinsert_wins(spark):
 def test_envelope_roundtrip(spark, sf_dir):
     ch = changelog(spark, sf_dir)
     decoded = decode_envelope(encode_envelope(ch))
-    back = decoded.select(
-        F.coalesce(F.col("after.k"), F.col("before.k")).alias("k"),
-        F.col("after.name").alias("name"),
-        F.col("after.bal").alias("bal"),
-        "op",
-        "ts_ms",
-        "off",
-    )
+    back = decoded.select("k", "name", "bal", "op", "ts_ms", "off")
     assert mirror_diff(back, ch).count() == 0
 
 
@@ -108,26 +101,21 @@ def test_mirror_verify_catches_drift(spark):
 
 def test_envelope_with_inline_schema_roundtrip(spark, sf_dir):
     """JSON-with-schema transport (connect-standalone.properties:2-5):
-    every record carries a valid Connect schema; decode recovers the
-    payload AND surfaces the per-record schema for drift detection."""
+    every record carries a valid Connect schema; its ``payload`` half
+    decodes through the one envelope decoder, and its ``schema`` half
+    is there for drift detection."""
     from proof_of_concept___cdc_w_iceberg_spark.cdc.envelope import (
-        decode_envelope_with_schema,
         encode_envelope_with_schema,
     )
 
     ch = changelog(spark, sf_dir)
     wired = encode_envelope_with_schema(ch)
-    decoded = decode_envelope_with_schema(wired)
-    back = decoded.select(
-        F.coalesce(F.col("after.k"), F.col("before.k")).alias("k"),
-        F.col("after.name").alias("name"),
-        F.col("after.bal").alias("bal"),
-        "op",
-        "ts_ms",
-        "off",
-    )
+    decoded = decode_envelope(
+        wired.select(F.get_json_object("value", "$.payload").alias("value")))
+    back = decoded.select("k", "name", "bal", "op", "ts_ms", "off")
     assert mirror_diff(back, ch).count() == 0
-    schemas = {r["_record_schema"] for r in decoded.select("_record_schema").distinct().collect()}
+    schemas = {r[0] for r in wired.select(
+        F.get_json_object("value", "$.schema")).distinct().collect()}
     assert len(schemas) == 1
     parsed = json.loads(schemas.pop())
     assert parsed["type"] == "struct"
@@ -157,37 +145,50 @@ def test_strict_decode_fails_fast_on_malformed(spark, sf_dir):
     assert decode_envelope(good, strict=True).count() == 10
 
 
-def test_compaction_and_staging_cleanup(spark, sf_dir):
-    """Table maintenance: many tiny files -> one size-targeted file
-    with identical contents; stale staged swap dirs removed."""
+def test_compaction_and_staging_cleanup(spark, tmp_path):
+    """Table maintenance: ``BucketedMirror.compact()`` rewrites a
+    fragmented mirror to one file per bucket, content unchanged, and
+    leaves no staged dir; ``cleanup_staging`` removes exactly the stale
+    staged dirs ``staged_path`` names for a mirror, and keeps a sibling
+    mirror whose name extends it, and that mirror's staged dirs."""
     import os
-    import tempfile
 
+    from proof_of_concept___cdc_w_iceberg_spark.cdc.bucketed import (
+        BucketedMirror,
+        staged_path,
+    )
     from proof_of_concept___cdc_w_iceberg_spark.cdc.maintenance import (
         cleanup_staging,
-        compact_small_files,
-        dir_stats,
     )
-    from proof_of_concept___cdc_w_iceberg_spark.sources.tables import load
 
-    work = tempfile.mkdtemp(prefix="maint_")
-    mirror = os.path.join(work, "mirror")
-    c = load(spark, sf_dir, "customer").select("c_custkey", "c_name", "c_acctbal")
-    c.repartition(20).write.mode("overwrite").parquet(mirror)  # 20 tiny files
-    before = spark.read.parquet(mirror).collect()
-    _, n_before = dir_stats(mirror)
-    assert n_before == 20
+    rows = [(k, f"n{k}", float(k)) for k in range(1, 9)]
+    snap = spark.createDataFrame(rows, "k long, name string, bal double")
+    mirror, sibling = (BucketedMirror(spark, str(tmp_path / name), keys=["k"],
+                                      n_buckets=2)
+                       for name in ("cdc_commerce_account",
+                                    "cdc_commerce_account_balance"))
+    mirror.init(snap, writers=4)
+    sibling.init(snap)
+    assert max(len(f) for f in mirror.partition_files().values()) > 1
+    mirror.compact()
+    assert all(len(f) == 1 for f in mirror.partition_files().values())
+    assert sorted(map(tuple, mirror.read().collect())) == rows
+    assert sorted(os.listdir(tmp_path)) == [
+        "cdc_commerce_account", "cdc_commerce_account_balance"]
 
-    n_after = compact_small_files(spark, mirror)
-    assert n_after == 1  # tiny table -> single target-size file
-    after = spark.read.parquet(mirror).collect()
-    assert sorted(map(tuple, before)) == sorted(map(tuple, after))
-
-    # staged swap dirs from pipeline batches get expired
-    for d in ("mirror_b0", "mirror_b1", "mirror_staged"):
-        os.makedirs(os.path.join(work, d), exist_ok=True)
-    assert cleanup_staging(mirror) == 3
-    assert os.path.isdir(mirror)
+    # staged swap dirs an interrupted commit leaves behind get expired
+    stale = [staged_path(mirror.path, "b0", "delta"),
+             staged_path(mirror.path, "b1", "merge"),
+             staged_path(mirror.path, "compact", "merge"),
+             staged_path(mirror.path, "compact", "rewrite"),
+             staged_path(mirror.path, "ts_5", "delta")]
+    kept = staged_path(sibling.path, "b0", "delta")
+    for d in (*stale, kept):
+        os.makedirs(d)
+    assert cleanup_staging(mirror.path) == len(stale)
+    assert sorted(os.listdir(tmp_path)) == sorted(
+        os.path.basename(p) for p in (mirror.path, sibling.path, kept))
+    assert sorted(map(tuple, sibling.read().collect())) == rows
 
 
 def test_diff_apply_round_trip(spark, sf_dir):

@@ -174,60 +174,105 @@ def test_progress_listener_heartbeat(spark, sf_dir):
     assert "terminated" in beats
 
 
-def test_evolving_apply_widens_mirror_schema(spark):
+def _wire(fields, before, after, op, ts, lsn):
+    """One JSON-with-schema record: a Connect schema of ``fields`` and
+    a Debezium envelope payload."""
+    import json as _json
+
+    schema = {"type": "struct", "optional": False, "name": "commerce.account.Value",
+              "fields": fields}
+    payload = {"before": before, "after": after,
+               "source": {"db": "d", "schema": "commerce", "table": "account",
+                          "lsn": lsn, "ts_ms": ts, "snapshot": "false"},
+               "op": op, "ts_ms": ts}
+    return _json.dumps({"schema": schema, "payload": payload})
+
+
+def test_evolving_apply_widens_mirror_schema(spark, tmp_path):
     """The reference sink's auto-evolve loop: a batch arriving with a
     NEW column (per-record schema) widens the mirror without restart;
-    old rows surface NULL, changed rows carry the value."""
-    import json as _json
-    import tempfile as _tf
-
+    old rows surface NULL, changed rows carry the value. The widen is
+    metadata only: each commit writes just the mirror's delta (the
+    base, padded past 16x the delta so no commit folds, keeps its
+    files), and a later fold merges the widened delta into base files
+    written before the column existed."""
+    from proof_of_concept___cdc_w_iceberg_spark.cdc.bucketed import BucketedMirror
     from proof_of_concept___cdc_w_iceberg_spark.streaming.evolving import (
         apply_evolving,
     )
 
-    mirror = _tf.mkdtemp(prefix="evolve_mirror_")
-    spark.createDataFrame(
-        [(1, "a", 10.0), (2, "b", 20.0), (3, "c", 30.0)],
+    m = BucketedMirror(spark, str(tmp_path / "mirror"), keys=["k"], n_buckets=2)
+    pad = [(k, "pad", 0.0) for k in range(1000, 1100)]
+    m.init(spark.createDataFrame(
+        [(1, "a", 10.0), (2, "b", 20.0), (3, "c", 30.0), *pad],
         "k long, name string, bal double",
-    ).write.mode("overwrite").parquet(mirror)
-
-    def wire(fields, after, op, ts, lsn):
-        schema = {"type": "struct", "optional": False, "name": "commerce.account.Value",
-                  "fields": fields}
-        payload = {"before": None, "after": after,
-                   "source": {"db": "d", "schema": "commerce", "table": "account",
-                              "lsn": lsn, "ts_ms": ts, "snapshot": "false"},
-                   "op": op, "ts_ms": ts}
-        return _json.dumps({"schema": schema, "payload": payload})
+    ))
 
     v1 = [{"type": "int64", "optional": True, "field": "k"},
           {"type": "string", "optional": True, "field": "name"},
           {"type": "float64", "optional": True, "field": "bal"}]
     v2 = v1 + [{"type": "string", "optional": True, "field": "status"}]
 
+    base_files = m.partition_files()
     b1 = spark.createDataFrame(
-        [(wire(v1, {"k": 1, "name": "a2", "bal": 11.0}, "u", 2000, 1),)], "value string"
+        [(_wire(v1, None, {"k": 1, "name": "a2", "bal": 11.0}, "u", 2000, 1),)],
+        "value string",
     )
-    apply_evolving(spark, mirror, b1, keys=["k"])
+    apply_evolving(m, b1)
+    assert m.partition_files() == base_files
 
     b2 = spark.createDataFrame(
         [
-            (wire(v2, {"k": 10, "name": "j", "bal": 99.0, "status": "new"}, "c", 3000, 2),),
-            (wire(v2, {"k": 2, "name": "b2", "bal": 21.0, "status": "upd"}, "u", 3000, 3),),
-            (wire(v2, {"k": 3, "name": None, "bal": None, "status": None}, "d", 3000, 4),),
+            (_wire(v2, None, {"k": 10, "name": "j", "bal": 99.0, "status": "new"},
+                   "c", 3000, 2),),
+            (_wire(v2, None, {"k": 2, "name": "b2", "bal": 21.0, "status": "upd"},
+                   "u", 3000, 3),),
+            (_wire(v2, {"k": 3, "name": "c", "bal": 30.0, "status": None}, None,
+                   "d", 3000, 4),),
         ],
         "value string",
     )
-    apply_evolving(spark, mirror, b2, keys=["k"])
+    apply_evolving(m, b2)
+    assert m.partition_files() == base_files
 
-    final = spark.read.parquet(mirror)
-    assert set(final.columns) == {"k", "name", "bal", "status"}
-    rows = {r["k"]: (r["name"], r["bal"], r["status"]) for r in final.collect()}
-    assert rows == {
-        1: ("a2", 11.0, None),     # updated pre-evolution, NULL backfill
-        2: ("b2", 21.0, "upd"),    # updated with the new column
-        10: ("j", 99.0, "new"),    # inserted with the new column
-    }                               # 3 deleted
+    for step in ("delta", "fold"):
+        if step == "fold":
+            m.compact()
+            assert m.delta_rows == 0
+        final = m.read()
+        assert set(final.columns) == {"k", "name", "bal", "status"}
+        got = final.collect()
+        # base rows written before the column existed read it as NULL
+        assert {r["status"] for r in got if r["k"] >= 1000} == {None}
+        rows = {r["k"]: (r["name"], r["bal"], r["status"])
+                for r in got if r["k"] < 1000}
+        assert rows == {
+            1: ("a2", 11.0, None),     # updated pre-evolution, NULL backfill
+            2: ("b2", 21.0, "upd"),    # updated with the new column
+            10: ("j", 99.0, "new"),    # inserted with the new column
+        }, step                         # 3 deleted
+
+
+def test_evolving_apply_deletes_on_composite_key(spark, tmp_path):
+    """A delete envelope carries its key only in the before-image: every
+    part of a two-column key, neither listed first in the record
+    schema, comes from there, so the delete removes its row."""
+    from proof_of_concept___cdc_w_iceberg_spark.cdc.bucketed import BucketedMirror
+    from proof_of_concept___cdc_w_iceberg_spark.streaming.evolving import (
+        apply_evolving,
+    )
+
+    m = BucketedMirror(spark, str(tmp_path / "mirror"), keys=["org", "k"],
+                       n_buckets=1)
+    m.init(spark.createDataFrame(
+        [("a", 1, 1), ("b", 1, 2), ("c", 2, 2)], "name string, org long, k long"))
+    fields = [{"type": "string", "optional": True, "field": "name"},
+              {"type": "int64", "optional": True, "field": "org"},
+              {"type": "int64", "optional": True, "field": "k"}]
+    apply_evolving(m, spark.createDataFrame(
+        [(_wire(fields, {"name": "b", "org": 1, "k": 2}, None, "d", 2000, 1),)],
+        "value string"))
+    assert sorted(map(tuple, m.read().collect())) == [("a", 1, 1), ("c", 2, 2)]
 
 
 def test_routed_pipeline_fans_out_to_two_mirrors(spark, sf_dir):
