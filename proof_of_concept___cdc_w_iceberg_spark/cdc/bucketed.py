@@ -104,10 +104,11 @@ STAGED_KINDS = ("delta", "merge", "rewrite")
 
 def staged_path(path: str, tag: str, kind: str) -> str:
     """The swap dir a ``kind`` write of the mirror at ``path`` stages
-    in: ``<mirror>_<tag>_<kind>_staged``. Underscores in ``tag`` become
-    hyphens, so the name parses back to exactly one mirror
-    (``is_staged_of``): cleaning ``<m>`` never takes ``<m>_x``'s dirs."""
-    return f"{path}_{tag.replace('_', '-')}_{kind}_staged"
+    in: ``<mirror>_<tag>_<kind>_staged``. Tags hold no underscore
+    (``b<id>``, ``ts<ts>``, ``batch``, ``compact``), so the name parses
+    back to exactly one mirror (``is_staged_of``): cleaning ``<m>``
+    never takes ``<m>_x``'s dirs."""
+    return f"{path}_{tag}_{kind}_staged"
 
 
 def is_staged_of(path: str, name: str) -> bool:

@@ -124,17 +124,15 @@ def envelope_changes(parsed: DataFrame, keys: list[str],
     )
 
 
-def decode_envelope(df: DataFrame, keys: list[str] = ("k",),
-                    row: T.StructType = ROW_SCHEMA,
-                    strict: bool = False) -> DataFrame:
-    """Batch decode: ``envelope_changes`` over ``parse_envelopes``
-    (``keys`` default to the canonical fixture row's id-column).
+def decode_envelope(df: DataFrame, strict: bool = False) -> DataFrame:
+    """Batch decode of canonical fixture envelopes (``ROW_SCHEMA``, key
+    ``k``): ``envelope_changes`` over ``parse_envelopes``.
 
     ``strict=True`` reproduces ``errors.tolerance: none``: any record
     that doesn't parse (op comes back NULL) aborts the batch instead of
     flowing through as nulls. One extra pass over the batch — use
     inside foreachBatch where the batch is already small/cached."""
-    parsed = parse_envelopes(df, row)
+    parsed = parse_envelopes(df)
     if strict:
         bad = (parsed.filter(F.col(ENV_COL).getField("op").isNull())
                .select("value").limit(1).collect())
@@ -144,7 +142,7 @@ def decode_envelope(df: DataFrame, keys: list[str] = ("k",),
                 f"unparseable change event (errors.tolerance=none): "
                 f"{raw[:200] if raw is not None else None!r}"
             )
-    return envelope_changes(parsed, list(keys), row)
+    return envelope_changes(parsed, ["k"])
 
 
 def cdc_target(source: Column) -> Column:

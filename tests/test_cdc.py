@@ -181,7 +181,7 @@ def test_compaction_and_staging_cleanup(spark, tmp_path):
              staged_path(mirror.path, "b1", "merge"),
              staged_path(mirror.path, "compact", "merge"),
              staged_path(mirror.path, "compact", "rewrite"),
-             staged_path(mirror.path, "ts_5", "delta")]
+             staged_path(mirror.path, "ts5", "delta")]
     kept = staged_path(sibling.path, "b0", "delta")
     for d in (*stale, kept):
         os.makedirs(d)

@@ -256,7 +256,9 @@ def test_evolving_apply_widens_mirror_schema(spark, tmp_path):
 def test_evolving_apply_deletes_on_composite_key(spark, tmp_path):
     """A delete envelope carries its key only in the before-image: every
     part of a two-column key, neither listed first in the record
-    schema, comes from there, so the delete removes its row."""
+    schema, comes from there, so the delete removes its row. Malformed
+    records in the same batch (truncated JSON, an envelope without
+    ``op``) are skipped: neither fails the batch nor deletes a key."""
     from proof_of_concept___cdc_w_iceberg_spark.cdc.bucketed import BucketedMirror
     from proof_of_concept___cdc_w_iceberg_spark.streaming.evolving import (
         apply_evolving,
@@ -270,7 +272,9 @@ def test_evolving_apply_deletes_on_composite_key(spark, tmp_path):
               {"type": "int64", "optional": True, "field": "org"},
               {"type": "int64", "optional": True, "field": "k"}]
     apply_evolving(m, spark.createDataFrame(
-        [(_wire(fields, {"name": "b", "org": 1, "k": 2}, None, "d", 2000, 1),)],
+        [(_wire(fields, {"name": "b", "org": 1, "k": 2}, None, "d", 2000, 1),),
+         (_wire(fields, None, {"name": "a", "org": 1, "k": 1}, None, 2000, 2),),
+         ('{"schema": {"type": "struct", "fie',)],
         "value string"))
     assert sorted(map(tuple, m.read().collect())) == [("a", 1, 1), ("c", 2, 2)]
 
